@@ -26,17 +26,12 @@ from duckdb_pgwire_spark import registry  # noqa: E402
 from duckdb_pgwire_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# r18 (VERDICT r17 item 7): the whole bench is median-of-5 now. The
-# per-entry EXTRA_RUNS list (r6/r9/r10/r17 additions for spike-prone
-# entries) had grown to 12 of 62 entries and only ever tightened in the
-# flattering direction; one uniform estimator removes the asymmetry.
-# Methodology is otherwise unchanged: one warm-up + N timed runs,
-# median per query. Same-harness comparison run vs the median-of-3
-# baseline recorded in OPTIMIZATION_r18.md (totals agree within the
-# ambient band; no entry moves by more than the documented noise).
+# r18 (VERDICT r17 item 7): the whole bench is median-of-5, one
+# uniform estimator for every entry: one warm-up + N timed runs, median
+# per query. Same-harness comparison run vs the median-of-3 baseline
+# recorded in OPTIMIZATION_r18.md (totals agree within the ambient
+# band; no entry moves by more than the documented noise).
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-
-EXTRA_RUNS: dict[str, int] = {}
 
 # Queries whose first (warm-up) execution builds a persisted index that
 # steady-state serving amortizes (k-means centroids, LSH band parquet).
@@ -195,7 +190,7 @@ def _time_once(fn, spark, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
-def _time_query(fn, spark, sf_dir: str, runs: int = 0) -> tuple[float, float]:
+def _time_query(fn, spark, sf_dir: str) -> tuple[float, float]:
     """(median wall of runs, warm-up wall). The warm-up pass pays plan +
     codegen + shuffle-file setup — and, for index-backed queries, the
     one-time index build the steady-state serve path amortizes."""
@@ -203,7 +198,7 @@ def _time_query(fn, spark, sf_dir: str, runs: int = 0) -> tuple[float, float]:
     fn(spark, sf_dir).collect()
     warm = time.perf_counter() - t0
     samples = []
-    for _ in range(runs or RUNS):
+    for _ in range(RUNS):
         t0 = time.perf_counter()
         fn(spark, sf_dir).collect()
         samples.append(time.perf_counter() - t0)
@@ -231,9 +226,7 @@ def main() -> None:
     plan_walls: dict[str, float] = {}
     for name in names:
         try:
-            med, warm = _time_query(
-                defs[name].fn, spark, SF_DIR, EXTRA_RUNS.get(name, 0)
-            )
+            med, warm = _time_query(defs[name].fn, spark, SF_DIR)
             per_query[name] = round(med, 4)
             if name in INDEX_WARMUP:
                 warmups[name] = round(warm, 4)

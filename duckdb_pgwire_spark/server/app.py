@@ -9,22 +9,26 @@ handler factory per session (:184-186)           _handle() task per connection
 fresh Connection per query, shared DB (:42)      shared SparkSession per query
 conn.Prepare(q) → names/types (:52,62-64)        df = spark.sql(q); df.schema
    → RowDescription (:75-88)                        → RowDescription
-p->Execute(); chunk iteration (:97,119)          df.toLocalIterator() batches
+p->Execute(); chunk iteration (:97,119)          _fetch_iter(df) → 1024-row batches
 per-value text encode / NULL (:120-165)          typemap.encode_cell
 errors → SqlException(DataException) (:65-73)    ErrorResponse, SQLSTATE kept
 pg_is_in_recovery / duckdb_pgwire UDFs (:206-12) registered in Spark catalog
 
-Simple-query protocol only (text format), matching the reference's
-"Extended Query" unchecked milestone (README.md:23-29). Spark calls are
-blocking → they run on a thread-pool executor; result rows stream to the
-socket in bounded batches (the analogue of DataChunk-at-a-time, never a
-full collect).
+Simple and extended query protocols; text and binary result formats;
+COPY TO/FROM STDOUT/STDIN. Spark calls are blocking → they run on a
+thread-pool executor. Fetch rule: rows built on the driver (DESCRIBE,
+SHOW, PRAGMA, pg_catalog) are Arrow-backed local relations and run no
+Spark job; a result whose optimized plan bounds its rows at ≤1024 is
+fetched with one collect(); every other result streams partition by
+partition through toLocalIterator(). Either way rows reach the socket
+in bounded batches (the analogue of DataChunk-at-a-time).
 """
 
 from __future__ import annotations
 
 import asyncio
 import concurrent.futures
+import functools
 import itertools
 import logging
 import math
@@ -35,6 +39,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 import re
 
@@ -81,6 +86,44 @@ from .typemap import (
 log = logging.getLogger("duckdb_pgwire_spark.server")
 
 _BATCH_ROWS = 1024  # rows per write burst (the reference's chunks are ~2048)
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_schemas(ddl: str) -> tuple[StructType, "pa.Schema"]:
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
+
+
+def _local_df(session: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A result built on the driver as an Arrow-backed LocalRelation.
+    A list handed to createDataFrame is unpickled by a Python worker in
+    a Spark job on every execution; an Arrow table becomes a
+    LocalRelation whose maxRows is its row count, so _fetch_iter
+    collects it without any job and SQL over it (the pg_catalog views)
+    plans as a local scan."""
+    import pyarrow as pa
+
+    struct, schema = _ddl_schemas(ddl)
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+    return session.createDataFrame(table, struct)
+
+
+def _fetch_iter(df: DataFrame) -> Iterator:
+    """The row iterator of a result: one collect() when the optimized
+    plan bounds its rows at ≤ _BATCH_ROWS (a LocalRelation, a global
+    aggregate, a small LIMIT) — no more than one write burst reaches
+    the driver, and a driver-built relation runs no Spark job — else
+    toLocalIterator(), which streams one partition at a time so driver
+    memory stays bounded at any result size."""
+    bound = df._jdf.queryExecution().optimizedPlan().maxRows()
+    if bound.isDefined() and bound.get() <= _BATCH_ROWS:
+        return iter(df.collect())
+    return iter(df.toLocalIterator())
 
 
 class _WireError(Exception):
@@ -277,9 +320,9 @@ def _substitute_pipeline_fns(session: SparkSession, stmt: str) -> str:
             (n, ", ".join(d.tags or ()), d.oracle is not None)
             for n, d in sorted(defs0.items())
         ]
-        session.createDataFrame(
-            rows, "name string, tags string, has_oracle boolean"
-        ).coalesce(1).createOrReplaceTempView("__pipeline_ops")
+        _local_df(
+            session, rows, "name string, tags string, has_oracle boolean"
+        ).createOrReplaceTempView("__pipeline_ops")
         out0: list[str] = []
         pos0 = 0
         for m in ops_hits:
@@ -1514,9 +1557,7 @@ class PgWireServer:
                 if not self.reference_compat or reference_visible(f.dataType)
             ]
             p.cells = _make_cells(kept, p.result_fmts)
-            p.it = await self._exec(
-                session, tag, lambda: iter(df.toLocalIterator())
-            )
+            p.it = await self._exec(session, tag, _fetch_iter, df)
             p.sent = 0
         limit = maxrows if maxrows > 0 else None
         n = 0
@@ -1568,7 +1609,7 @@ class PgWireServer:
             # profiled path with the unexecuted EXPLAIN EXTENDED plan)
             df = await loop.run_in_executor(
                 self._pool,
-                lambda: session.createDataFrame([], "explain_analyze string"),
+                _local_df, session, [], "explain_analyze string",
             )
         else:
             df = await loop.run_in_executor(
@@ -2548,14 +2589,12 @@ class PgWireServer:
                     ]
                 )
             )
-        # "execute": stream partitions driver-side, write DataRows in
-        # bounded batches — chunk-at-a-time like cpp:119-165, no collect.
+        # "execute": fetch per _fetch_iter, write DataRows in bounded
+        # batches — chunk-at-a-time like cpp:119-165.
         sess = session or self.spark
         nrows = 0
         if fields:
-            it: Iterator = await self._exec(
-                sess, tag, lambda: iter(df.toLocalIterator())
-            )
+            it: Iterator = await self._exec(sess, tag, _fetch_iter, df)
             while True:
                 batch = await self._exec(
                     sess, tag, _next_batch, it, _BATCH_ROWS, cells
@@ -2568,7 +2607,7 @@ class PgWireServer:
                 await writer.drain()
         else:
             # DDL/DML or a fully-dropped schema: run for effect, count rows
-            nrows = await self._exec(sess, tag, df.count)
+            nrows = await self._exec(sess, tag, _command_rows, df)
             if self.reference_compat and df.schema.fields:
                 nrows = 0
         writer.write(P.command_complete(_command_tag(stmt, nrows)))
@@ -2584,8 +2623,9 @@ class PgWireServer:
         session: SparkSession,
         tag: str,
     ) -> None:
-        """COPY ... TO STDOUT: CopyOutResponse + CopyData rows. Streams
-        toLocalIterator batches — bounded memory at any result size."""
+        """COPY ... TO STDOUT: CopyOutResponse + CopyData rows, fetched
+        per _fetch_iter in _BATCH_ROWS chunks — bounded memory at any
+        result size."""
         import csv
         import io
 
@@ -2599,7 +2639,7 @@ class PgWireServer:
         writer.write(P.copy_out_response(ncols))
         await writer.drain()
         is_csv = fmt == "csv"
-        it = await self._exec(session, tag, lambda: iter(df.toLocalIterator()))
+        it = await self._exec(session, tag, _fetch_iter, df)
         nrows = 0
         if is_csv and header:
             buf = io.StringIO()
@@ -2805,12 +2845,18 @@ def _sqlstate(exc: Exception) -> str:
     """Real SQLSTATEs where Spark provides them (error-class framework);
     the reference collapses everything to one DataException class
     (cpp:68-73) — we keep the more useful codes."""
+    msg = str(exc)
     get = getattr(exc, "getSqlState", None)
     if get is not None:
         state = get()
-        if state:
+        # a raise_error() reports P0001 here when collect() raised it and
+        # arrives as wrapped text (no state) under toLocalIterator(); the
+        # message refinements below decide for it, so the SQLSTATE does
+        # not depend on which fetch ran the plan
+        if state and (
+            isinstance(exc, _WireError) or "USER_RAISED_EXCEPTION" not in msg
+        ):
             return state
-    msg = str(exc)
     # Cancel detection anchored on what our CancelRequest path actually
     # produces — the cancelJobsWithTag tag and Spark's job-cancelled
     # phrasing — NOT a bare 'cancelled' substring, which user data (a
@@ -4769,11 +4815,28 @@ def _list_user_tables(session: SparkSession):
     """catalog.listTables() minus internal staging views (RETURNING
     snapshots, UNION-BY-NAME tails, ...) — dunder-prefixed names are
     engine plumbing and must not surface in SHOW TABLES / pg_catalog /
-    information_schema, where DuckDB shows only user objects."""
-    return [
-        t for t in session.catalog.listTables()
-        if not t.name.startswith("__")
-    ]
+    information_schema, where DuckDB shows only user objects.
+
+    Read from the session catalog directly: catalog.listTables() runs
+    a SHOW TABLES plan through a Spark job on every call. Same entries
+    and order; ``description`` is left None (no caller reads it)."""
+    from pyspark.sql.catalog import Table
+
+    cat = session._jsparkSession.sessionState().catalog()
+    idents = cat.listTables(cat.getCurrentDatabase())
+    out = []
+    for i in range(idents.size()):
+        ident = idents.apply(i)
+        name = ident.table()
+        if name.startswith("__"):
+            continue
+        if cat.isTempView(ident):
+            out.append(Table(name, None, [], None, "TEMPORARY", True))
+        else:
+            db = ident.database().get()
+            ttype = cat.getTableMetadata(ident).tableType().name()
+            out.append(Table(name, "spark_catalog", [db], None, ttype, False))
+    return out
 
 
 def _refresh_pg_catalog(session: SparkSession) -> None:
@@ -4812,81 +4875,47 @@ def _refresh_pg_catalog(session: SparkSession) -> None:
                 )
         except Exception:  # noqa: BLE001 — unreadable table: skip columns
             pass
-    mk = session.createDataFrame
-    mk(tables, "schemaname string, tablename string, tableowner string").coalesce(
-        1
-    ).createOrReplaceTempView("pg_tables")
-    mk(views, "schemaname string, viewname string, viewowner string").coalesce(
-        1
-    ).createOrReplaceTempView("pg_views")
-    mk(
-        [(o, n) for n, o in ns_oids.items()], "oid long, nspname string"
-    ).coalesce(1).createOrReplaceTempView("pg_namespace")
-    mk(
-        classes, "oid long, relname string, relnamespace long, relkind string"
-    ).coalesce(1).createOrReplaceTempView("pg_class")
-    mk(
-        attrs,
-        "attrelid long, attname string, atttypid long, attnum int, "
-        "attnotnull boolean",
-    ).coalesce(1).createOrReplaceTempView("pg_attribute")
-    mk(
-        [
-            (16, "bool"), (17, "bytea"), (20, "int8"), (21, "int2"),
-            (23, "int4"), (25, "text"), (114, "json"), (700, "float4"),
-            (701, "float8"), (1043, "varchar"), (1082, "date"),
-            (1083, "time"), (1114, "timestamp"), (1184, "timestamptz"),
-            (1700, "numeric"),
-        ],
-        "oid long, typname string",
-    ).coalesce(1).createOrReplaceTempView("pg_type")
-    mk([(1, "main")], "oid long, datname string").coalesce(
-        1
-    ).createOrReplaceTempView("pg_database")
-    mk([("spark",)], "rolname string").coalesce(1).createOrReplaceTempView(
-        "pg_roles"
-    )
-    # Empty-but-typed relations psql's \d and BI introspection join
-    # against (no indexes/constraints/comments exist on parquet tables;
-    # an EMPTY result keeps those multi-join queries running where a
-    # missing relation errors the whole \d):
-    mk(
-        [],
-        "indexrelid long, indrelid long, indisprimary boolean, "
-        "indisunique boolean, indkey string",
-    ).coalesce(1).createOrReplaceTempView("pg_index")
-    mk(
-        [],
-        "oid long, conname string, connamespace long, contype string, "
-        "conrelid long, conkey array<int>, condeferrable boolean, "
-        "condeferred boolean, convalidated boolean",
-    ).coalesce(1).createOrReplaceTempView("pg_constraint")
-    mk(
-        [],
-        "schemaname string, tablename string, indexname string, "
-        "tablespace string, indexdef string",
-    ).coalesce(1).createOrReplaceTempView("pg_indexes")
-    mk(
-        [], "objoid long, classoid long, objsubid int, description string"
-    ).coalesce(1).createOrReplaceTempView("pg_description")
-    mk([(403, "btree")], "oid long, amname string").coalesce(
-        1
-    ).createOrReplaceTempView("pg_am")
-    mk(
-        sorted({(g[0], g[1]) for g in _PG_GUCS.values()}),
-        "name string, setting string",
-    ).coalesce(1).createOrReplaceTempView("pg_settings")
-    mk(
-        is_tables,
-        "table_catalog string, table_schema string, table_name string, "
-        "table_type string",
-    ).coalesce(1).createOrReplaceTempView("info_schema_tables")
-    mk(
-        is_columns,
-        "table_catalog string, table_schema string, table_name string, "
-        "column_name string, ordinal_position int, data_type string, "
-        "is_nullable string",
-    ).coalesce(1).createOrReplaceTempView("info_schema_columns")
+    pg_types = [
+        (16, "bool"), (17, "bytea"), (20, "int8"), (21, "int2"), (23, "int4"),
+        (25, "text"), (114, "json"), (700, "float4"), (701, "float8"),
+        (1043, "varchar"), (1082, "date"), (1083, "time"), (1114, "timestamp"),
+        (1184, "timestamptz"), (1700, "numeric"),
+    ]
+    # pg_index … pg_description are empty-but-typed: psql's \d and BI
+    # introspection join against them (no indexes/constraints/comments
+    # exist on parquet tables; an EMPTY result keeps those multi-join
+    # queries running where a missing relation errors the whole \d)
+    for view, ddl, rows in (
+        ("pg_tables", "schemaname string, tablename string, tableowner string", tables),
+        ("pg_views", "schemaname string, viewname string, viewowner string", views),
+        ("pg_namespace", "oid long, nspname string",
+         [(o, n) for n, o in ns_oids.items()]),
+        ("pg_class", "oid long, relname string, relnamespace long, relkind string",
+         classes),
+        ("pg_attribute", "attrelid long, attname string, atttypid long, "
+         "attnum int, attnotnull boolean", attrs),
+        ("pg_type", "oid long, typname string", pg_types),
+        ("pg_database", "oid long, datname string", [(1, "main")]),
+        ("pg_roles", "rolname string", [("spark",)]),
+        ("pg_index", "indexrelid long, indrelid long, indisprimary boolean, "
+         "indisunique boolean, indkey string", []),
+        ("pg_constraint", "oid long, conname string, connamespace long, "
+         "contype string, conrelid long, conkey array<int>, "
+         "condeferrable boolean, condeferred boolean, convalidated boolean", []),
+        ("pg_indexes", "schemaname string, tablename string, indexname string, "
+         "tablespace string, indexdef string", []),
+        ("pg_description", "objoid long, classoid long, objsubid int, "
+         "description string", []),
+        ("pg_am", "oid long, amname string", [(403, "btree")]),
+        ("pg_settings", "name string, setting string",
+         sorted({(g[0], g[1]) for g in _PG_GUCS.values()})),
+        ("info_schema_tables", "table_catalog string, table_schema string, "
+         "table_name string, table_type string", is_tables),
+        ("info_schema_columns", "table_catalog string, table_schema string, "
+         "table_name string, column_name string, ordinal_position int, "
+         "data_type string, is_nullable string", is_columns),
+    ):
+        _local_df(session, rows, ddl).createOrReplaceTempView(view)
 
 
 _PG_CATALOG_RE = re.compile(
@@ -4987,7 +5016,8 @@ def _pragma_df(session: SparkSession, stmt: str) -> DataFrame | None:
         return None
     name, arg = m.group(1).lower(), m.group(2)
     if name == "version":
-        return session.createDataFrame(
+        return _local_df(
+            session,
             [("v1.1.1 (duckdb_pgwire_spark)", f"spark-{session.version}")],
             "library_version string, source_id string",
         )
@@ -4996,19 +5026,18 @@ def _pragma_df(session: SparkSession, stmt: str) -> DataFrame | None:
             (i + 1, a, ATTACHED[a]["path"])
             for i, a in enumerate(sorted(ATTACHED))
         ]
-        return session.createDataFrame(
-            rows, "seq int, name string, file string"
-        )
+        return _local_df(session, rows, "seq int, name string, file string")
     if name == "show_tables":
-        rows = [(t.name,) for t in _list_user_tables(session)]
-        return session.createDataFrame(rows or [], "name string").orderBy("name")
+        names = sorted(t.name for t in _list_user_tables(session))
+        return _local_df(session, [(n,) for n in names], "name string")
     if name == "table_info" and arg:
         fields = session.table(arg).schema.fields
         rows = [
             (i, f.name, _duck_type(f.dataType), not f.nullable, None, False)
             for i, f in enumerate(fields)
         ]
-        return session.createDataFrame(
+        return _local_df(
+            session,
             rows,
             "cid int, name string, type string, notnull boolean, "
             "dflt_value string, pk boolean",
@@ -5082,9 +5111,7 @@ def _explain_analyze_df(session: SparkSession, body: str) -> DataFrame:
                     if v not in ("0", "0 ms", "0.0 B"):
                         vals.append(f"{m.name()}: {v}")
             lines.append(f"{name}" + (f"  [{'; '.join(vals[:6])}]" if vals else ""))
-    return session.createDataFrame(
-        [(ln,) for ln in lines], "explain_analyze string"
-    )
+    return _local_df(session, [(ln,) for ln in lines], "explain_analyze string")
 
 
 def _relation_df(session: SparkSession, target: str) -> DataFrame:
@@ -5099,16 +5126,17 @@ def _introspection_df(session: SparkSession, stmt: str) -> DataFrame:
     guc = _show_guc(stmt)
     if guc is not None:
         name, value = guc
-        return session.createDataFrame([(value,)], f"`{name}` string").coalesce(1)
+        return _local_df(session, [(value,)], f"`{name}` string")
     if _SHOW_TABLES_RE.match(stmt):
         names = sorted(t.name for t in _list_user_tables(session))
-        return session.createDataFrame([(n,) for n in names], "name string").coalesce(1)
+        return _local_df(session, [(n,) for n in names], "name string")
     if _SHOW_DATABASES_RE.match(stmt):
         # DuckDB: one database_name row per attached database
-        names = sorted(d.name for d in session.catalog.listDatabases())
-        return session.createDataFrame(
-            [(n,) for n in names], "database_name string"
-        ).coalesce(1)
+        # the session catalog, not catalog.listDatabases() (a Spark job;
+        # see _list_user_tables)
+        dbs = session._jsparkSession.sessionState().catalog().listDatabases()
+        names = sorted(dbs.apply(i) for i in range(dbs.size()))
+        return _local_df(session, [(n,) for n in names], "database_name string")
     m = _INTROSPECT_RE.match(stmt)
     assert m is not None
     word, target = m.group(1).upper(), m.group(2)
@@ -5130,11 +5158,12 @@ def _introspection_df(session: SparkSession, stmt: str) -> DataFrame:
             )
             for f in df.schema.fields
         ]
-        return session.createDataFrame(
+        return _local_df(
+            session,
             rows,
             "column_name string, column_type string, null string, "
             "key string, default string, extra string",
-        ).coalesce(1)
+        )
     return _summarize_df(session, df)
 
 
@@ -5176,13 +5205,14 @@ def _summarize_df(session: SparkSession, df: DataFrame) -> DataFrame:
             q[0], q[1], q[2], cnt,
             round(100.0 * (total - cnt) / total, 2) if total else None,
         ))
-    return session.createDataFrame(
+    return _local_df(
+        session,
         rows,
         "column_name string, column_type string, min string, max string, "
         "approx_unique bigint, avg double, std double, "
         "q25 double, q50 double, q75 double, count bigint, "
         "null_percentage double",
-    ).coalesce(1)
+    )
 
 
 def _interval_lit_fold(df: DataFrame, stmt: str) -> DataFrame:
@@ -5303,6 +5333,19 @@ def _make_cells(kept: list, result_fmts: list[int]) -> list:
         else:
             cells.append((i, text_cell_encoder(dt)))
     return cells
+
+
+def _command_rows(df: DataFrame) -> int:
+    """Row count for the command tag of a result without columns. A
+    command that session.sql already ran eagerly holds its result rows
+    on the driver, so they are counted without a job; a write command
+    (a plain INSERT) reports the rows it wrote through its
+    numOutputRows metric, its own result relation being empty."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() != "CommandResult":
+        return df.count()
+    written = plan.commandPhysicalPlan().metrics().get("numOutputRows")
+    return written.get().value() if written.isDefined() else len(df.collect())
 
 
 def _next_batch(it: Iterator, n: int, cells: list) -> list[list[bytes | None]]:

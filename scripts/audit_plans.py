@@ -20,32 +20,66 @@ from collections import Counter
 from pathlib import Path
 
 
+def _bracketed(text: str, marker: str) -> list[str]:
+    """Body of the balanced ``[...]`` right after each match of
+    ``marker``, on the same line — a bracketed argument inside the list
+    (an array literal, an element index) does not end it."""
+    out = []
+    for m in re.finditer(marker + r"(?=\[)", text):
+        depth = 0
+        for j in range(m.end(), len(text)):
+            ch = text[j]
+            if ch == "\n":
+                break
+            if ch == "[":
+                depth += 1
+            elif ch == "]":
+                depth -= 1
+                if depth == 0:
+                    out.append(text[m.end() + 1 : j])
+                    break
+    return out
+
+
+def _kernel_names(args: str) -> list[str]:
+    """Leading function name of each top-level item of an eval node's
+    argument list (nested calls inside an item are not kernels)."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(args + ","):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            m = re.match(r"\s*([A-Za-z_]\w*)\(", args[start:i])
+            if m:
+                names.append(m.group(1))
+            start = i + 1
+    return names
+
+
 def audit(path: Path) -> list[str]:
     text = path.read_text()
     flags: list[str] = []
 
     # duplicated Python kernel: same function name in >1 eval node.
     # Simple-mode plans carry the kernel list on the eval node's OWN
-    # line ("ArrowEvalPython [pyfn(...)], ..."): anchor the capture to
-    # that line (lazy, no newline crossing) — the old optional-newline
-    # form could skip to the NEXT operator line and capture e.g. a
-    # Project's 'substring' instead of the kernel (r17 ADVICE item 1).
+    # line ("ArrowEvalPython [pyfn(...)], ..."): the capture stays on
+    # that line, so it never reaches the NEXT operator and captures
+    # e.g. a Project's 'substring' (r17 ADVICE item 1), and it ends at
+    # the list's balanced ']', not at the first one.
     kernels: list[str] = []
-    for args in re.findall(
-        r"(?:ArrowEvalPython|BatchEvalPython) \[([^\]\n]*)", text
-    ):
-        kernels.extend(re.findall(r"(?:^|, )([A-Za-z_]\w*)\(", args))
+    for args in _bracketed(text, r"(?:ArrowEvalPython|BatchEvalPython) "):
+        kernels.extend(_kernel_names(args))
     # formatted plans put args on the detail line: "(n) ArrowEvalPython\n
-    # ...Arguments: [fn1(col)#1, fn2(col)#2]" — capture EVERY top-level
-    # function in the bracket, not just the leading one (r17 ADVICE
-    # item 2): names appear after '[' or ', ' (nested calls inside an
-    # argument list don't).
+    # ...Arguments: [fn1(col)#1, fn2(col)#2]" — count EVERY top-level
+    # function in the list, not just the leading one (r17 ADVICE item 2)
     detail: list[str] = []
-    for args in re.findall(
-        r"\(\d+\) (?:ArrowEvalPython|BatchEvalPython)\nInput[^\n]*\nArguments: \[([^\]]*)",
+    for args in _bracketed(
         text,
+        r"\(\d+\) (?:ArrowEvalPython|BatchEvalPython)\nInput[^\n]*\nArguments: ",
     ):
-        detail.extend(re.findall(r"(?:^|, )([A-Za-z_]\w*)\(", args))
+        detail.extend(_kernel_names(args))
     names = Counter(kernels + detail)
     for fn, n in names.items():
         if n > 1:

@@ -268,6 +268,7 @@ def test_wire_reference_go_client_roundtrip(client, spark):
         "INSERT INTO users(name) select 'euiko' from generate_series(0, 10)"
     )
     assert "error" not in r2, r2
+    assert r2["tag"] == "INSERT 0 11", r2
     (r3,) = client.query("SELECT * FROM users")
     assert r3["columns"] == ["name"]
     assert r3["rows"] == [["euiko"]] * 11  # inclusive bounds: 11 rows
@@ -1517,8 +1518,8 @@ def test_extended_query_ddl_no_data(client, spark, tmp_path):
     assert "error" not in out, out
     assert "n" in out["events"]  # Describe answered NoData for DDL
     out = client.extended_query("INSERT INTO ext_demo VALUES ($1)", ["7"])
-    # Spark's INSERT returns no row count through sql() — tag reports 0
-    assert out["tag"].startswith("INSERT 0")
+    # the row count comes from the write command's numOutputRows metric
+    assert out["tag"] == "INSERT 0 1", out
     out = client.extended_query("SELECT v FROM ext_demo")
     assert out["rows"] == [["7"]]
     spark.sql("DROP TABLE IF EXISTS ext_demo")
@@ -2184,6 +2185,53 @@ def test_wire_insert_returning(client, spark):
     (res,) = client.query("SELECT count(*) AS n FROM ret_users")
     assert res["rows"] == [["3"]]
     spark.sql("DROP TABLE IF EXISTS ret_users")
+
+
+def test_wire_plain_insert_tag_counts_rows(client, spark):
+    """A plain INSERT (no RETURNING / ON CONFLICT) runs through Spark's
+    own INSERT, whose result relation is empty; the tag carries the
+    rows written, as PG and DuckDB report them."""
+    _fresh_wire_table(spark, "tag_rows")
+    client.query("CREATE TABLE tag_rows(id int, name varchar)")
+    (res,) = client.query(
+        "INSERT INTO tag_rows VALUES (1, 'a'), (2, 'b'), (3, NULL)"
+    )
+    assert res["tag"] == "INSERT 0 3", res
+    (res,) = client.query(
+        "INSERT INTO tag_rows SELECT n_nationkey, n_name FROM nation"
+        " WHERE n_regionkey = 1"
+    )
+    assert res["tag"] == "INSERT 0 5", res
+    (res,) = client.query("INSERT INTO tag_rows SELECT 9, 'x' WHERE false")
+    assert res["tag"] == "INSERT 0 0", res
+    (res,) = client.query("SELECT count(*) AS n FROM tag_rows")
+    assert res["rows"] == [["8"]], res
+    spark.sql("DROP TABLE IF EXISTS tag_rows")
+
+
+def test_wire_driver_built_results_start_no_spark_job(client, spark):
+    """DESCRIBE, SHOW and PRAGMA answers are built on the driver as
+    Arrow-backed local relations and collected without a Spark job
+    under the connection's job tag; a scan starts jobs as usual (the
+    positive control: one shuffle-map job and one result job, since
+    AQE runs the aggregate's exchange as its own query stage)."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    tag = f"pgwire-conn-{client.backend_key[1]}"
+
+    def jobs(sql):
+        before = set(tracker.getJobIdsForTag(tag))
+        (res,) = client.query(sql)
+        assert "error" not in res, res
+        return len(set(tracker.getJobIdsForTag(tag)) - before)
+
+    for sql in (
+        "DESCRIBE SELECT n_nationkey, n_name FROM nation",
+        "SHOW TABLES",
+        "SHOW transaction_isolation",
+        "PRAGMA version",
+    ):
+        assert jobs(sql) == 0, sql
+    assert jobs("SELECT count(*) FROM nation") == 2
 
 
 def test_wire_update_delete_returning(client, spark):
@@ -4000,6 +4048,20 @@ def test_wire_create_type_enum(client, spark):
     # invalid-text-representation (22P02), NOT query_canceled (57014)
     (r,) = client.query("SELECT 'cancelled'::mood AS m")
     assert "error" in r and r.get("sqlstate") == "22P02", r
+    # the same SQLSTATEs when collect() runs the plan (a global
+    # aggregate is row-bounded, so it is fetched with one collect()):
+    # getSqlState() there reports raise_error's P0001, and the message
+    # must still decide
+    for sql, state, frag in [
+        ("SELECT count(CAST(n_name AS mood)) AS n FROM nation", "22P02",
+         "Could not convert string"),
+        ("SELECT sum(ln(n_nationkey - 30)) AS s FROM nation", "22003",
+         "Out of Range Error: cannot take logarithm"),
+        ("SELECT max(printf('%d', n_name)) AS p FROM nation", "22023",
+         'Invalid type specifier "d"'),
+    ]:
+        (r,) = client.query(sql)
+        assert r.get("sqlstate") == state and frag in r["error"], (sql, r)
     # ORDER BY / min / max follow DECLARATION order, not lexical
     (r,) = client.query(
         "SELECT m FROM (SELECT 'happy'::mood AS m UNION ALL"

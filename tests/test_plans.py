@@ -492,6 +492,19 @@ def test_audit_plans_kernel_regexes(tmp_path):
     assert any("'pyfn' evaluated in 2 nodes" in f for f in flags), flags
     assert not any("substring" in f for f in flags), flags
 
+    # simple mode, bracketed argument: the list ends at its balanced
+    # ']', so 'kern' after the array literal is still captured (and
+    # 'lower', nested inside an argument, is not a kernel)
+    bracketed = (
+        "ArrowEvalPython [pyfn(a#1, [1, 2], lower(s#9)), kern(b#2)], [o#3], 200\n"
+        "+- ArrowEvalPython [kern(c#4), lower(d#5)], [o2#6], 200\n"
+    )
+    p = tmp_path / "bracketed.txt"
+    p.write_text(bracketed)
+    flags = mod.audit(p)
+    assert any("'kern' evaluated in 2 nodes" in f for f in flags), flags
+    assert not any("'lower'" in f or "'pyfn'" in f for f in flags), flags
+
     # formatted mode: two UDFs in ONE Arguments list + one repeated
     formatted = (
         "(3) ArrowEvalPython\n"
