@@ -19,9 +19,6 @@ label) so candidate pairs stay linear-ish, not quadratic.
 
 from __future__ import annotations
 
-import logging
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,8 +33,6 @@ N_BANDS = 4        # LSH bands (2 rows per band)
 # expansion would make one straggler task at web scale — drop it, on
 # BOTH engine sides so the oracle agrees at any scale.
 LSH_BUCKET_CAP = 64
-
-logger = logging.getLogger(__name__)
 
 
 def _shingles(words_col):
@@ -155,7 +150,7 @@ def _band_rows(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
 
 
 def capped_member_lists(
-    bands: DataFrame, keys: list[str], member, cap: int, log_name: str = ""
+    bands: DataFrame, keys: list[str], member, cap: int
 ) -> DataFrame:
     """Per-bucket sorted member lists with the bucket-size cap enforced
     BEFORE the collect (r18, guide §2.5/§5): ``collect_list`` buffers a
@@ -187,11 +182,6 @@ def capped_member_lists(
         .filter((F.col("__n") >= 2) & (F.col("__n") <= cap))
         .drop("__n")
     )
-    if log_name and os.environ.get("SPARK_GRAFT_LOG_DROPPED_BUCKETS") == "1":
-        n_dropped = (
-            bands.groupBy(*keys).count().filter(F.col("count") > cap).count()
-        )
-        logger.warning("%s: dropped %d over-cap buckets", log_name, n_dropped)
     return capped.groupBy(*keys).agg(
         F.array_sort(F.collect_list(member)).alias("ms")
     )
@@ -216,7 +206,6 @@ def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["band_idx0", "band_val"],
         F.col("doc_id"),
         LSH_BUCKET_CAP,
-        log_name="minhash LSH",
     ).withColumnRenamed("ms", "ids")
     pair = F.explode(
         F.flatten(

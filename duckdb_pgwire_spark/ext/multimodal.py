@@ -634,7 +634,6 @@ def mm_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["band_idx", "band_val"],
         F.struct("doc_id", "w"),
         PHASH_BUCKET_CAP,
-        log_name="phash LSH",
     )
     pair = F.explode(
         F.flatten(

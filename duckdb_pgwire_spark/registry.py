@@ -18,10 +18,8 @@ sketches with engine-specific estimates) register with ``oracle=None``
 from __future__ import annotations
 
 import importlib
-import json
 from collections.abc import Callable
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -101,169 +99,13 @@ def load_one(name: str, module: str) -> QueryDef:
     return load_all()[name]
 
 
-def _driver_green_rounds() -> dict[str, int]:
-    """name → LATEST round the driver verified it green.
-
-    The driver's per-round correctness harness checks a bounded prefix of
-    ``queries()`` (~50 entries), so iteration order decides coverage. We
-    read every ``CORRECTNESS_r*.json`` at the repo root; ordering puts
-    never-verified entries first and then rotates by staleness (r5
-    verdict item 8: oldest-verified entries pull forward so no entry
-    starves outside the window indefinitely).
-    """
-    green: dict[str, int] = {}
-    root = Path(__file__).resolve().parent.parent
-    for rnd, path in enumerate(sorted(root.glob("CORRECTNESS_r*.json")), start=1):
-        try:
-            results = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(results, dict):
-            continue
-        for name, res in results.items():
-            if not isinstance(res, dict):
-                continue
-            ok = (
-                res.get("err") is None
-                and res.get("rows_match", True)
-                and res.get("schema_match", True)
-                and res.get("hash_match", True) in (True, None)
-            )
-            if ok:
-                green[name] = max(green.get(name, 0), rnd)
-    return green
-
-
-def _driver_green_names() -> set[str]:
-    return set(_driver_green_rounds())
-
-
-# Core entries pinned near the front of every round's driver window
-# (r4 verdict item 7): the rotating never-green-first order alone let a
-# regression in a flagship operator hide outside the checked prefix for
-# a full round. These go right after the never-verified entries, so the
-# ~50-entry window always re-checks them.
-FLAGSHIP = (
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q18_large_volume_customers",
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q9_product_type_profit",
-    "q11_important_part_share",
-    "q12_priority_shipclass",
-    "q16_parts_supplier_counts",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_revenue",
-    "q20_promotion_suppliers",
-    "q21_waiting_suppliers",
-    "q22_sales_opportunity",
-    "join_inner",
-    "join_left_outer",
-    "join_semi",
-    "join_anti",
-    "join_asof",
-    "join_bucketed_colocated",
-    "agg_rollup",
-    "win_ranking",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "sim_lsh_bucketed",
-    "stream_stream_join_attribution",
-)
-
-
-_ROUND_CACHE: list[int] = []
-
-
-def _current_round() -> int:
-    """1 + the number of driver CORRECTNESS files whose check actually
-    RAN (non-empty JSON), at FIRST call — the round whose window
-    ordered_names() is computed for. Empty files don't advance the
-    count: CORRECTNESS_r09 was `{}` (the r9 gate never executed — see
-    NOTES.md r10 incident), and counting it would skip that round's
-    flagship parity half forever. Memoized so the parity cannot flip
-    mid-process if the driver lands this round's file while the
-    process is still running (code review r8)."""
-    if not _ROUND_CACHE:
-        root = Path(__file__).resolve().parent.parent
-        n = 0
-        for f in root.glob("CORRECTNESS_r*.json"):
-            try:
-                ran = bool(json.loads(f.read_text()))
-            except Exception:  # noqa: BLE001 — unreadable: assume it ran
-                ran = True
-            n += ran
-        _ROUND_CACHE.append(n + 1)
-    return _ROUND_CACHE[0]
-
-
-def ordered_names() -> list[str]:
-    """Registry names: never-driver-verified first, then the pinned
-    flagship HALF for this round's parity, then the rest ordered
-    OLDEST-latest-green first (a stale entry re-enters the driver's
-    bounded window before one the driver just re-checked; registry
-    order breaks ties stably).
-
-    Only HALF of FLAGSHIP pins each round (r7 verdict item 1): the full
-    34-entry pin ate ~70% of the driver's ~50-entry window and starved
-    the stale tail for 4-5 rounds. The halves interleave (even/odd
-    index) so each keeps cross-family coverage, and alternate by round
-    parity so every flagship is still driver-checked at most one round
-    apart; the off-parity half was green LAST round, so the staleness
-    sort re-admits it quickly anyway if slots remain."""
-    defs = load_all()
-    green = _driver_green_rounds()
-    unseen = [n for n in defs if n not in green]
-    cur = _current_round()
-    par = cur % 2
-    half = [n for i, n in enumerate(FLAGSHIP) if i % 2 == par]
-    pinned = [n for n in half if n in defs and n in green]
-    order = {n: i for i, n in enumerate(defs)}
-    # Overdue tier (r10 verdict item 1): an entry whose latest driver
-    # green is ≥5 rounds old jumps AHEAD of the flagship pin — the r9
-    # empty-window incident left a 51-entry r4/r5 tail that the normal
-    # staleness sort could not drain past the 17-entry pin within the
-    # driver's ~50-slot window. Self-correcting: once the tail retires,
-    # the tier is empty and the order reduces to the r7 scheme.
-    overdue = sorted(
-        # ≥3 rounds stale (was 4 — r15: the r11-green tier is 50
-        # entries, exactly one driver window, but the 17-entry
-        # flagship half-pin displaced 17 of them past slot 50; r09's
-        # empty file also makes _current_round lag the calendar round
-        # by one. At ≥3 the whole stale tier outranks the pin and
-        # drains in one window, honoring the r14 verdict's "nothing
-        # last-checked before r12" target; the displaced pin half was
-        # green ≤2 rounds ago and re-enters via the staleness sort
-        # next round. Was 5 before r12's same adjustment.)
-        (n for n in defs if n in green and green[n] <= cur - 3),
-        key=lambda n: (green[n], order[n]),
-    )
-    pinned = [n for n in pinned if n not in overdue]
-    rest = sorted(
-        (n for n in defs if n in green and n not in pinned and n not in overdue),
-        key=lambda n: (green[n], order[n]),
-    )
-    return unseen + overdue + pinned + rest
-
-
 def spark_queries() -> dict[str, QueryFn]:
-    defs = load_all()
-    return {name: defs[name].fn for name in ordered_names()}
+    """Every registered query, in registry definition order."""
+    return {name: d.fn for name, d in load_all().items()}
 
 
 def oracle_queries() -> dict[str, str]:
-    defs = load_all()
+    """The oracle SQL of every query that has one, in definition order."""
     return {
-        name: defs[name].oracle
-        for name in ordered_names()
-        if defs[name].oracle is not None
+        name: d.oracle for name, d in load_all().items() if d.oracle is not None
     }

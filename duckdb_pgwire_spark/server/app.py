@@ -15,7 +15,15 @@ errors → SqlException(DataException) (:65-73)    ErrorResponse, SQLSTATE kept
 pg_is_in_recovery / duckdb_pgwire UDFs (:206-12) registered in Spark catalog
 
 Simple and extended query protocols; text and binary result formats;
-COPY TO/FROM STDOUT/STDIN. Spark calls are blocking → they run on a
+COPY TO/FROM STDOUT/STDIN. Both protocols share one statement path,
+_run_statement: the text pre-pass, then _rows_df — the one builder of
+every row result — or a command, then one sender, _stream_df. Describe
+of a portal runs the pre-pass and _rows_df once and caches the
+DataFrame on the portal; Execute sends that DataFrame without planning
+the statement again. COPY … TO builds its inner query with _rows_df like
+any SELECT. Known gap: INSERT/UPDATE/DELETE … RETURNING answers NoData
+on Describe (its row shape needs the write planned), then sends its rows
+at Execute. Spark calls are blocking → they run on a
 thread-pool executor. Fetch rule: rows built on the driver (DESCRIBE,
 SHOW, PRAGMA, pg_catalog) are Arrow-backed local relations and run no
 Spark job; a result whose optimized plan bounds its rows at ≤1024 is
@@ -31,7 +39,6 @@ import concurrent.futures
 import functools
 import itertools
 import logging
-import math
 import os
 import struct
 import threading
@@ -142,7 +149,9 @@ class _Portal:
 
     def __init__(self, sql: str, result_fmts: list[int] | None = None) -> None:
         self.sql = sql
-        self.df = None  # analyzed lazily (Describe) and reused by Execute
+        # planned once — at Describe, or by the first Execute — and sent
+        # by every Execute after it
+        self.df = None
         # result format codes from Bind (0 text / 1 binary, PG broadcast
         # rules applied against the output column count at Execute time)
         self.result_fmts = result_fmts or []
@@ -169,19 +178,6 @@ class _ConnState:
         self.skip_to_sync = False  # extended-protocol error recovery
         self.job_tag = ""  # Spark job tag for CancelRequest targeting
 
-
-# Statements that mutate state (for rollback honesty).
-_WRITE_WORDS = {
-    "INSERT",
-    "UPDATE",
-    "DELETE",
-    "MERGE",
-    "CREATE",
-    "DROP",
-    "ALTER",
-    "TRUNCATE",
-    "COPY",
-}
 
 _PREPARE_RE = re.compile(r"^\s*PREPARE\s+(\w+)\s+AS\s+(.+)$", re.IGNORECASE | re.DOTALL)
 _EXECUTE_RE = re.compile(
@@ -973,39 +969,70 @@ def _recursive_union_df(session: SparkSession, stmt: str):
                 pass
 
 
-def _select_df(session: SparkSession, stmt: str) -> DataFrame:
-    """DataFrame for a SELECT-shaped statement, handling the spellings
-    Spark's parser can't take whole (UNION BY NAME, LIMIT n%) on EVERY
-    protocol path — the extended-protocol portal executes through here
-    too, so fetchSize/binary clients see the same dialect surface."""
-    if "pipeline" in stmt.lower():
-        try:
-            stmt = _substitute_pipeline_fns(session, stmt)
-        except ValueError as exc:
-            # extended-protocol path: same 42883 the simple path maps to
-            raise _WireError(str(exc), "42883") from exc
-    try:
-        stmt = _substitute_csv_relations(session, stmt)
-    except ValueError as exc:
-        # DuckDB reports sniff/open failures as IO Error
-        raise _WireError(str(exc), "58030") from exc
-    if _UNION_BY_NAME_RE.search(stmt):
-        df = _union_by_name_df(session, stmt)
-        if df is not None:
-            return df
-    if _WITH_RECURSIVE_RE.match(stmt):
-        df = _recursive_union_df(session, stmt)
-        if df is not None:
-            return df
-    mp = _limit_pct_match(stmt)
-    if mp:
-        base = rewrite(stmt[: mp.start()])
-        d0 = session.sql(_hugeint_sums(session, base))
-        # DuckDB TRUNCATES the percentage row count (probed: LIMIT 10%
-        # of 5 rows returns 0 rows, 90% returns 4)
-        k = int(d0.count() * float(mp.group(1)) / 100.0)
-        return d0.limit(k)
-    return session.sql(_hugeint_sums(session, rewrite(stmt)))
+_QUERY_HEADS = frozenset({"SELECT", "WITH", "VALUES", "TABLE", "FROM"})
+_ROW_HEADS = _QUERY_HEADS | {
+    "SHOW", "DESCRIBE", "DESC", "SUMMARIZE", "PRAGMA", "EXPLAIN", "PIVOT",
+    "UNPIVOT",
+}
+
+
+def _rows_df(session: SparkSession, stmt: str) -> DataFrame | None:
+    """The one builder of row results: the DataFrame a row-returning
+    statement answers, in its wire shape, or None for a command. A
+    simple Query, a portal's Describe and the inner query of COPY … TO
+    all build here, so the spellings Spark's parser can't take whole
+    (UNION BY NAME, WITH RECURSIVE, LIMIT n%, DuckDB's PIVOT/UNPIVOT
+    statements) and the driver-built answers (DESCRIBE/SHOW/SUMMARIZE,
+    PRAGMA, EXPLAIN ANALYZE) answer the same on every path."""
+    first = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
+    if first not in _ROW_HEADS:
+        return None
+    df = None
+    if _is_introspection(stmt):
+        df = _introspection_df(session, stmt)
+    elif first == "PRAGMA":
+        df = _pragma_df(session, stmt)
+        if df is None:  # unknown pragma: Spark's parser reports it
+            return None
+    elif first == "EXPLAIN" and (m := _EXPLAIN_ANALYZE_RE.match(stmt)):
+        # before rewrite(), which maps the plain form to EXPLAIN
+        # EXTENDED: ANALYZE must actually run the query
+        df = _explain_analyze_df(session, m.group(1))
+    elif first == "UNPIVOT" and (u := _match_unpivot_stmt(stmt)):
+        tbl, cols, name_col, val_col = u
+        if tbl.startswith("("):
+            # rewrite the inner query through the full dialect
+            # pipeline; alias for Spark's derived-table rule
+            tbl = f"({rewrite(tbl[1:-1])}) __unpivot_src"
+        df = session.sql(
+            f"SELECT * FROM {tbl} UNPIVOT ({val_col} FOR {name_col} IN ({cols}))"
+        )
+    elif first == "PIVOT" and (pivot_sql := _dynamic_pivot_sql(session, stmt)):
+        df = session.sql(pivot_sql)
+    elif first in _QUERY_HEADS:
+        if _UNION_BY_NAME_RE.search(stmt):
+            df = _union_by_name_df(session, stmt)
+        if df is None and first == "WITH" and _WITH_RECURSIVE_RE.match(stmt):
+            df = _recursive_union_df(session, stmt)
+        if df is None and (mp := _limit_pct_match(stmt)):
+            d0 = _planned(session, stmt[: mp.start()])
+            # DuckDB TRUNCATES the percentage row count (probed: LIMIT
+            # 10% of 5 rows returns 0 rows, 90% returns 4)
+            df = d0.limit(int(d0.count() * float(mp.group(1)) / 100.0))
+    if df is None:
+        df = _planned(session, stmt)
+    return _ym_safe(_interval_lit_fold(df, stmt))
+
+
+def _planned(session: SparkSession, stmt: str) -> DataFrame:
+    """session.sql of the rewritten statement — the "prepare" step: the
+    schema is known before execution, like conn.Prepare → GetNames/
+    GetTypes (cpp:52,62-64). The pg_catalog emulation views are rebuilt
+    first when the statement reads them."""
+    sql = rewrite(stmt)
+    if _PG_CATALOG_RE.search(sql):
+        _refresh_pg_catalog(session)
+    return session.sql(_hugeint_sums(session, sql))
 
 
 def _union_by_name_df(session: SparkSession, stmt: str):
@@ -1141,8 +1168,13 @@ def _substitute_params(sql: str, args: list[str]) -> str:
 def _command_tag(sql: str, nrows: int) -> str:
     head = sql.lstrip().split(None, 1)
     word = head[0].upper() if head else "SELECT"
-    if word == "SELECT" or word == "WITH" or word == "VALUES" or word == "TABLE":
+    if (word in _ROW_HEADS and word not in ("SHOW", "EXPLAIN")) or (
+        word == "SHOW" and _is_introspection(sql)
+    ):
+        # DuckDB tags every query and driver-built answer SELECT <n>
         return f"SELECT {nrows}"
+    if word == "EXPLAIN" and _EXPLAIN_ANALYZE_RE.match(sql):
+        return "EXPLAIN"
     if word == "INSERT":
         return f"INSERT 0 {nrows}"
     if word in ("UPDATE", "DELETE"):
@@ -1389,19 +1421,6 @@ class PgWireServer:
             writer.write(P.ready_for_query())
             await writer.drain()
 
-    # statements whose Execute returns rows (Describe sends RowDescription)
-    _ROW_WORDS = (
-        "SELECT",
-        "WITH",
-        "VALUES",
-        "TABLE",
-        "SHOW",
-        "DESCRIBE",
-        "DESC",
-        "SUMMARIZE",
-        "EXPLAIN",
-    )
-
     async def _handle_extended(
         self,
         tag: bytes,
@@ -1466,44 +1485,28 @@ class PgWireServer:
                     sql, _ = state.ext_stmts[name]
                     n_params = _count_params(sql)
                     writer.write(P.parameter_description([25] * n_params))
-                    # schema preview: analyze with NULL-substituted params
-                    await self._describe_sql(
+                    # schema preview: plan with NULL-substituted params
+                    await self._describe(
                         _substitute_params(sql, ["NULL"] * n_params),
                         writer,
                         session,
+                        state,
                     )
                 else:
                     p = state.portals.get(name)
                     if p is None:
                         raise _WireError(f"portal {name!r} does not exist", "34000")
-                    await self._describe_sql(p.sql, writer, session, portal=p)
+                    await self._describe(p.sql, writer, session, state, portal=p)
             elif tag == b"E":
                 name, maxrows = P.parse_execute(payload)
                 p = state.portals.get(name)
                 if p is None:
                     raise _WireError(f"portal {name!r} does not exist", "34000")
-                first = p.sql.lstrip().split(None, 1)[0].upper() if p.sql.strip() else ""
-                _note_statement_head(first)
-                wants_binary = any(f == 1 for f in p.result_fmts)
                 if not p.sql:
                     writer.write(P.empty_query_response())
-                elif p.it is not None or (
-                    (maxrows > 0 or wants_binary) and first in self._ROW_WORDS
-                ):
-                    # portal suspension: stream up to maxrows rows, keep
-                    # the iterator alive, answer PortalSuspended until
-                    # the result is exhausted (JDBC setFetchSize path)
-                    await self._execute_portal(
-                        p, maxrows, writer, session, tag=state.job_tag
-                    )
                 else:
                     await self._run_statement(
-                        p.sql,
-                        writer,
-                        session,
-                        state,
-                        send_row_desc=False,
-                        pre_df=p.df,
+                        p.sql, writer, session, state, portal=p, maxrows=maxrows
                     )
             elif tag == b"C":
                 kind, name = P.parse_close(payload)
@@ -1516,124 +1519,124 @@ class PgWireServer:
             await writer.drain()
             state.skip_to_sync = True
 
-    async def _execute_portal(
-        self,
-        p: _Portal,
-        maxrows: int,
-        writer: asyncio.StreamWriter,
-        session: SparkSession,
-        tag: str = "",
-    ) -> None:
-        """Execute honoring the row limit: DataRows then PortalSuspended
-        (more pending) or CommandComplete (exhausted). The row iterator
-        lives on the portal across Execute messages — Close or Sync-less
-        reuse both work, as in PG."""
-        loop = asyncio.get_running_loop()
-        if p.it is None:
-            rewritten = rewrite(p.sql)
-            if p.df is None and _PG_CATALOG_RE.search(rewritten):
-                await loop.run_in_executor(self._pool, _refresh_pg_catalog, session)
-            if ea := _EXPLAIN_ANALYZE_RE.match(p.sql):
-                # extended-protocol EXPLAIN ANALYZE (JDBC/psycopg):
-                # execute + profile — checked BEFORE the Describe-cached
-                # df, which would otherwise shadow this with the
-                # unexecuted EXPLAIN EXTENDED plan
-                df = await self._exec(
-                    session, tag, _explain_analyze_df, session, ea.group(1)
-                )
-            elif p.df is not None:
-                df = p.df
-            elif _is_introspection(p.sql):
-                df = await self._exec(session, tag, _introspection_df, session, p.sql)
-            else:
-                df = await self._exec(
-                    session, tag, _select_df, session, p.sql
-                )
-            df = _interval_lit_fold(df, p.sql)
-            df = _ym_safe(df)
-            kept = [
-                (i, f.dataType)
-                for i, f in enumerate(df.schema.fields)
-                if not self.reference_compat or reference_visible(f.dataType)
-            ]
-            p.cells = _make_cells(kept, p.result_fmts)
-            p.it = await self._exec(session, tag, _fetch_iter, df)
-            p.sent = 0
-        limit = maxrows if maxrows > 0 else None
-        n = 0
-        while True:
-            want = _BATCH_ROWS if limit is None else min(_BATCH_ROWS, limit - n)
-            if want == 0:
-                p.sent += n
-                writer.write(P.portal_suspended())
-                await writer.drain()
-                return
-            batch = await self._exec(
-                session, tag, _next_batch, p.it, want, p.cells
-            )
-            for encoded in batch:
-                writer.write(P.data_row(encoded))
-            n += len(batch)
-            await writer.drain()
-            if len(batch) < want:  # iterator exhausted
-                p.it = None
-                p.sent += n
-                writer.write(P.command_complete(_command_tag(p.sql, p.sent)))
-                await writer.drain()
-                return
-
-    async def _describe_sql(
+    async def _describe(
         self,
         sql: str,
         writer: asyncio.StreamWriter,
         session: SparkSession,
+        state: _ConnState,
         portal: _Portal | None = None,
     ) -> None:
-        """RowDescription (or NoData) for Describe; caches the analyzed
-        DataFrame on the portal so Execute doesn't re-analyze."""
-        first = sql.lstrip().split(None, 1)[0].upper() if sql.strip() else ""
-        if first not in self._ROW_WORDS and not _is_introspection(sql):
+        """RowDescription, or NoData for a command. A portal's statement
+        takes the pre-pass and is planned by _rows_df here, once: the
+        DataFrame is cached on the portal and Execute sends it. Describe
+        of a statement plans a preview of its text with NULL parameters,
+        so it allocates no sequence values."""
+        sql = await self._prepass(sql, session, state, allocate=portal is not None)
+        df = await self._exec(session, state.job_tag, _rows_df, session, sql)
+        if portal is not None:
+            portal.sql, portal.df = sql, df
+        if df is None:
             writer.write(P.no_data())
-            return
-        loop = asyncio.get_running_loop()
-        rewritten = rewrite(sql)
-        if _PG_CATALOG_RE.search(rewritten):
-            await loop.run_in_executor(self._pool, _refresh_pg_catalog, session)
-        if _is_introspection(sql):
-            df = await loop.run_in_executor(
-                self._pool, _introspection_df, session, sql
-            )
-        elif _EXPLAIN_ANALYZE_RE.match(sql):
-            # schema only — Execute must run + profile, so the df is NOT
-            # cached on the portal (a cached df would shadow the
-            # profiled path with the unexecuted EXPLAIN EXTENDED plan)
-            df = await loop.run_in_executor(
-                self._pool,
-                _local_df, session, [], "explain_analyze string",
-            )
         else:
-            df = await loop.run_in_executor(
-                self._pool, _select_df, session, sql
+            fmts = portal.result_fmts if portal is not None else []
+            writer.write(self._row_description(df, sql, fmts))
+
+    async def _prepass(
+        self,
+        stmt: str,
+        session: SparkSession,
+        state: _ConnState,
+        *,
+        allocate: bool = True,
+    ) -> str:
+        """The text pre-pass every statement takes before it is
+        classified, on both protocols: a SQL-level EXECUTE resolves to
+        its PREPAREd text; pipeline() and CSV relations become temp
+        views; nextval/currval become allocated literals (or, for the
+        per-row SELECT shape, a pre-reserved row_number block) and
+        getvariable() its value. A PREPARE keeps its body as written.
+        ``allocate=False`` leaves nextval/currval alone."""
+        first = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
+        if first == "EXECUTE":
+            m = _EXECUTE_RE.match(stmt)
+            if m is None:
+                raise _WireError("syntax error in EXECUTE", "42601")
+            name = m.group(1).lower()
+            if name not in state.prepared:
+                raise _WireError(f"prepared statement {name!r} does not exist", "26000")
+            args = (
+                [a.strip() for a in split_top_level(m.group(2))] if m.group(2) else []
             )
-        if portal is not None and not _EXPLAIN_ANALYZE_RE.match(sql):
-            portal.df = df
-        fields = [
-            (i, f.name, f.dataType)
-            for i, f in enumerate(df.schema.fields)
-            if not self.reference_compat or reference_visible(f.dataType)
-        ]
-        fmts = P.expand_formats(
-            portal.result_fmts if portal is not None else [], len(fields)
-        )
-        bit_oids = _bit_oids_for(sql, len(df.schema.fields))
-        writer.write(
-            P.row_description(
-                [
-                    P.FieldDesc(n, bit_oids.get(i, pg_oid(dt)), fmt=fmt)
-                    for (i, n, dt), fmt in zip(fields, fmts)
-                ]
-            )
-        )
+            inner = _substitute_params(state.prepared[name], args)
+            return await self._prepass(inner, session, state, allocate=allocate)
+        if first == "PREPARE":
+            return stmt
+        if "pipeline" in stmt.lower():
+            # pipeline('op') / pipeline_ops(): materialize registry
+            # operators as temp views BEFORE dispatch
+            try:
+                stmt = await self._exec(
+                    session, state.job_tag,
+                    _substitute_pipeline_fns, session, stmt,
+                )
+            except ValueError as exc:
+                raise _WireError(str(exc), "42883") from exc
+        low0 = stmt.lower()
+        if ".csv" in low0 or ".tsv" in low0 or "read_csv" in low0:
+            # CSV relations sniff + substitute BEFORE dispatch so DDL
+            # (CREATE VIEW/TABLE AS), COPY subqueries, and queries all
+            # see the resolved view
+            try:
+                stmt = await self._exec(
+                    session, state.job_tag,
+                    _substitute_csv_relations, session, stmt,
+                )
+            except ValueError as exc:
+                # DuckDB reports sniff/open failures as IO Error
+                raise _WireError(str(exc), "58030") from exc
+        if allocate and "val(" in stmt.lower():
+            # nextval('s') / currval('s'): allocate BEFORE dispatch so
+            # every downstream path (INSERT fast path, queries) sees
+            # plain integer literals (or, for the per-row SELECT shape,
+            # a pre-reserved row_number block). The count probe runs on
+            # the pool thread like every Spark call.
+            # DML-on-view: refuse BEFORE any block is reserved — a
+            # reservation followed by the write-guard refusal would
+            # leave currval advanced by a statement that never ran
+            # (code review r10; second pass caught INSERT too).
+            um = None
+            if first == "UPDATE":
+                um = re.match(
+                    r"^\s*UPDATE\s+(?:ONLY\s+)?([\w.\"]+)", stmt,
+                    re.IGNORECASE,
+                )
+            elif first == "INSERT":
+                um = _INSERT_TARGET_RE.match(stmt)
+            if um is not None:
+                from ..operators.dml import _assert_writable
+
+                try:
+                    await self._exec(
+                        session, state.job_tag, _assert_writable, session,
+                        _unquote_ident(um.group(1)),
+                    )
+                except ValueError as exc:
+                    raise _WireError(str(exc), "42809") from exc
+
+            def _count(q: str) -> int:
+                return session.sql(rewrite(q)).first()[0]
+
+            try:
+                stmt = await self._exec(
+                    session, state.job_tag,
+                    substitute_sequence_fns, stmt, _count,
+                )
+            except ValueError as exc:
+                raise _WireError(str(exc), "55000") from exc
+        if "getvariable" in stmt.lower():
+            stmt = substitute_variables(stmt)
+        return stmt
 
     _TXN_TAGS = {
         "BEGIN": "BEGIN",
@@ -1651,14 +1654,51 @@ class PgWireServer:
         session: SparkSession,
         state: _ConnState | None = None,
         *,
-        send_row_desc: bool = True,
-        pre_df: DataFrame | None = None,
+        portal: _Portal | None = None,
+        maxrows: int = 0,
         reader: asyncio.StreamReader | None = None,
     ) -> None:
-        loop = asyncio.get_running_loop()
+        """The one statement path of both protocols, the reference's
+        conn.Prepare → Execute (cpp:52,97): the text pre-pass, then
+        _rows_df for a row-returning statement or _run_command for a
+        command, then one send. A simple Query passes no portal; an
+        extended Execute passes its portal, whose DataFrame — planned
+        at Describe, or by an earlier Execute that stopped at
+        ``maxrows`` — is sent without planning the statement again."""
         state = state or _ConnState()
-        first = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
-        _note_statement_head(first)
+        df = portal.df if portal is not None else None
+        if df is None:
+            stmt = await self._prepass(stmt, session, state)
+            first = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
+            _note_statement_head(first)
+            df = await self._exec(session, state.job_tag, _rows_df, session, stmt)
+            if df is None:
+                df = await self._run_command(
+                    stmt, first, writer, session, state, reader
+                )
+                if df is None:
+                    return  # the command wrote its CommandComplete
+                df = _ym_safe(_interval_lit_fold(df, stmt))
+            if portal is not None:
+                portal.df = df
+        await self._stream_df(
+            df, stmt, writer, session, state.job_tag, portal=portal, maxrows=maxrows
+        )
+
+    async def _run_command(
+        self,
+        stmt: str,
+        first: str,
+        writer: asyncio.StreamWriter,
+        session: SparkSession,
+        state: _ConnState,
+        reader: asyncio.StreamReader | None,
+    ) -> DataFrame | None:
+        """Run a statement that is not row-returning and write its
+        CommandComplete (None), or return the DataFrame _run_statement
+        sends: a RETURNING projection, or a command Spark runs itself
+        (its tag counts the rows it wrote)."""
+        loop = asyncio.get_running_loop()
         if first in self._TXN_TAGS:
             # PG clients autosend BEGIN/COMMIT (implicit transactions).
             # Spark has no transactions — every statement is autocommit —
@@ -1696,21 +1736,6 @@ class PgWireServer:
             state.prepared[m.group(1).lower()] = m.group(2).strip()
             writer.write(P.command_complete("PREPARE"))
             await writer.drain()
-            return
-        if first == "EXECUTE":
-            m = _EXECUTE_RE.match(stmt)
-            if m is None:
-                raise _WireError("syntax error in EXECUTE", "42601")
-            name = m.group(1).lower()
-            if name not in state.prepared:
-                raise _WireError(f"prepared statement {name!r} does not exist", "26000")
-            args = (
-                [a.strip() for a in split_top_level(m.group(2))] if m.group(2) else []
-            )
-            inner = _substitute_params(state.prepared[name], args)
-            await self._run_statement(
-                inner, writer, session, state, send_row_desc=send_row_desc
-            )
             return
         if first == "DEALLOCATE":
             m = _DEALLOC_RE.match(stmt)
@@ -1815,69 +1840,6 @@ class PgWireServer:
             writer.write(P.command_complete("DROP TYPE"))
             await writer.drain()
             return
-        if "pipeline" in stmt.lower():
-            # pipeline('op') / pipeline_ops(): materialize registry
-            # operators as temp views BEFORE dispatch (covers simple
-            # AND extended paths; _select_df repeats this for portals)
-            try:
-                stmt = await self._exec(
-                    session, state.job_tag,
-                    _substitute_pipeline_fns, session, stmt,
-                )
-            except ValueError as exc:
-                raise _WireError(str(exc), "42883") from exc
-        low0 = stmt.lower()
-        if ".csv" in low0 or ".tsv" in low0 or "read_csv" in low0:
-            # CSV relations sniff + substitute BEFORE dispatch so DDL
-            # (CREATE VIEW/TABLE AS), COPY subqueries, and the generic
-            # path all see the resolved view (the extended path repeats
-            # this inside _select_df)
-            try:
-                stmt = await self._exec(
-                    session, state.job_tag,
-                    _substitute_csv_relations, session, stmt,
-                )
-            except ValueError as exc:
-                raise _WireError(str(exc), "58030") from exc
-        if "val(" in stmt.lower():
-            # nextval('s') / currval('s'): allocate BEFORE dispatch so
-            # every downstream path (INSERT fast path, generic) sees
-            # plain integer literals (or, for the per-row SELECT shape,
-            # a pre-reserved row_number block). The count probe runs on
-            # the pool thread like every Spark call.
-            # DML-on-view: refuse BEFORE any block is reserved — a
-            # reservation followed by the write-guard refusal would
-            # leave currval advanced by a statement that never ran
-            # (code review r10; second pass caught INSERT too).
-            um = None
-            if first == "UPDATE":
-                um = re.match(
-                    r"^\s*UPDATE\s+(?:ONLY\s+)?([\w.\"]+)", stmt,
-                    re.IGNORECASE,
-                )
-            elif first == "INSERT":
-                um = _INSERT_TARGET_RE.match(stmt)
-            if um is not None:
-                from ..operators.dml import _assert_writable
-
-                try:
-                    await self._exec(
-                        session, state.job_tag, _assert_writable, session,
-                        _unquote_ident(um.group(1)),
-                    )
-                except ValueError as exc:
-                    raise _WireError(str(exc), "42809") from exc
-
-            def _count(q: str) -> int:
-                return session.sql(rewrite(q)).first()[0]
-
-            try:
-                stmt = await self._exec(
-                    session, state.job_tag,
-                    substitute_sequence_fns, stmt, _count,
-                )
-            except ValueError as exc:
-                raise _WireError(str(exc), "55000") from exc
         if first == "SET" and (m := SET_VAR_RE.match(stmt)):
             # DuckDB v1.1 SQL variables: value is a scalar evaluated NOW
             row = await self._exec(
@@ -1895,8 +1857,6 @@ class PgWireServer:
             writer.write(P.command_complete("RESET"))
             await writer.drain()
             return
-        if "getvariable" in stmt.lower():
-            stmt = substitute_variables(stmt)
         if first == "CHECKPOINT":
             # DuckDB CHECKPOINT flushes the WAL; parquet tables have no
             # WAL — ack as a maintenance no-op (same policy as VACUUM)
@@ -2009,36 +1969,6 @@ class PgWireServer:
                     "writes are not allowed",
                     "25006",
                 )
-        if first in ("DESCRIBE", "DESC", "SUMMARIZE", "SHOW") and _is_introspection(
-            stmt
-        ):
-            df = await self._exec(
-                session, state.job_tag, _introspection_df, session, stmt
-            )
-            await self._stream_df(
-                df, "SELECT", writer, send_row_desc=send_row_desc,
-                session=session, tag=state.job_tag,
-            )
-            return
-        if first == "PRAGMA":
-            df = await self._exec(session, state.job_tag, _pragma_df, session, stmt)
-            if df is not None:
-                await self._stream_df(
-                    df, "SELECT", writer, send_row_desc=send_row_desc,
-                    session=session, tag=state.job_tag,
-                )
-                return
-        if first == "EXPLAIN" and (m := _EXPLAIN_ANALYZE_RE.match(stmt)):
-            # intercepted BEFORE rewrite() (which maps the plain form to
-            # EXPLAIN EXTENDED): ANALYZE must actually run the query
-            df = await self._exec(
-                session, state.job_tag, _explain_analyze_df, session, m.group(1)
-            )
-            await self._stream_df(
-                df, "EXPLAIN", writer, send_row_desc=send_row_desc,
-                session=session, tag=state.job_tag,
-            )
-            return
         if first in ("UPDATE", "DELETE"):
             # Rewrite-on-write DML (no in-place mutation on v1 parquet
             # tables; the reference reaches DuckDB's DML via cpp:52).
@@ -2104,15 +2034,10 @@ class PgWireServer:
                         session, state.job_tag, delete_from, session, table, pred
                     )
             if returning is not None:
-                df = await self._exec(
+                return await self._exec(
                     session, state.job_tag, project_returning, session, aff,
                     returning,
                 )
-                await self._stream_df(
-                    df, stmt, writer, send_row_desc=send_row_desc,
-                    session=session, tag=state.job_tag,
-                )
-                return
             writer.write(P.command_complete(f"{first} {n}"))
             await writer.drain()
             return
@@ -2214,15 +2139,10 @@ class PgWireServer:
                         if spec.conflict is not None
                         else aff
                     )
-                    df = await self._exec(
+                    return await self._exec(
                         session, state.job_tag, project_returning, session,
                         ret_src, returning,
                     )
-                    await self._stream_df(
-                        df, stmt, writer, send_row_desc=send_row_desc,
-                        session=session, tag=state.job_tag,
-                    )
-                    return
                 n = await self._exec(session, state.job_tag, aff.count)
                 writer.write(P.command_complete(f"INSERT 0 {n}"))
                 await writer.drain()
@@ -2237,37 +2157,6 @@ class PgWireServer:
             writer.write(P.command_complete(f"MERGE {n}"))
             await writer.drain()
             return
-        if first == "UNPIVOT":
-            m = _match_unpivot_stmt(stmt)
-            if m is not None:
-                tbl, cols, name_col, val_col = m
-                if tbl.startswith("("):
-                    # rewrite the inner query through the full dialect
-                    # pipeline; alias for Spark's derived-table rule
-                    tbl = f"({rewrite(tbl[1:-1])}) __unpivot_src"
-                sql = (
-                    f"SELECT * FROM {tbl} UNPIVOT ({val_col} FOR {name_col} "
-                    f"IN ({cols}))"
-                )
-                df = await self._exec(session, state.job_tag, session.sql, sql)
-                await self._stream_df(
-                    df, "SELECT", writer, send_row_desc=send_row_desc,
-                    session=session, tag=state.job_tag,
-                )
-                return
-        if first == "PIVOT":
-            pivot_sql = await self._exec(
-                session, state.job_tag, _dynamic_pivot_sql, session, stmt
-            )
-            if pivot_sql is not None:
-                df = await self._exec(
-                    session, state.job_tag, session.sql, pivot_sql
-                )
-                await self._stream_df(
-                    df, "SELECT", writer, send_row_desc=send_row_desc,
-                    session=session, tag=state.job_tag,
-                )
-                return
         if first == "TRUNCATE":
             m = re.match(
                 r"^\s*TRUNCATE\s+(?:TABLE\s+)?([\w.]+)\s*;?\s*$", stmt, re.IGNORECASE
@@ -2440,45 +2329,6 @@ class PgWireServer:
                 writer.write(P.command_complete("CREATE TABLE"))
                 await writer.drain()
                 return
-        if first in ("SELECT", "WITH", "VALUES", "TABLE", "FROM") and (
-            _UNION_BY_NAME_RE.search(stmt)
-        ):
-            df = await self._exec(
-                session, state.job_tag, _union_by_name_df, session, stmt
-            )
-            if df is not None:
-                await self._stream_df(
-                    df, "SELECT", writer, send_row_desc=send_row_desc,
-                    session=session, tag=state.job_tag,
-                )
-                return
-        if first == "WITH" and _WITH_RECURSIVE_RE.match(stmt):
-            df = await self._exec(
-                session, state.job_tag, _recursive_union_df, session, stmt
-            )
-            if df is not None:
-                await self._stream_df(
-                    df, "SELECT", writer, send_row_desc=send_row_desc,
-                    session=session, tag=state.job_tag,
-                )
-                return
-        if first in ("SELECT", "WITH", "VALUES", "TABLE", "FROM") and (
-            mp := _limit_pct_match(stmt)
-        ):
-            base = rewrite(stmt[: mp.start()])
-            pct = float(mp.group(1))
-
-            def _pct_df(s=base, p=pct):
-                df = session.sql(_hugeint_sums(session, s))
-                k = int(df.count() * p / 100.0)  # DuckDB truncates (see _select_df)
-                return df.limit(k)
-
-            df = await self._exec(session, state.job_tag, _pct_df)
-            await self._stream_df(
-                df, "SELECT", writer, send_row_desc=send_row_desc,
-                session=session, tag=state.job_tag,
-            )
-            return
         stdout_copy = parse_copy_stdout(stmt)
         if stdout_copy is not None:
             inner, fmt, header = stdout_copy
@@ -2502,7 +2352,7 @@ class PgWireServer:
         if copy is not None:
             inner, path, fmt, header, compression, partition_by, extra = copy
             nrows = await self._exec(
-                session, state.job_tag, self._run_copy, rewrite(inner), path,
+                session, state.job_tag, self._run_copy, inner, path,
                 fmt, header, session, compression, partition_by, extra,
             )
             writer.write(P.command_complete(f"COPY {nrows}"))
@@ -2518,34 +2368,47 @@ class PgWireServer:
             writer.write(P.command_complete(f"COPY {nrows}"))
             await writer.drain()
             return
-        sql = rewrite(stmt)
         if first == "SET":
             # tolerate PG-style `SET k TO v` (session GUCs) that Spark's
             # SET parser rejects: ack as a no-op instead of erroring —
             # clients send these on connect. Spark-style SET k=v still
             # executes for real below.
             try:
-                await loop.run_in_executor(self._pool, session.sql, sql)
+                await loop.run_in_executor(self._pool, session.sql, rewrite(stmt))
             except Exception:  # noqa: BLE001
                 pass
             writer.write(P.command_complete("SET"))
             await writer.drain()
             return
-        if _PG_CATALOG_RE.search(sql):
-            await loop.run_in_executor(self._pool, _refresh_pg_catalog, session)
-        # "prepare": analysis only — schema is known before execution,
-        # exactly like conn.Prepare → GetNames/GetTypes (cpp:52,62-64).
-        df: DataFrame = (
-            pre_df
-            if pre_df is not None
-            else await self._exec(
-                session, state.job_tag,
-                lambda: session.sql(_hugeint_sums(session, sql)),
-            )
-        )
-        await self._stream_df(
-            df, stmt, writer, send_row_desc=send_row_desc,
-            session=session, tag=state.job_tag,
+        return await self._exec(session, state.job_tag, _planned, session, stmt)
+
+    def _fields(self, df: DataFrame) -> list:
+        """(position, field) of each column sent; in reference_compat
+        mode only the types the reference maps (SURVEY.md §1.2). Cells
+        are addressed by POSITION throughout: PySpark Row name lookup
+        returns the first matching field, so duplicate output names
+        (SELECT 1 AS a, 2 AS a) would silently repeat the first
+        column's value — and a by-name select is ambiguous the same
+        way."""
+        return [
+            (i, f)
+            for i, f in enumerate(df.schema.fields)
+            if not self.reference_compat or reference_visible(f.dataType)
+        ]
+
+    def _row_description(self, df: DataFrame, stmt: str, result_fmts: list[int]) -> bytes:
+        """RowDescription of a result, echoing the format codes of the
+        portal's Bind. BIT-emulated outputs advertise PG's bit OID 1560
+        (r14); positions come from the statement's select list and are
+        dropped on any count disagreement."""
+        fields = self._fields(df)
+        fmts = P.expand_formats(result_fmts, len(fields))
+        bit_oids = _bit_oids_for(stmt, len(df.schema.fields))
+        return P.row_description(
+            [
+                P.FieldDesc(f.name, bit_oids.get(i, pg_oid(f.dataType)), fmt=fmt)
+                for (i, f), fmt in zip(fields, fmts)
+            ]
         )
 
     async def _stream_df(
@@ -2553,65 +2416,64 @@ class PgWireServer:
         df: DataFrame,
         stmt: str,
         writer: asyncio.StreamWriter,
-        *,
-        send_row_desc: bool,
-        session: SparkSession | None = None,
+        session: SparkSession,
         tag: str = "",
+        *,
+        portal: _Portal | None = None,
+        maxrows: int = 0,
     ) -> None:
-        """Stream a DataFrame as [RowDescription +] DataRows +
-        CommandComplete (the extended protocol sends RowDescription only
-        from Describe, never from Execute)."""
-        df = _interval_lit_fold(df, stmt)
-        df = _ym_safe(df)
-        # Cells are addressed by POSITION throughout: PySpark Row name
-        # lookup returns the first matching field, so duplicate output
-        # names (SELECT 1 AS a, 2 AS a) would silently repeat the first
-        # column's value — and a by-name select is ambiguous the same way.
-        fields = [
-            (i, f.name, f.dataType)
-            for i, f in enumerate(df.schema.fields)
-            if not self.reference_compat or reference_visible(f.dataType)
-        ]
-        # text path; nested-array columns get the rectangularity-checked
-        # encoder so the wire never carries a literal inconsistent with
-        # the advertised array OID (ADVICE r8 item 1)
-        cells = [(i, text_cell_encoder(dt)) for i, _, dt in fields]
-        if send_row_desc:
-            # BIT-emulated outputs advertise PG's bit OID 1560 (r14);
-            # positions come from the original statement's select list
-            # and are dropped on any count disagreement
-            bit_oids = _bit_oids_for(stmt, len(df.schema.fields))
-            writer.write(
-                P.row_description(
-                    [
-                        P.FieldDesc(name, bit_oids.get(i, pg_oid(dt)))
-                        for i, name, dt in fields
-                    ]
-                )
-            )
-        # "execute": fetch per _fetch_iter, write DataRows in bounded
-        # batches — chunk-at-a-time like cpp:119-165.
-        sess = session or self.spark
-        nrows = 0
-        if fields:
-            it: Iterator = await self._exec(sess, tag, _fetch_iter, df)
-            while True:
-                batch = await self._exec(
-                    sess, tag, _next_batch, it, _BATCH_ROWS, cells
-                )
-                if not batch:
-                    break
-                for encoded in batch:
-                    writer.write(P.data_row(encoded))
-                nrows += len(batch)
+        """The one row sender of both protocols. A simple Query (no
+        portal) gets RowDescription + DataRows + CommandComplete; the
+        extended protocol sends RowDescription from Describe, and each
+        Execute sends up to ``maxrows`` rows (0: all) in the portal's
+        result formats, then PortalSuspended while rows remain, else
+        CommandComplete. The cursor — row iterator, cell encoders, rows
+        sent — lives on the portal across Execute messages, as in PG
+        (the JDBC setFetchSize path)."""
+        cur = portal or _Portal(stmt)
+        if cur.it is None:
+            fields = self._fields(df)
+            if portal is None:
+                writer.write(self._row_description(df, stmt, []))
+            if not fields:
+                # DDL/DML or a fully-dropped schema: run for effect, count rows
+                nrows = await self._exec(session, tag, _command_rows, df)
+                if self.reference_compat and df.schema.fields:
+                    nrows = 0
+                writer.write(P.command_complete(_command_tag(stmt, nrows)))
                 await writer.drain()
-        else:
-            # DDL/DML or a fully-dropped schema: run for effect, count rows
-            nrows = await self._exec(sess, tag, _command_rows, df)
-            if self.reference_compat and df.schema.fields:
-                nrows = 0
-        writer.write(P.command_complete(_command_tag(stmt, nrows)))
-        await writer.drain()
+                return
+            # text cells for format 0; nested-array columns get the
+            # rectangularity-checked encoder so the wire never carries a
+            # literal inconsistent with the advertised array OID (ADVICE
+            # r8 item 1)
+            cur.cells = _make_cells(
+                [(i, f.dataType) for i, f in fields], cur.result_fmts
+            )
+            # "execute": fetch per _fetch_iter, write DataRows in bounded
+            # batches — chunk-at-a-time like cpp:119-165.
+            cur.it = await self._exec(session, tag, _fetch_iter, df)
+            cur.sent = 0
+        n = 0
+        while True:
+            want = _BATCH_ROWS if maxrows <= 0 else min(_BATCH_ROWS, maxrows - n)
+            if want == 0:
+                cur.sent += n
+                writer.write(P.portal_suspended())
+                await writer.drain()
+                return
+            batch = await self._exec(
+                session, tag, _next_batch, cur.it, want, cur.cells
+            )
+            for encoded in batch:
+                writer.write(P.data_row(encoded))
+            n += len(batch)
+            await writer.drain()
+            if len(batch) < want:  # iterator exhausted
+                cur.it = None
+                writer.write(P.command_complete(_command_tag(stmt, cur.sent + n)))
+                await writer.drain()
+                return
 
 
     async def _copy_to_stdout(
@@ -2629,11 +2491,9 @@ class PgWireServer:
         import csv
         import io
 
-        df = await self._exec(
-            session, tag, lambda: session.sql(rewrite(inner_sql))
-        )
-        df = _interval_lit_fold(df, inner_sql)
-        df = _ym_safe(df)  # ym interval columns cannot collect (r14)
+        df = await self._exec(session, tag, _rows_df, session, inner_sql)
+        if df is None:
+            raise _WireError("COPY … TO STDOUT needs a query", "42601")
         fields = df.schema.fields
         ncols = len(fields)
         writer.write(P.copy_out_response(ncols))
@@ -2823,7 +2683,9 @@ class PgWireServer:
         the same directory scheme DuckDB emits); DELIMITER/QUOTE/
         ESCAPE/NULL/*FORMAT/FORCE_QUOTE * (r10) arrive as Spark writer
         options in ``extra``."""
-        df = (session or self.spark).sql(inner_sql)
+        df = _rows_df(session or self.spark, inner_sql)
+        if df is None:
+            raise _WireError("COPY … TO needs a query", "42601")
         n = df.count()
         writer = df.write.mode("overwrite")
         if compression:
@@ -4642,10 +4504,9 @@ def _attach_database(
 
     name = alias or (path.rsplit("/", 1)[-1].split(".")[0] or "db")
     name_l = name.lower()
-    exists = any(
-        d.name.lower() == name_l for d in session.catalog.listDatabases()
-    )
-    if exists:
+    # the session catalog, not catalog.listDatabases() (a Spark job;
+    # see _list_user_tables)
+    if session._jsparkSession.sessionState().catalog().databaseExists(name_l):
         if if_not_exists:
             return name
         # DuckDB: Binder Error: ... database with name "x" already exists
@@ -4763,7 +4624,7 @@ def _export_database(session: SparkSession, path: str, opts: str) -> int:
     schema_lines: list[str] = []
     load_lines: list[str] = []
     n = 0
-    for t in session.catalog.listTables():
+    for t in _list_user_tables(session):
         if (t.tableType or "").upper() not in ("EXTERNAL", "MANAGED"):
             continue  # views/temp fixtures are not export units
         df = session.table(t.name)
@@ -4813,8 +4674,9 @@ def _import_database(session: SparkSession, path: str) -> int:
 
 def _list_user_tables(session: SparkSession):
     """catalog.listTables() minus internal staging views (RETURNING
-    snapshots, UNION-BY-NAME tails, ...) — dunder-prefixed names are
-    engine plumbing and must not surface in SHOW TABLES / pg_catalog /
+    snapshots, UNION-BY-NAME tails, ...) and the pg_catalog emulation
+    views of _refresh_pg_catalog — dunder-prefixed names are engine
+    plumbing, and neither must surface in SHOW TABLES / pg_catalog /
     information_schema, where DuckDB shows only user objects.
 
     Read from the session catalog directly: catalog.listTables() runs
@@ -4831,6 +4693,8 @@ def _list_user_tables(session: SparkSession):
         if name.startswith("__"):
             continue
         if cat.isTempView(ident):
+            if _PG_VIEW_RE.fullmatch(name):
+                continue
             out.append(Table(name, None, [], None, "TEMPORARY", True))
         else:
             db = ident.database().get()
@@ -4918,11 +4782,15 @@ def _refresh_pg_catalog(session: SparkSession) -> None:
         _local_df(session, rows, ddl).createOrReplaceTempView(view)
 
 
+# the emulation views _refresh_pg_catalog registers (temp views)
+_PG_VIEWS = (
+    r"pg_(?:tables|views|namespace|class|type|database|roles|attribute"
+    r"|index|indexes|constraint|description|am|settings)"
+    r"|info_schema_(?:tables|columns)"
+)
+_PG_VIEW_RE = re.compile(_PG_VIEWS, re.IGNORECASE)
 _PG_CATALOG_RE = re.compile(
-    r"\bpg_(tables|views|namespace|class|type|database|roles|attribute"
-    r"|index|indexes|constraint|description|am|settings)\b"
-    r"|\binformation_schema\s*\.|\binfo_schema_(tables|columns)\b",
-    re.IGNORECASE,
+    rf"\b(?:{_PG_VIEWS})\b|\binformation_schema\s*\.", re.IGNORECASE
 )
 
 

@@ -166,6 +166,7 @@ class PgClient:
         result_binary: bool = False,
         result_formats: list[int] | None = None,
         raw_rows: bool = False,
+        maxrows: int = 0,
     ) -> dict:
         """One Parse/Bind/Describe/Execute/Sync cycle — the psycopg/JDBC
         default mode the simple-query path can't test. param_binary sends
@@ -173,7 +174,9 @@ class PgClient:
         result_binary requests binary result cells (raw_rows keeps them
         as bytes instead of utf-8 decoding); result_formats sends an
         EXPLICIT per-column format-code list instead of the broadcast
-        single code (PG Bind allows one code per output column)."""
+        single code (PG Bind allows one code per output column).
+        maxrows > 0 sends Execute(maxrows)+Flush again after each
+        PortalSuspended, and Sync once the portal completes or fails."""
         params = params or []
         oids = param_oids or []
         parse = b"\x00" + sql.encode() + b"\x00" + struct.pack("!H", len(oids))
@@ -199,12 +202,18 @@ class PgClient:
             bind += struct.pack("!H", 0)
         self._send_msg(b"B", bind)
         self._send_msg(b"D", b"P\x00")
-        self._send_msg(b"E", b"\x00" + struct.pack("!i", 0))
-        self._send_msg(b"S", b"")
+        execute = b"\x00" + struct.pack("!i", maxrows)
+        self._send_msg(b"E", execute)
+        self._send_msg(b"H" if maxrows > 0 else b"S", b"")
         out: dict = {"columns": [], "oids": [], "fmts": [], "rows": [], "events": []}
         while True:
             tag, body = self._read_msg()
             out["events"].append(tag.decode())
+            if maxrows > 0 and tag == b"s":  # PortalSuspended: page on
+                self._send_msg(b"E", execute)
+                self._send_msg(b"H", b"")
+            elif maxrows > 0 and tag in (b"C", b"E"):
+                self._send_msg(b"S", b"")
             if tag == b"T":
                 (nf,) = struct.unpack("!H", body[:2])
                 off = 2

@@ -3228,6 +3228,126 @@ def test_wire_extended_protocol_dialect_spellings(client):
     assert len(out["rows"]) == 2  # DuckDB truncates int(25 * 0.10)
 
 
+_UBN_SQL = (
+    "SELECT r_regionkey, r_name FROM region UNION ALL BY NAME "
+    "SELECT n_name AS r_name, n_nationkey AS k FROM nation WHERE n_nationkey < 3 "
+    "ORDER BY r_name, r_regionkey, k"
+)
+_PCT_SQL = "SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey LIMIT 40%"
+_COLUMNS_SQL = "SELECT COLUMNS('r_.*') FROM region WHERE r_regionkey < 3"
+
+# one statement per spelling that a simple Query and the extended
+# protocol must answer alike (each built by the server's one builder)
+_PARITY_SQL = {
+    "getvariable": "SELECT getvariable('parity_v') AS v",
+    "pragma_version": "PRAGMA version",
+    "pragma_show_tables": "PRAGMA show_tables",
+    "from_first": "FROM region SELECT r_name ORDER BY r_name LIMIT 2",
+    "unpivot": "UNPIVOT parity_wide ON a, b INTO NAME metric VALUE val",
+    "sql_execute": "EXECUTE parity_q(1)",
+    "union_by_name": _UBN_SQL,
+    "limit_percent": _PCT_SQL,
+    "with_recursive": (
+        "WITH RECURSIVE t(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM t "
+        "WHERE n < 5) SELECT n FROM t ORDER BY n"
+    ),
+    "describe": "DESCRIBE region",
+    "show_tables": "SHOW TABLES",
+}
+
+
+@pytest.fixture()
+def parity_setup(client):
+    for sql in (
+        "SET VARIABLE parity_v = 42",
+        "CREATE OR REPLACE TEMPORARY VIEW parity_wide AS "
+        "SELECT 1 AS id, 10.5 AS a, 20.5 AS b",
+        "PREPARE parity_q AS SELECT r_name FROM region WHERE r_regionkey = $1",
+    ):
+        (res,) = client.query(sql)
+        assert "error" not in res, res
+    yield client
+    client.query("DEALLOCATE parity_q")
+
+
+def _answer(res: dict) -> tuple:
+    return res["columns"], res["oids"], res["rows"], res["tag"]
+
+
+def _row_desc_first(events: list[str]) -> bool:
+    return "D" not in events or (
+        "T" in events and events.index("T") < events.index("D")
+    )
+
+
+@pytest.mark.parametrize("name", sorted(_PARITY_SQL))
+def test_wire_protocol_parity(parity_setup, name):
+    """A simple Query, Parse/Bind/Describe/Execute/Sync and Execute
+    with maxrows=2 answer the same columns, OIDs, rows and tag, and the
+    extended protocol's RowDescription (from Describe) precedes every
+    DataRow."""
+    client = parity_setup
+    sql = _PARITY_SQL[name]
+    (simple,) = client.query(sql)
+    assert "error" not in simple, simple
+    for maxrows in (0, 2):
+        ext = client.extended_query(sql, maxrows=maxrows)
+        assert "error" not in ext, (maxrows, ext)
+        assert _row_desc_first(ext["events"]), (maxrows, ext["events"])
+        assert _answer(ext) == _answer(simple), maxrows
+
+
+def test_wire_extended_nextval_allocates_once_per_bind(client):
+    """Describe plans a portal once and Execute sends that plan, so one
+    Bind allocates one value: extended runs answer consecutive values,
+    continuing the simple protocol's."""
+    (res,) = client.query("CREATE SEQUENCE parity_seq")
+    assert "error" not in res, res
+    try:
+        (res,) = client.query("SELECT nextval('parity_seq') AS v")
+        assert res["rows"] == [["1"]], res
+        for want in ("2", "3"):
+            ext = client.extended_query("SELECT nextval('parity_seq') AS v")
+            assert "error" not in ext, ext
+            assert ext["events"][:3] == ["1", "2", "T"], ext["events"]
+            assert (ext["columns"], ext["rows"], ext["tag"]) == (
+                ["v"], [[want]], "SELECT 1"
+            )
+        ext = client.extended_query("SELECT nextval('parity_seq') AS v", maxrows=2)
+        assert ext["rows"] == [["4"]], ext
+    finally:
+        client.query("DROP SEQUENCE parity_seq")
+
+
+@pytest.mark.parametrize("sql", [_UBN_SQL, _PCT_SQL, _COLUMNS_SQL])
+def test_wire_copy_to_stdout_builds_like_select(client, sql):
+    """COPY (<q>) TO STDOUT sends the rows <q> answers (the inner query
+    is built like any SELECT)."""
+    (res,) = client.query(sql)
+    assert "error" not in res, res
+    want = [["\\N" if v is None else v for v in row] for row in res["rows"]]
+    (out,) = client.query(f"COPY ({sql}) TO STDOUT")
+    assert "error" not in out, out
+    got = [ln.split("\t") for ln in out["copy_out"].decode().splitlines()]
+    assert got == want
+    assert out["tag"] == f"COPY {len(want)}"
+
+
+def test_wire_show_tables_skips_pg_catalog_views(client):
+    """SHOW TABLES and PRAGMA show_tables list user tables only, before
+    and after a pg_catalog query registers its emulation views."""
+    before = [client.query(s)[0]["rows"] for s in ("SHOW TABLES", "PRAGMA show_tables")]
+    (res,) = client.query(
+        "SELECT count(*) FROM pg_catalog.pg_class c "
+        "JOIN information_schema.columns i ON i.table_name = c.relname"
+    )
+    assert "error" not in res, res
+    after = [client.query(s)[0]["rows"] for s in ("SHOW TABLES", "PRAGMA show_tables")]
+    assert after == before
+    names = {r[0] for r in after[0]}
+    assert "region" in names and not names & {"pg_class", "info_schema_columns"}
+
+
 # ------------------------------------------------------------- ATTACH/DETACH
 
 

@@ -7,7 +7,12 @@ from the server as it was before driver-built relations became
 Arrow-backed and row-bounded plans were fetched with one ``collect()``,
 so the test pins that neither change moved a byte: RowDescription
 names and OIDs, DataRow bytes (text and binary format), portal
-suspension, COPY TO STDOUT framing and command tags.
+suspension, COPY TO STDOUT framing and command tags. The extended
+UNION BY NAME, LIMIT n%, WITH RECURSIVE and SHOW TABLES cases were
+captured before both protocols shared one statement path; that change
+moved only the tags of the two introspection portals (``DESCRIBE
+NATION`` and ``SHOW TABLES`` became ``SELECT <n>``, the simple
+protocol's tag).
 
 ``EXPLAIN ANALYZE`` prints wall-clock times, so only its row shape is
 kept: the RowDescription, the column count of each DataRow and the tag.
@@ -39,6 +44,18 @@ _LIMIT5 = (
     "SELECT o_orderkey, o_totalprice, o_orderdate, o_orderpriority FROM orders "
     "ORDER BY o_orderkey LIMIT 5"
 )
+# spellings Spark's parser cannot take whole, built on the driver side
+# of the statement path
+_UNION_BY_NAME = (
+    "SELECT r_regionkey, r_name FROM region UNION ALL BY NAME"
+    " SELECT n_name AS r_name, n_nationkey AS k FROM nation WHERE n_nationkey < 3"
+    " ORDER BY r_name, r_regionkey, k"
+)
+_LIMIT_PERCENT = "SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey LIMIT 40%"
+_WITH_RECURSIVE = (
+    "WITH RECURSIVE t(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM t WHERE n < 5)"
+    " SELECT n, n * n AS sq FROM t ORDER BY n"
+)
 
 # (case name, kind, sql); kinds: simple Query, "shape" (simple Query
 # keeping only the row shape), "maxrows2" (extended, Execute with
@@ -51,6 +68,7 @@ CASES = [
         "DESCRIBE SELECT n_nationkey, n_name, n_regionkey * 1.5 AS x FROM nation",
     ),
     ("show_tables", "simple", "SHOW TABLES"),
+    ("show_tables_maxrows2", "maxrows2", "SHOW TABLES"),
     ("show_databases", "simple", "SHOW DATABASES"),
     ("show_guc", "simple", "SHOW transaction_isolation"),
     ("pragma_version", "simple", "PRAGMA version"),
@@ -93,6 +111,11 @@ CASES = [
         "simple",
         f"COPY ({_LIMIT5}) TO STDOUT (FORMAT CSV, HEADER)",
     ),
+    ("union_by_name_maxrows2", "maxrows2", _UNION_BY_NAME),
+    ("union_by_name_binary", "binary", _UNION_BY_NAME),
+    ("limit_percent_maxrows2", "maxrows2", _LIMIT_PERCENT),
+    ("limit_percent_binary", "binary", _LIMIT_PERCENT),
+    ("with_recursive_maxrows2", "maxrows2", _WITH_RECURSIVE),
 ]
 
 
