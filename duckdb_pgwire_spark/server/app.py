@@ -17,19 +17,28 @@ pg_is_in_recovery / duckdb_pgwire UDFs (:206-12) registered in Spark catalog
 Simple and extended query protocols; text and binary result formats;
 COPY TO/FROM STDOUT/STDIN. Both protocols share one statement path,
 _run_statement: the text pre-pass, then _rows_df — the one builder of
-every row result — or a command, then one sender, _stream_df. Describe
-of a portal runs the pre-pass and _rows_df once and caches the
-DataFrame on the portal; Execute sends that DataFrame without planning
-the statement again. COPY … TO builds its inner query with _rows_df like
-any SELECT. Known gap: INSERT/UPDATE/DELETE … RETURNING answers NoData
-on Describe (its row shape needs the write planned), then sends its rows
-at Execute. Spark calls are blocking → they run on a
-thread-pool executor. Fetch rule: rows built on the driver (DESCRIBE,
-SHOW, PRAGMA, pg_catalog) are Arrow-backed local relations and run no
-Spark job; a result whose optimized plan bounds its rows at ≤1024 is
-fetched with one collect(); every other result streams partition by
-partition through toLocalIterator(). Either way rows reach the socket
-in bounded batches (the analogue of DataChunk-at-a-time).
+every row result — or _run_command, which returns a command tag, a
+DataFrame to send, or a COPY … STDIN/STDOUT descriptor; then one
+sender, _stream_df, for rows. Describe of a portal runs the pre-pass
+and _rows_df once and caches the DataFrame on the portal; Execute sends
+that DataFrame without planning the statement again. COPY … TO builds
+its inner query with _rows_df like any SELECT. Known gap: INSERT/
+UPDATE/DELETE … RETURNING answers NoData on Describe (its row shape
+needs the write planned), then sends its rows at Execute.
+
+Thread rule: Spark calls block, and so do the catalog lookups and the
+dialect rewrite. All Spark, catalog and rewrite work of a statement
+runs as one call on the worker pool, under the connection's Spark job
+tag (so a CancelRequest reaches it); the event loop does only protocol
+framing and COPY data transfer (fetching each batch of result rows,
+and the load at the end of COPY FROM STDIN, are further tagged pool
+calls). Fetch rule: rows built on the driver
+(DESCRIBE, SHOW, PRAGMA, pg_catalog) are Arrow-backed local relations
+and run no Spark job; a result whose optimized plan bounds its rows at
+≤1024 is fetched with one collect(); every other result streams
+partition by partition through toLocalIterator(). Either way rows
+reach the socket in bounded batches (the analogue of
+DataChunk-at-a-time).
 """
 
 from __future__ import annotations
@@ -43,6 +52,7 @@ import os
 import struct
 import threading
 from collections.abc import Iterator
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -160,6 +170,25 @@ class _Portal:
         self.it: Iterator | None = None
         self.cells: list | None = None  # (row index, encoder) per column
         self.sent = 0
+
+
+class _CopyIn(NamedTuple):
+    """COPY <table> FROM STDIN as the pool resolved it: the target, the
+    columns the rows carry (empty: all), and the table's schema."""
+
+    table: str
+    cols: list[str]
+    schema: StructType
+    fmt: str
+    header: bool
+
+
+class _CopyOut(NamedTuple):
+    """COPY <query> TO STDOUT: the query's DataFrame, built on the pool."""
+
+    df: DataFrame
+    fmt: str
+    header: bool
 
 
 class _ConnState:
@@ -1024,12 +1053,13 @@ def _rows_df(session: SparkSession, stmt: str) -> DataFrame | None:
     return _ym_safe(_interval_lit_fold(df, stmt))
 
 
-def _planned(session: SparkSession, stmt: str) -> DataFrame:
+def _planned(session: SparkSession, stmt: str, sql: str | None = None) -> DataFrame:
     """session.sql of the rewritten statement — the "prepare" step: the
     schema is known before execution, like conn.Prepare → GetNames/
-    GetTypes (cpp:52,62-64). The pg_catalog emulation views are rebuilt
-    first when the statement reads them."""
-    sql = rewrite(stmt)
+    GetTypes (cpp:52,62-64). ``sql`` is rewrite(stmt) when the caller
+    already has it. The pg_catalog emulation views are rebuilt first
+    when the statement reads them."""
+    sql = rewrite(stmt) if sql is None else sql
     if _PG_CATALOG_RE.search(sql):
         _refresh_pg_catalog(session)
     return session.sql(_hugeint_sums(session, sql))
@@ -1217,7 +1247,7 @@ class PgWireServer:
         self.catalog_dir = catalog_dir
         self._pool = concurrent.futures.ThreadPoolExecutor(max_workers=max_workers)
         self._server: asyncio.AbstractServer | None = None
-        self._writers: set[asyncio.StreamWriter] = set()
+        self._tasks: set[asyncio.Task] = set()  # one _handle task per client
         # CancelRequest routing: secret key (sent in BackendKeyData) →
         # Spark job tag of that connection's in-flight queries.
         self._cancel_tags: dict[int, str] = {}
@@ -1269,16 +1299,14 @@ class PgWireServer:
             catalog_persist.disable()
         if self._server is not None:
             self._server.close()
+        # End the connection tasks while the loop is still alive: each
+        # closes its own transport, which a task left pending past the
+        # loop's end would do on a closed loop ("Event loop is closed").
+        for task in self._tasks:
+            task.cancel()
+        await asyncio.gather(*self._tasks, return_exceptions=True)
+        if self._server is not None:
             await self._server.wait_closed()
-        # Close lingering client transports while the loop is still
-        # alive — otherwise their GC after loop shutdown raises
-        # "Event loop is closed" unraisables.
-        for w in list(self._writers):
-            w.close()
-            try:
-                await w.wait_closed()
-            except Exception:  # noqa: BLE001
-                pass
         self._pool.shutdown(wait=False, cancel_futures=True)
 
     # ------------------------------------------------------------ handshake
@@ -1286,7 +1314,8 @@ class PgWireServer:
     async def _handle(
         self, reader: asyncio.StreamReader, writer: asyncio.StreamWriter
     ) -> None:
-        self._writers.add(writer)
+        task = asyncio.current_task()
+        self._tasks.add(task)
         cancel_key: int | None = None
         try:
             cancel_key = await self._startup(reader, writer)
@@ -1314,7 +1343,7 @@ class PgWireServer:
         finally:
             if cancel_key is not None:
                 self._cancel_tags.pop(cancel_key, None)
-            self._writers.discard(writer)
+            self._tasks.discard(task)
             writer.close()
             try:
                 await writer.wait_closed()
@@ -1528,12 +1557,19 @@ class PgWireServer:
         portal: _Portal | None = None,
     ) -> None:
         """RowDescription, or NoData for a command. A portal's statement
-        takes the pre-pass and is planned by _rows_df here, once: the
-        DataFrame is cached on the portal and Execute sends it. Describe
-        of a statement plans a preview of its text with NULL parameters,
-        so it allocates no sequence values."""
-        sql = await self._prepass(sql, session, state, allocate=portal is not None)
-        df = await self._exec(session, state.job_tag, _rows_df, session, sql)
+        takes the pre-pass and is planned by _rows_df here, in one pool
+        call: the DataFrame is cached on the portal and Execute sends it.
+        Describe of a statement plans a preview of its text with NULL
+        parameters, so it allocates no sequence values, and answers an
+        EXPLAIN ANALYZE with its one text column without profiling it."""
+
+        def plan():
+            s = self._prepass(sql, session, state, allocate=portal is not None)
+            if portal is None and _EXPLAIN_ANALYZE_RE.match(s):
+                return s, _local_df(session, [], "explain_analyze string")
+            return s, _rows_df(session, s)
+
+        sql, df = await self._exec(session, state.job_tag, plan)
         if portal is not None:
             portal.sql, portal.df = sql, df
         if df is None:
@@ -1542,7 +1578,7 @@ class PgWireServer:
             fmts = portal.result_fmts if portal is not None else []
             writer.write(self._row_description(df, sql, fmts))
 
-    async def _prepass(
+    def _prepass(
         self,
         stmt: str,
         session: SparkSession,
@@ -1569,17 +1605,14 @@ class PgWireServer:
                 [a.strip() for a in split_top_level(m.group(2))] if m.group(2) else []
             )
             inner = _substitute_params(state.prepared[name], args)
-            return await self._prepass(inner, session, state, allocate=allocate)
+            return self._prepass(inner, session, state, allocate=allocate)
         if first == "PREPARE":
             return stmt
         if "pipeline" in stmt.lower():
             # pipeline('op') / pipeline_ops(): materialize registry
             # operators as temp views BEFORE dispatch
             try:
-                stmt = await self._exec(
-                    session, state.job_tag,
-                    _substitute_pipeline_fns, session, stmt,
-                )
+                stmt = _substitute_pipeline_fns(session, stmt)
             except ValueError as exc:
                 raise _WireError(str(exc), "42883") from exc
         low0 = stmt.lower()
@@ -1588,10 +1621,7 @@ class PgWireServer:
             # (CREATE VIEW/TABLE AS), COPY subqueries, and queries all
             # see the resolved view
             try:
-                stmt = await self._exec(
-                    session, state.job_tag,
-                    _substitute_csv_relations, session, stmt,
-                )
+                stmt = _substitute_csv_relations(session, stmt)
             except ValueError as exc:
                 # DuckDB reports sniff/open failures as IO Error
                 raise _WireError(str(exc), "58030") from exc
@@ -1599,8 +1629,7 @@ class PgWireServer:
             # nextval('s') / currval('s'): allocate BEFORE dispatch so
             # every downstream path (INSERT fast path, queries) sees
             # plain integer literals (or, for the per-row SELECT shape,
-            # a pre-reserved row_number block). The count probe runs on
-            # the pool thread like every Spark call.
+            # a pre-reserved row_number block).
             # DML-on-view: refuse BEFORE any block is reserved — a
             # reservation followed by the write-guard refusal would
             # leave currval advanced by a statement that never ran
@@ -1614,24 +1643,13 @@ class PgWireServer:
             elif first == "INSERT":
                 um = _INSERT_TARGET_RE.match(stmt)
             if um is not None:
-                from ..operators.dml import _assert_writable
-
-                try:
-                    await self._exec(
-                        session, state.job_tag, _assert_writable, session,
-                        _unquote_ident(um.group(1)),
-                    )
-                except ValueError as exc:
-                    raise _WireError(str(exc), "42809") from exc
+                _writable(session, _unquote_ident(um.group(1)))
 
             def _count(q: str) -> int:
                 return session.sql(rewrite(q)).first()[0]
 
             try:
-                stmt = await self._exec(
-                    session, state.job_tag,
-                    substitute_sequence_fns, stmt, _count,
-                )
+                stmt = substitute_sequence_fns(stmt, _count)
             except ValueError as exc:
                 raise _WireError(str(exc), "55000") from exc
         if "getvariable" in stmt.lower():
@@ -1659,46 +1677,72 @@ class PgWireServer:
         reader: asyncio.StreamReader | None = None,
     ) -> None:
         """The one statement path of both protocols, the reference's
-        conn.Prepare → Execute (cpp:52,97): the text pre-pass, then
-        _rows_df for a row-returning statement or _run_command for a
-        command, then one send. A simple Query passes no portal; an
+        conn.Prepare → Execute (cpp:52,97): one pool call under the
+        connection's job tag runs the text pre-pass, then _rows_df for a
+        row-returning statement or _run_command for a command; back on
+        the loop, one send — a command's CommandComplete (written here
+        and nowhere else), the socket side of COPY … FROM STDIN / TO
+        STDOUT, or the rows. A simple Query passes no portal; an
         extended Execute passes its portal, whose DataFrame — planned
         at Describe, or by an earlier Execute that stopped at
         ``maxrows`` — is sent without planning the statement again."""
         state = state or _ConnState()
-        df = portal.df if portal is not None else None
-        if df is None:
-            stmt = await self._prepass(stmt, session, state)
-            first = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
-            _note_statement_head(first)
-            df = await self._exec(session, state.job_tag, _rows_df, session, stmt)
-            if df is None:
-                df = await self._run_command(
-                    stmt, first, writer, session, state, reader
+        result = portal.df if portal is not None else None
+        if result is None:
+            stmt, result = await self._exec(
+                session, state.job_tag, self._plan, stmt, session, state
+            )
+            if isinstance(result, _CopyIn):
+                if reader is None:
+                    raise _WireError(
+                        "COPY FROM STDIN is only supported in the simple protocol",
+                        "0A000",
+                    )
+                n = await self._copy_from_stdin(
+                    result, reader, writer, session, state.job_tag
                 )
-                if df is None:
-                    return  # the command wrote its CommandComplete
-                df = _ym_safe(_interval_lit_fold(df, stmt))
+                result = f"COPY {n}"
+            elif isinstance(result, _CopyOut):
+                n = await self._copy_to_stdout(result, writer, session, state.job_tag)
+                result = f"COPY {n}"
+            if isinstance(result, str):
+                writer.write(P.command_complete(result))
+                await writer.drain()
+                return
             if portal is not None:
-                portal.df = df
+                portal.df = result
         await self._stream_df(
-            df, stmt, writer, session, state.job_tag, portal=portal, maxrows=maxrows
+            result, stmt, writer, session, state.job_tag, portal=portal, maxrows=maxrows
         )
 
-    async def _run_command(
+    def _plan(
+        self, stmt: str, session: SparkSession, state: _ConnState
+    ) -> tuple[str, str | DataFrame | _CopyIn | _CopyOut]:
+        """A statement's work on the worker pool: the pre-pass, then the
+        row result _rows_df builds or the result of _run_command."""
+        stmt = self._prepass(stmt, session, state)
+        first = stmt.lstrip().split(None, 1)[0].upper() if stmt.strip() else ""
+        _note_statement_head(first)
+        result = _rows_df(session, stmt)
+        if result is None:
+            result = self._run_command(stmt, first, session, state)
+            if isinstance(result, DataFrame):
+                result = _ym_safe(_interval_lit_fold(result, stmt))
+        return stmt, result
+
+    def _run_command(
         self,
         stmt: str,
         first: str,
-        writer: asyncio.StreamWriter,
         session: SparkSession,
         state: _ConnState,
-        reader: asyncio.StreamReader | None,
-    ) -> DataFrame | None:
-        """Run a statement that is not row-returning and write its
-        CommandComplete (None), or return the DataFrame _run_statement
-        sends: a RETURNING projection, or a command Spark runs itself
-        (its tag counts the rows it wrote)."""
-        loop = asyncio.get_running_loop()
+    ) -> str | DataFrame | _CopyIn | _CopyOut:
+        """Run a statement that is not row-returning, on the worker
+        pool, and return its result: a command tag; a DataFrame for
+        _run_statement to send — a RETURNING projection, or a command
+        Spark runs itself (its tag counts the rows it wrote); or the
+        descriptor of a COPY … FROM STDIN / TO STDOUT, whose data
+        transfer runs on the loop."""
         if first in self._TXN_TAGS:
             # PG clients autosend BEGIN/COMMIT (implicit transactions).
             # Spark has no transactions — every statement is autocommit —
@@ -1718,15 +1762,9 @@ class PgWireServer:
                     "applied (engine is autocommit-only)",
                     "0A000",
                 )
-            if tag == "BEGIN":
-                state.in_txn = True
-                state.wrote_in_txn = False
-            else:
-                state.in_txn = False
-                state.wrote_in_txn = False
-            writer.write(P.command_complete(tag))
-            await writer.drain()
-            return
+            state.in_txn = tag == "BEGIN"
+            state.wrote_in_txn = False
+            return tag
         if state.in_txn and first in _WRITE_WORDS:
             state.wrote_in_txn = True
         if first == "PREPARE":
@@ -1734,9 +1772,7 @@ class PgWireServer:
             if m is None:
                 raise _WireError("syntax error in PREPARE", "42601")
             state.prepared[m.group(1).lower()] = m.group(2).strip()
-            writer.write(P.command_complete("PREPARE"))
-            await writer.drain()
-            return
+            return "PREPARE"
         if first == "DEALLOCATE":
             m = _DEALLOC_RE.match(stmt)
             if m is None:
@@ -1746,25 +1782,19 @@ class PgWireServer:
                 state.prepared.clear()
             else:
                 state.prepared.pop(name, None)
-            writer.write(P.command_complete("DEALLOCATE"))
-            await writer.drain()
-            return
+            return "DEALLOCATE"
         if first == "CREATE" and (m := SEQ_DDL_RE.match(stmt)):
             try:
                 define_sequence(m.group(2), m.group(3) or "", bool(m.group(1)))
             except ValueError as exc:
                 raise _WireError(str(exc), "42P07") from exc
-            writer.write(P.command_complete("CREATE SEQUENCE"))
-            await writer.drain()
-            return
+            return "CREATE SEQUENCE"
         if first == "DROP" and (m := SEQ_DROP_RE.match(stmt)):
             try:
                 drop_sequence(m.group(2), bool(m.group(1)))
             except ValueError as exc:
                 raise _WireError(str(exc), "42704") from exc
-            writer.write(P.command_complete("DROP SEQUENCE"))
-            await writer.drain()
-            return
+            return "DROP SEQUENCE"
         if first == "CREATE" and (m := _CREATE_TYPE_RE.match(stmt)):
             from .compat import TYPE_ALIASES, resolve_type_text
 
@@ -1806,24 +1836,18 @@ class PgWireServer:
                     define_enum_type(name, members)
                 except ValueError as exc:
                     raise _WireError(str(exc), "42710") from exc
-                writer.write(P.command_complete("CREATE TYPE"))
-                await writer.drain()
-                return
+                return "CREATE TYPE"
             if re.match(r"^ENUM\b", body, re.IGNORECASE):
                 raise _WireError(
                     "CREATE TYPE ... AS ENUM requires a literal member "
                     "list: CREATE TYPE t AS ENUM ('a', 'b', ...)",
                     "42601",
                 )
-            TYPE_ALIASES[name.lower()] = await self._exec(
-                session, state.job_tag, resolve_type_text, body
-            )
+            TYPE_ALIASES[name.lower()] = resolve_type_text(body)
             from .compat import catalog_changed
 
             catalog_changed()
-            writer.write(P.command_complete("CREATE TYPE"))
-            await writer.drain()
-            return
+            return "CREATE TYPE"
         if first == "DROP" and (m := _DROP_TYPE_RE.match(stmt)):
             from .compat import ENUM_TYPES, TYPE_ALIASES, catalog_changed
 
@@ -1837,47 +1861,24 @@ class PgWireServer:
                     "42704",
                 )
             catalog_changed()
-            writer.write(P.command_complete("DROP TYPE"))
-            await writer.drain()
-            return
+            return "DROP TYPE"
         if first == "SET" and (m := SET_VAR_RE.match(stmt)):
             # DuckDB v1.1 SQL variables: value is a scalar evaluated NOW
-            row = await self._exec(
-                session, state.job_tag,
-                lambda e=m.group(2): session.sql(
-                    f"SELECT ({rewrite(e)}) AS v"
-                ).first(),
-            )
+            row = session.sql(f"SELECT ({rewrite(m.group(2))}) AS v").first()
             VARIABLES[m.group(1).lower()] = row["v"]
-            writer.write(P.command_complete("SET"))
-            await writer.drain()
-            return
+            return "SET"
         if first == "RESET" and (m := RESET_VAR_RE.match(stmt)):
             VARIABLES.pop(m.group(1).lower(), None)
-            writer.write(P.command_complete("RESET"))
-            await writer.drain()
-            return
+            return "RESET"
         if first == "CHECKPOINT":
             # DuckDB CHECKPOINT flushes the WAL; parquet tables have no
             # WAL — ack as a maintenance no-op (same policy as VACUUM)
-            writer.write(P.command_complete("CHECKPOINT"))
-            await writer.drain()
-            return
+            return "CHECKPOINT"
         if first == "EXPORT" and (m := _EXPORT_DB_RE.match(stmt)):
-            n = await self._exec(
-                session, state.job_tag, _export_database, session,
-                m.group(1), (m.group(2) or ""),
-            )
-            writer.write(P.command_complete(f"EXPORT DATABASE {n}"))
-            await writer.drain()
-            return
+            n = _export_database(session, m.group(1), m.group(2) or "")
+            return f"EXPORT DATABASE {n}"
         if first == "IMPORT" and (m := _IMPORT_DB_RE.match(stmt)):
-            n = await self._exec(
-                session, state.job_tag, _import_database, session, m.group(1)
-            )
-            writer.write(P.command_complete(f"IMPORT DATABASE {n}"))
-            await writer.drain()
-            return
+            return f"IMPORT DATABASE {_import_database(session, m.group(1))}"
         if first == "ATTACH":
             m = _ATTACH_RE.match(stmt)
             if m is None:
@@ -1888,31 +1889,24 @@ class PgWireServer:
                     "0A000",
                 )
             try:
-                await self._exec(
-                    session, state.job_tag, _attach_database, session,
-                    m.group(2), m.group(3), m.group(4) or "", bool(m.group(1)),
+                _attach_database(
+                    session, m.group(2), m.group(3), m.group(4) or "",
+                    bool(m.group(1)),
                 )
             except NotImplementedError as exc:
                 raise _WireError(str(exc), "0A000") from exc
             except ValueError as exc:
                 raise _WireError(str(exc), "42000") from exc
-            writer.write(P.command_complete("ATTACH"))
-            await writer.drain()
-            return
+            return "ATTACH"
         if first == "DETACH":
             m = _DETACH_RE.match(stmt)
             if m is None:
                 raise _WireError("syntax error in DETACH", "42601")
             try:
-                await self._exec(
-                    session, state.job_tag, _detach_database, session,
-                    m.group(2), bool(m.group(1)),
-                )
+                _detach_database(session, m.group(2), bool(m.group(1)))
             except ValueError as exc:
                 raise _WireError(str(exc), "42000") from exc
-            writer.write(P.command_complete("DETACH"))
-            await writer.drain()
-            return
+            return "DETACH"
         if first == "USE" and (m := _USE_RE.match(stmt)):
             # DuckDB USE db / USE db.schema (schema must be main — the
             # Spark namespace has no intermediate schema level)
@@ -1929,13 +1923,9 @@ class PgWireServer:
             db_l = db.lower()
             if db_l in _DEFAULT_DB_ALIASES and db_l not in ATTACHED:
                 db = "default"
-            await self._exec(
-                session, state.job_tag, session.sql, f"USE `{db}`"
-            )
+            session.sql(f"USE `{db}`")
             CURRENT_DB[0] = db.lower()
-            writer.write(P.command_complete("USE"))
-            await writer.drain()
-            return
+            return "USE"
         if first in ("CREATE", "DROP") and "MACRO" in stmt.upper():
             # DuckDB scalar macros (catalog-scope): calls are textually
             # inlined by compat.expand_macros at rewrite() time.
@@ -1950,17 +1940,13 @@ class PgWireServer:
                     define_macro(mm.group(2), mm.group(3), mm.group(5), bool(mm.group(1)))
                 except ValueError as exc:
                     raise _WireError(str(exc), "42723") from exc
-                writer.write(P.command_complete("CREATE MACRO"))
-                await writer.drain()
-                return
+                return "CREATE MACRO"
             if md := MACRO_DROP_RE.match(stmt):
                 try:
                     drop_macro(md.group(2), bool(md.group(1)))
                 except ValueError as exc:
                     raise _WireError(str(exc), "42883") from exc
-                writer.write(P.command_complete("DROP MACRO"))
-                await writer.drain()
-                return
+                return "DROP MACRO"
         if first in _WRITE_WORDS and ATTACHED:
             ro_target = _readonly_write_target(stmt)
             if ro_target is not None:
@@ -1996,55 +1982,31 @@ class PgWireServer:
                 if from_rel is not None:
                     # PG joined UPDATE: the snapshot serves both the
                     # count and RETURNING
-                    aff = await self._exec(
-                        session, state.job_tag, update_from, session, table,
-                        assignments, pred, from_rel,
-                    )
-                    if returning is None:
-                        n = await self._exec(session, state.job_tag, aff.count)
+                    aff = update_from(session, table, assignments, pred, from_rel)
+                    n = aff.count() if returning is None else None
                 elif returning is not None:
-                    aff = await self._exec(
-                        session, state.job_tag, update_returning, session,
-                        table, assignments, pred,
-                    )
+                    aff = update_returning(session, table, assignments, pred)
                 else:
-                    n = await self._exec(
-                        session, state.job_tag, update_table, session, table,
-                        assignments, pred,
-                    )
+                    n = update_table(session, table, assignments, pred)
             else:
                 parsed = parse_delete(sql)
                 if parsed is None:
                     raise _WireError("syntax error in DELETE", "42601")
                 table, pred, using_rel = parsed
                 if using_rel is not None:
-                    aff = await self._exec(
-                        session, state.job_tag, delete_using, session, table,
-                        pred, using_rel,
-                    )
-                    if returning is None:
-                        n = await self._exec(session, state.job_tag, aff.count)
+                    aff = delete_using(session, table, pred, using_rel)
+                    n = aff.count() if returning is None else None
                 elif returning is not None:
-                    aff = await self._exec(
-                        session, state.job_tag, delete_returning, session,
-                        table, pred,
-                    )
+                    aff = delete_returning(session, table, pred)
                 else:
-                    n = await self._exec(
-                        session, state.job_tag, delete_from, session, table, pred
-                    )
+                    n = delete_from(session, table, pred)
             if returning is not None:
-                return await self._exec(
-                    session, state.job_tag, project_returning, session, aff,
-                    returning,
-                )
-            writer.write(P.command_complete(f"{first} {n}"))
-            await writer.drain()
-            return
+                return project_returning(session, aff, returning)
+            return f"{first} {n}"
         if first == "INSERT":
             # INSERT … RETURNING / ON CONFLICT fast path (PG ORMs emit
             # RETURNING on every insert; the reference reaches DuckDB's
-            # via cpp:52). Plain INSERT falls through to Spark's own.
+            # via cpp:52). Plain INSERT is Spark's own.
             from ..operators.dml import (
                 insert_rows,
                 parse_insert,
@@ -2054,12 +2016,11 @@ class PgWireServer:
                 upsert_into,
             )
 
-            sql, returning = split_returning(
-                _dml_composite_ord(session, rewrite(stmt))
-            )
+            rewritten = rewrite(stmt)
+            sql, returning = split_returning(_dml_composite_ord(session, rewritten))
             spec = parse_insert(sql)
-            # never write THROUGH a view: the plain-INSERT fall-through
-            # runs spark.sql directly, and Spark appends into the files
+            # never write THROUGH a view: the plain INSERT runs
+            # spark.sql directly, and Spark appends into the files
             # behind a parquet-backed temp view (the read-only fixture
             # tables) — refuse up front like DuckDB does (r10)
             tgt = (
@@ -2072,91 +2033,48 @@ class PgWireServer:
                 )
             )
             if tgt is not None:
-                from ..operators.dml import _assert_writable
-
-                try:
-                    await self._exec(
-                        session, state.job_tag, _assert_writable, session,
-                        _unquote_ident(tgt),
-                    )
-                except ValueError as exc:
-                    raise _WireError(str(exc), "42809") from exc
-            needs_enum = False
-            if returning is None and spec is not None and not spec.conflict:
-                from .compat import ENUM_TYPES
-
-                if ENUM_TYPES:
-                    # the schema probe is a blocking catalog round-trip;
-                    # dispatch via _exec so the shared event loop never
-                    # stalls on it (advice r9)
-                    needs_enum = await self._exec(
-                        session, state.job_tag,
-                        _insert_needs_enum_coercion, session, spec.table,
-                    )
-            if needs_enum:
+                _writable(session, _unquote_ident(tgt))
+            if (
+                returning is None
+                and spec is not None
+                and not spec.conflict
+                and _insert_needs_enum_coercion(session, spec.table)
+            ):
                 # bare-string VALUES into an enum-emulation column:
                 # Spark's own INSERT can't implicit-cast STRING →
                 # STRUCT, so route through the staged path where
                 # _coerce_enum_value applies (DuckDB implicit-casts
                 # VARCHAR → enum)
-                staged = await self._exec(
-                    session, state.job_tag, stage_insert_rows, session,
-                    spec.table, spec.cols, spec.source_sql,
+                staged = stage_insert_rows(
+                    session, spec.table, spec.cols, spec.source_sql
                 )
-                n = await self._exec(
-                    session, state.job_tag, insert_rows, session, staged,
-                    spec.table,
+                return f"INSERT 0 {insert_rows(session, staged, spec.table)}"
+            if returning is None and (spec is None or not spec.conflict):
+                return _planned(session, stmt, rewritten)
+            if spec is None:
+                raise _WireError("unsupported INSERT form with RETURNING", "0A000")
+            staged = stage_insert_rows(session, spec.table, spec.cols, spec.source_sql)
+            if spec.conflict is not None:
+                aff = upsert_into(session, spec.table, staged, spec.conflict)
+            else:
+                insert_rows(session, staged, spec.table)
+                aff = staged.drop("__ins_ord")
+            if returning is not None:
+                # DuckDB quirk (golden-probed): ON CONFLICT … RETURNING
+                # yields the PROPOSED rows, not the affected post-image
+                # — match the delegated engine.
+                ret_src = (
+                    staged.drop("__ins_ord") if spec.conflict is not None else aff
                 )
-                writer.write(P.command_complete(f"INSERT 0 {n}"))
-                await writer.drain()
-                return
-            if returning is not None or (spec is not None and spec.conflict):
-                if spec is None:
-                    raise _WireError(
-                        "unsupported INSERT form with RETURNING", "0A000"
-                    )
-                staged = await self._exec(
-                    session, state.job_tag, stage_insert_rows, session,
-                    spec.table, spec.cols, spec.source_sql,
-                )
-                if spec.conflict is not None:
-                    aff = await self._exec(
-                        session, state.job_tag, upsert_into, session,
-                        spec.table, staged, spec.conflict,
-                    )
-                else:
-                    await self._exec(
-                        session, state.job_tag, insert_rows, session, staged,
-                        spec.table,
-                    )
-                    aff = staged.drop("__ins_ord")
-                if returning is not None:
-                    # DuckDB quirk (golden-probed): ON CONFLICT …
-                    # RETURNING yields the PROPOSED rows, not the
-                    # affected post-image — match the delegated engine.
-                    ret_src = (
-                        staged.drop("__ins_ord")
-                        if spec.conflict is not None
-                        else aff
-                    )
-                    return await self._exec(
-                        session, state.job_tag, project_returning, session,
-                        ret_src, returning,
-                    )
-                n = await self._exec(session, state.job_tag, aff.count)
-                writer.write(P.command_complete(f"INSERT 0 {n}"))
-                await writer.drain()
-                return
+                return project_returning(session, ret_src, returning)
+            return f"INSERT 0 {aff.count()}"
         if first == "MERGE":
             from ..operators.dml import merge_into, parse_merge
 
             spec = parse_merge(_dml_composite_ord(session, rewrite(stmt)))
             if spec is None:
                 raise _WireError("syntax error in MERGE", "42601")
-            n = await self._exec(session, state.job_tag, merge_into, session, spec)
-            writer.write(P.command_complete(f"MERGE {n}"))
-            await writer.drain()
-            return
+            return f"MERGE {merge_into(session, spec)}"
         if first == "TRUNCATE":
             m = re.match(
                 r"^\s*TRUNCATE\s+(?:TABLE\s+)?([\w.]+)\s*;?\s*$", stmt, re.IGNORECASE
@@ -2164,12 +2082,8 @@ class PgWireServer:
             if m is not None:
                 from ..operators.dml import truncate_table
 
-                await self._exec(
-                    session, state.job_tag, truncate_table, session, m.group(1)
-                )
-                writer.write(P.command_complete("TRUNCATE TABLE"))
-                await writer.drain()
-                return
+                truncate_table(session, m.group(1))
+                return "TRUNCATE TABLE"
         if first == "ALTER":
             # RENAME/DROP COLUMN need recreate-on-write (v1 parquet
             # tables can't mutate schema in place); ADD COLUMNS and
@@ -2182,13 +2096,8 @@ class PgWireServer:
             ):
                 from ..operators.dml import rename_column
 
-                await self._exec(
-                    session, state.job_tag, rename_column, session,
-                    m.group(1), m.group(2), m.group(3),
-                )
-                writer.write(P.command_complete("ALTER TABLE"))
-                await writer.drain()
-                return
+                rename_column(session, m.group(1), m.group(2), m.group(3))
+                return "ALTER TABLE"
             if m := re.match(
                 r"^\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+(?:COLUMN\s+)?"
                 r"(IF\s+EXISTS\s+)?(\w+)\s*;?\s*$",
@@ -2197,13 +2106,8 @@ class PgWireServer:
             ):
                 from ..operators.dml import drop_column
 
-                await self._exec(
-                    session, state.job_tag, drop_column, session,
-                    m.group(1), m.group(3), bool(m.group(2)),
-                )
-                writer.write(P.command_complete("ALTER TABLE"))
-                await writer.drain()
-                return
+                drop_column(session, m.group(1), m.group(3), bool(m.group(2)))
+                return "ALTER TABLE"
         if (first == "CREATE" and re.match(
             r"^\s*CREATE\s+(?:UNIQUE\s+)?INDEX\b", stmt, re.IGNORECASE
         )) or (first == "DROP" and re.match(
@@ -2214,15 +2118,11 @@ class PgWireServer:
             # engine detail, not a visible result) — ack as a no-op.
             # NOTE: a UNIQUE index's constraint is NOT enforced (the
             # PRIMARY KEY path is; documented delta).
-            writer.write(P.command_complete(f"{first} INDEX"))
-            await writer.drain()
-            return
+            return f"{first} INDEX"
         if first == "COMMENT":
             # COMMENT ON <obj> IS '...': Spark's only works on real
             # tables (fixtures are views) — ack as a metadata no-op.
-            writer.write(P.command_complete("COMMENT"))
-            await writer.drain()
-            return
+            return "COMMENT"
         if first in ("ANALYZE", "VACUUM"):
             # PG/DuckDB maintenance statements. ANALYZE <t> maps to real
             # Spark table statistics (CBO input); bare ANALYZE and VACUUM
@@ -2230,15 +2130,8 @@ class PgWireServer:
             # and erroring would break psql habits and cron scripts.
             m = re.match(r"^\s*ANALYZE\s+([\w.]+)\s*;?\s*$", stmt, re.IGNORECASE)
             if m:
-                await self._exec(
-                    session,
-                    state.job_tag,
-                    session.sql,
-                    f"ANALYZE TABLE {m.group(1)} COMPUTE STATISTICS",
-                )
-            writer.write(P.command_complete(first))
-            await writer.drain()
-            return
+                session.sql(f"ANALYZE TABLE {m.group(1)} COMPUTE STATISTICS")
+            return first
         if first == "CREATE" and "TABLE" in stmt.upper():
             # strip PG/DuckDB constraint syntax Spark's parser rejects;
             # the PRIMARY KEY moves into the dml registry so bare ON
@@ -2290,97 +2183,53 @@ class PgWireServer:
             # ever sees (reference client/go/cmd/simple/main.go:23
             # CREATEs on a fresh catalog unconditionally). Pre-clean
             # the orphan (r17, VERDICT item 1).
-            await self._exec(
-                session, state.job_tag, _clean_orphan_location, session, name
-            )
+            _clean_orphan_location(session, name)
             if temp and re.match(r"(?i)^\s*AS\b", rest):
                 # DuckDB TEMP TABLE AS: session-scoped — a Spark temp
                 # view is the session-scoped analogue (lazy; DML into
                 # it fails loudly, matching the view-ness honestly)
-                await self._exec(
-                    session, state.job_tag, session.sql,
-                    f"CREATE OR REPLACE TEMPORARY VIEW {name} "
-                    + rewrite(rest),
+                session.sql(
+                    f"CREATE OR REPLACE TEMPORARY VIEW {name} " + rewrite(rest)
                 )
-                writer.write(P.command_complete("CREATE TABLE"))
-                await writer.drain()
-                return
-            if or_replace:
+                return "CREATE TABLE"
+            if or_replace or temp:
                 # Spark's v1 catalog has no REPLACE TABLE AS SELECT —
-                # drop-then-create is the same visible state
-                await self._exec(
-                    session, state.job_tag, session.sql,
-                    f"DROP TABLE IF EXISTS {name}",
-                )
-                await self._exec(
-                    session, state.job_tag, session.sql,
-                    rewrite(f"CREATE TABLE {name} {rest}"),
-                )
-                writer.write(P.command_complete("CREATE TABLE"))
-                await writer.drain()
-                return
-            if temp:
-                # TEMP TABLE with a column list: approximated by a real
-                # table (documented session-scope delta)
-                await self._exec(
-                    session, state.job_tag, session.sql,
-                    rewrite(f"CREATE TABLE {name} {rest}"),
-                )
-                writer.write(P.command_complete("CREATE TABLE"))
-                await writer.drain()
-                return
+                # drop-then-create is the same visible state. A TEMP
+                # TABLE with a column list is approximated by a real
+                # table (documented session-scope delta).
+                if or_replace:
+                    session.sql(f"DROP TABLE IF EXISTS {name}")
+                session.sql(rewrite(f"CREATE TABLE {name} {rest}"))
+                return "CREATE TABLE"
         stdout_copy = parse_copy_stdout(stmt)
         if stdout_copy is not None:
             inner, fmt, header = stdout_copy
-            await self._copy_to_stdout(
-                inner, fmt, header, writer, session, state.job_tag
-            )
-            return
+            df = _rows_df(session, inner)
+            if df is None:
+                raise _WireError("COPY … TO STDOUT needs a query", "42601")
+            return _CopyOut(df, fmt, header)
         stdin_copy = parse_copy_stdin(stmt)
         if stdin_copy is not None:
-            if reader is None:
-                raise _WireError(
-                    "COPY FROM STDIN is only supported in the simple protocol",
-                    "0A000",
-                )
             table, cols, fmt, header = stdin_copy
-            await self._copy_from_stdin(
-                table, cols, fmt, header, reader, writer, session, state.job_tag
-            )
-            return
-        copy = parse_copy(stmt)
-        if copy is not None:
-            inner, path, fmt, header, compression, partition_by, extra = copy
-            nrows = await self._exec(
-                session, state.job_tag, self._run_copy, inner, path,
-                fmt, header, session, compression, partition_by, extra,
-            )
-            writer.write(P.command_complete(f"COPY {nrows}"))
-            await writer.drain()
-            return
-        copy_from = parse_copy_from(stmt)
-        if copy_from is not None:
-            table, path, fmt, header, extra = copy_from
-            nrows = await self._exec(
-                session, state.job_tag, self._run_copy_from, table, path,
-                fmt, header, session, extra,
-            )
-            writer.write(P.command_complete(f"COPY {nrows}"))
-            await writer.drain()
-            return
+            # refuse BEFORE CopyInResponse — never accept data bound for
+            # a view's source files (r10 write-through guard)
+            _writable(session, table)
+            return _CopyIn(table, cols, session.table(table).schema, fmt, header)
+        if (copy := parse_copy(stmt)) is not None:
+            return f"COPY {_copy_to_file(session, *copy)}"
+        if (copy_from := parse_copy_from(stmt)) is not None:
+            return f"COPY {_copy_from_file(session, *copy_from)}"
         if first == "SET":
             # tolerate PG-style `SET k TO v` (session GUCs) that Spark's
             # SET parser rejects: ack as a no-op instead of erroring —
             # clients send these on connect. Spark-style SET k=v still
-            # executes for real below.
+            # executes for real here.
             try:
-                await loop.run_in_executor(self._pool, session.sql, rewrite(stmt))
+                session.sql(rewrite(stmt))
             except Exception:  # noqa: BLE001
                 pass
-            writer.write(P.command_complete("SET"))
-            await writer.drain()
-            return
-        return await self._exec(session, state.job_tag, _planned, session, stmt)
+            return "SET"
+        return _planned(session, stmt)
 
     def _fields(self, df: DataFrame) -> list:
         """(position, field) of each column sent; in reference_compat
@@ -2475,46 +2324,35 @@ class PgWireServer:
                 await writer.drain()
                 return
 
-
     async def _copy_to_stdout(
         self,
-        inner_sql: str,
-        fmt: str,
-        header: bool,
+        copy: _CopyOut,
         writer: asyncio.StreamWriter,
         session: SparkSession,
         tag: str,
-    ) -> None:
-        """COPY ... TO STDOUT: CopyOutResponse + CopyData rows, fetched
-        per _fetch_iter in _BATCH_ROWS chunks — bounded memory at any
-        result size."""
+    ) -> int:
+        """COPY ... TO STDOUT: CopyOutResponse + CopyData rows of the
+        query the pool built, fetched per _fetch_iter in _BATCH_ROWS
+        chunks — bounded memory at any result size. Returns the row
+        count for the command tag."""
         import csv
         import io
 
-        df = await self._exec(session, tag, _rows_df, session, inner_sql)
-        if df is None:
-            raise _WireError("COPY … TO STDOUT needs a query", "42601")
-        fields = df.schema.fields
-        ncols = len(fields)
-        writer.write(P.copy_out_response(ncols))
+        fields = copy.df.schema.fields
+        writer.write(P.copy_out_response(len(fields)))
         await writer.drain()
-        is_csv = fmt == "csv"
-        it = await self._exec(session, tag, _fetch_iter, df)
-        nrows = 0
-        if is_csv and header:
+        is_csv = copy.fmt == "csv"
+        if is_csv and copy.header:
             buf = io.StringIO()
             csv.writer(buf).writerow([f.name for f in fields])
             writer.write(P.copy_data(buf.getvalue().encode()))
+        it = None
 
         def next_chunk():
-            rows = []
-            for _ in range(_BATCH_ROWS):
-                try:
-                    rows.append(next(it))
-                except StopIteration:
-                    break
-            if not rows:
-                return None, 0
+            nonlocal it
+            if it is None:
+                it = _fetch_iter(copy.df)
+            rows = list(itertools.islice(it, _BATCH_ROWS))
             buf = io.StringIO()
             if is_csv:
                 w = csv.writer(buf, lineterminator="\n")
@@ -2532,46 +2370,34 @@ class PgWireServer:
                     )
             return buf.getvalue().encode(), len(rows)
 
-        loop = asyncio.get_running_loop()
+        nrows = 0
         while True:
-            chunk, n = await loop.run_in_executor(self._pool, next_chunk)
-            if chunk is None:
+            chunk, n = await self._exec(session, tag, next_chunk)
+            if not n:
                 break
             writer.write(P.copy_data(chunk))
             nrows += n
             await writer.drain()
         writer.write(P.copy_done())
-        writer.write(P.command_complete(f"COPY {nrows}"))
-        await writer.drain()
+        return nrows
 
     async def _copy_from_stdin(
         self,
-        table: str,
-        cols: list[str],
-        fmt: str,
-        header: bool,
+        copy: _CopyIn,
         reader: asyncio.StreamReader,
         writer: asyncio.StreamWriter,
         session: SparkSession,
         tag: str,
-    ) -> None:
+    ) -> int:
         """COPY <table> FROM STDIN (psql \\copy): CopyInResponse, spool
         CopyData chunks to a temp file (no full in-memory buffering),
-        then one distributed Spark load + insertInto on CopyDone."""
+        then one distributed Spark load + insertInto on CopyDone.
+        Returns the row count for the command tag."""
         import tempfile
 
         from pyspark.sql import types as T
 
-        from ..operators.dml import _assert_writable
-
-        # refuse BEFORE CopyInResponse — never accept data bound for a
-        # view's source files (r10 write-through guard)
-        try:
-            await self._exec(session, tag, _assert_writable, session, table)
-        except ValueError as exc:
-            raise _WireError(str(exc), "42809") from exc
-        tgt = session.table(table)
-        target_cols = cols or tgt.columns
+        target_cols = copy.cols or copy.schema.names
         writer.write(P.copy_in_response(len(target_cols)))
         await writer.drain()
         tmp = tempfile.NamedTemporaryFile(
@@ -2598,30 +2424,24 @@ class PgWireServer:
             tmp.close()
 
             def load() -> int:
-                sub_schema = T.StructType(
-                    [tgt.schema[c] for c in target_cols]
-                )
-                r = session.read.schema(sub_schema)
-                if fmt == "csv":
-                    r = r.option("header", str(header).lower())
+                schema = copy.schema
+                r = session.read.schema(T.StructType([schema[c] for c in target_cols]))
+                if copy.fmt == "csv":
+                    r = r.option("header", str(copy.header).lower())
                 else:  # PG text format: tab-separated, \N nulls, no quoting
                     r = r.option("sep", "\t").option("nullValue", "\\N").option(
                         "quote", "\u0000"
                     )
                 df = r.csv(tmp.name)
-                for c in tgt.columns:
+                for c in schema.names:
                     if c not in target_cols:
-                        df = df.withColumn(
-                            c, F.lit(None).cast(tgt.schema[c].dataType)
-                        )
-                df = df.select(*tgt.columns)
+                        df = df.withColumn(c, F.lit(None).cast(schema[c].dataType))
+                df = df.select(*schema.names)
                 n = df.count()
-                df.write.mode("append").insertInto(table)
+                df.write.mode("append").insertInto(copy.table)
                 return n
 
-            nrows = await self._exec(session, tag, load)
-            writer.write(P.command_complete(f"COPY {nrows}"))
-            await writer.drain()
+            return await self._exec(session, tag, load)
         finally:
             tmp.close()
             try:
@@ -2629,78 +2449,77 @@ class PgWireServer:
             except OSError:
                 pass
 
-    def _run_copy_from(
-        self,
-        table: str,
-        path: str,
-        fmt: str,
-        header: bool = False,
-        session: SparkSession | None = None,
-        extra: dict | None = None,
-    ) -> int:
-        """COPY <table> FROM: distributed read with the target table's
-        declared schema (no inference — PG loads into a known table),
-        appended via insertInto. Reading is as parallel as the source
-        file layout; no driver-side row handling. CSV is headerless
-        unless the statement's HEADER option says otherwise (PG default);
-        DELIMITER/QUOTE/ESCAPE/NULL/*FORMAT options (r10) arrive as
-        Spark reader options in ``extra``."""
-        from ..operators.dml import _assert_writable
 
-        s = session or self.spark
-        _assert_writable(s, table)  # COPY FROM appends THROUGH views (r10)
-        tgt = s.table(table)
-        if fmt == "csv":
-            rd = s.read.schema(tgt.schema).option("header", str(header).lower())
-            for k, v in (extra or {}).items():
-                rd = rd.option(k, v)
-            df = rd.csv(path)
-        elif fmt == "json":
-            df = s.read.schema(tgt.schema).json(path)
-        else:
-            df = s.read.parquet(path)
-        df = df.select(*tgt.columns)
-        n = df.count()
-        df.write.mode("append").insertInto(table)
-        return n
+def _copy_from_file(
+    session: SparkSession,
+    table: str,
+    path: str,
+    fmt: str,
+    header: bool,
+    extra: dict,
+) -> int:
+    """COPY <table> FROM: distributed read with the target table's
+    declared schema (no inference — PG loads into a known table),
+    appended via insertInto. Reading is as parallel as the source
+    file layout; no driver-side row handling. CSV is headerless
+    unless the statement's HEADER option says otherwise (PG default);
+    DELIMITER/QUOTE/ESCAPE/NULL/*FORMAT options (r10) arrive as
+    Spark reader options in ``extra``."""
+    from ..operators.dml import _assert_writable
 
-    def _run_copy(
-        self,
-        inner_sql: str,
-        path: str,
-        fmt: str,
-        header: bool = False,
-        session: SparkSession | None = None,
-        compression: str | None = None,
-        partition_by: list[str] | None = None,
-        extra: dict | None = None,
-    ) -> int:
-        """COPY ... TO: DataFrameWriter is the Spark-native file sink
-        (distributed write — the path gets a directory of part files,
-        which is the scale-correct shape; single-file output would force
-        all data through one task). COMPRESSION maps to the writer's
-        codec option; PARTITION_BY to partitionBy (hive-style layout,
-        the same directory scheme DuckDB emits); DELIMITER/QUOTE/
-        ESCAPE/NULL/*FORMAT/FORCE_QUOTE * (r10) arrive as Spark writer
-        options in ``extra``."""
-        df = _rows_df(session or self.spark, inner_sql)
-        if df is None:
-            raise _WireError("COPY … TO needs a query", "42601")
-        n = df.count()
-        writer = df.write.mode("overwrite")
-        if compression:
-            writer = writer.option("compression", compression)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        for k, v in (extra or {}).items():
-            writer = writer.option(k, v)
-        if fmt == "csv":
-            writer.option("header", str(header).lower()).csv(path)
-        elif fmt == "json":
-            writer.json(path)
-        else:
-            writer.parquet(path)
-        return n
+    _assert_writable(session, table)  # COPY FROM appends THROUGH views (r10)
+    tgt = session.table(table)
+    if fmt == "csv":
+        rd = session.read.schema(tgt.schema).option("header", str(header).lower())
+        for k, v in extra.items():
+            rd = rd.option(k, v)
+        df = rd.csv(path)
+    elif fmt == "json":
+        df = session.read.schema(tgt.schema).json(path)
+    else:
+        df = session.read.parquet(path)
+    df = df.select(*tgt.columns)
+    n = df.count()
+    df.write.mode("append").insertInto(table)
+    return n
+
+
+def _copy_to_file(
+    session: SparkSession,
+    inner_sql: str,
+    path: str,
+    fmt: str,
+    header: bool,
+    compression: str | None,
+    partition_by: list[str] | None,
+    extra: dict,
+) -> int:
+    """COPY ... TO: DataFrameWriter is the Spark-native file sink
+    (distributed write — the path gets a directory of part files,
+    which is the scale-correct shape; single-file output would force
+    all data through one task). COMPRESSION maps to the writer's
+    codec option; PARTITION_BY to partitionBy (hive-style layout,
+    the same directory scheme DuckDB emits); DELIMITER/QUOTE/
+    ESCAPE/NULL/*FORMAT/FORCE_QUOTE * (r10) arrive as Spark writer
+    options in ``extra``."""
+    df = _rows_df(session, inner_sql)
+    if df is None:
+        raise _WireError("COPY … TO needs a query", "42601")
+    n = df.count()
+    writer = df.write.mode("overwrite")
+    if compression:
+        writer = writer.option("compression", compression)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    for k, v in extra.items():
+        writer = writer.option(k, v)
+    if fmt == "csv":
+        writer.option("header", str(header).lower()).csv(path)
+    elif fmt == "json":
+        writer.json(path)
+    else:
+        writer.parquet(path)
+    return n
 
 
 def _sqlstate(exc: Exception) -> str:
@@ -5228,6 +5047,16 @@ def _next_batch(it: Iterator, n: int, cells: list) -> list[list[bytes | None]]:
 
 
 from .compat import enum_emulation_type as _enum_emulation_type  # noqa: E402
+
+
+def _writable(session: SparkSession, table: str) -> None:
+    """Refuse a write through a view (42809), as DuckDB does."""
+    from ..operators.dml import _assert_writable
+
+    try:
+        _assert_writable(session, table)
+    except ValueError as exc:
+        raise _WireError(str(exc), "42809") from exc
 
 
 def _insert_needs_enum_coercion(session: SparkSession, table: str) -> bool:

@@ -1,6 +1,15 @@
-"""Drive /root/repo/__spark_entry__.py the way the driver does."""
-import json, sys, hashlib
-sys.path.insert(0, "/root/repo")
+"""Drive the repo's __spark_entry__.py the way the driver does.
+
+Runs from any directory: ``python scripts/drive_contract.py [name ...]``.
+"""
+import json, os, sys, hashlib
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers are processes of their own: they find the
+# package through PYTHONPATH, which must be set before the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 import duckdb
 import __spark_entry__ as e
 from pyspark.sql import SparkSession

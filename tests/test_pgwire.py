@@ -193,11 +193,53 @@ def test_split_statements():
 # ------------------------------------------------------------- E2E over socket
 
 
+def _pgwire_client_module():
+    import importlib.util
+    from pathlib import Path
+
+    spec = importlib.util.spec_from_file_location(
+        "pgwire_client", Path(__file__).parent.parent / "scripts" / "pgwire_client.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _serve_in_thread(server):
+    """Run ``server`` on an ephemeral port on its own event loop in a
+    daemon thread. Returns (port, stop): stop() ends the server while
+    its loop still runs, then stops, joins and closes the loop."""
+    loop = asyncio.new_event_loop()
+    started = threading.Event()
+    holder: dict[str, int] = {}
+
+    async def run():
+        await server.start()
+        holder["port"] = server._server.sockets[0].getsockname()[1]
+        started.set()
+
+    def thread_main():
+        asyncio.set_event_loop(loop)
+        loop.run_until_complete(run())
+        loop.run_forever()  # connections served until loop.stop()
+
+    t = threading.Thread(target=thread_main, daemon=True)
+    t.start()
+    assert started.wait(30)
+
+    def stop():
+        asyncio.run_coroutine_threadsafe(server.stop(), loop).result(10)
+        loop.call_soon_threadsafe(loop.stop)
+        t.join(10)
+        loop.close()
+
+    return holder["port"], stop
+
+
 @pytest.fixture(scope="module")
 def wire_server(spark, tmp_path_factory):
-    """Run PgWireServer on an ephemeral port in a daemon thread (with a
-    throwaway persistent-catalog dir, so every wire test also exercises
-    the sidecar save path)."""
+    """Run PgWireServer in-process (with a throwaway persistent-catalog
+    dir, so every wire test also exercises the sidecar save path)."""
     from duckdb_pgwire_spark.functions.udfs import register_udfs
     from duckdb_pgwire_spark.server.app import PgWireServer
     from duckdb_pgwire_spark.session import register_views
@@ -210,41 +252,14 @@ def wire_server(spark, tmp_path_factory):
         port=0,
         catalog_dir=str(tmp_path_factory.mktemp("pgwire_catalog")),
     )
-    loop = asyncio.new_event_loop()
-    started = threading.Event()
-    port_holder: dict[str, int] = {}
-
-    async def run():
-        await server.start()
-        port_holder["port"] = server._server.sockets[0].getsockname()[1]
-        started.set()
-
-    def thread_main():
-        asyncio.set_event_loop(loop)
-        loop.run_until_complete(run())
-        loop.run_forever()  # connections served until loop.stop()
-
-    t = threading.Thread(target=thread_main, daemon=True)
-    t.start()
-    assert started.wait(30)
-    yield port_holder["port"]
-    # orderly shutdown INSIDE the loop's lifetime (closes lingering
-    # transports; avoids "Event loop is closed" unraisables at GC)
-    asyncio.run_coroutine_threadsafe(server.stop(), loop).result(10)
-    loop.call_soon_threadsafe(loop.stop)
+    port, stop = _serve_in_thread(server)
+    yield port
+    stop()
 
 
 @pytest.fixture()
 def client(wire_server):
-    import importlib.util
-    from pathlib import Path
-
-    spec = importlib.util.spec_from_file_location(
-        "pgwire_client", Path(__file__).parent.parent / "scripts" / "pgwire_client.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    c = mod.PgClient(port=wire_server)
+    c = _pgwire_client_module().PgClient(port=wire_server)
     yield c
     c.close()
 
@@ -947,42 +962,21 @@ def test_isolated_sessions_temp_views(spark):
     spark.newSession(): a temp view created on connection A must not
     resolve on connection B, while catalog tables stay shared — the
     reference's fresh-Connection-on-shared-instance model (cpp:42)."""
-    import importlib.util
-    from pathlib import Path
-
     from duckdb_pgwire_spark.server.app import PgWireServer
     from duckdb_pgwire_spark.session import register_views
 
-    server = PgWireServer(
-        spark,
-        host="127.0.0.1",
-        port=0,
-        isolate_sessions=True,
-        session_setup=lambda s: register_views(s, SF_DIR),
+    port, stop = _serve_in_thread(
+        PgWireServer(
+            spark,
+            host="127.0.0.1",
+            port=0,
+            isolate_sessions=True,
+            session_setup=lambda s: register_views(s, SF_DIR),
+        )
     )
-    loop = asyncio.new_event_loop()
-    started = threading.Event()
-    holder: dict[str, int] = {}
-
-    async def run():
-        await server.start()
-        holder["port"] = server._server.sockets[0].getsockname()[1]
-        started.set()
-
-    def tmain():
-        asyncio.set_event_loop(loop)
-        loop.run_until_complete(run())
-        loop.run_forever()
-
-    threading.Thread(target=tmain, daemon=True).start()
-    assert started.wait(30)
-    spec = importlib.util.spec_from_file_location(
-        "pgwire_client2", Path(__file__).parent.parent / "scripts" / "pgwire_client.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    a = mod.PgClient(port=holder["port"])
-    b = mod.PgClient(port=holder["port"])
+    mod = _pgwire_client_module()
+    a = mod.PgClient(port=port)
+    b = mod.PgClient(port=port)
     try:
         (r,) = a.query("CREATE TEMP VIEW conn_a_private AS SELECT 42 AS v")
         assert "error" not in r, r
@@ -996,7 +990,29 @@ def test_isolated_sessions_temp_views(spark):
     finally:
         a.close()
         b.close()
-        loop.call_soon_threadsafe(loop.stop)
+        stop()
+
+
+def test_server_stop_with_open_connection_leaves_no_unraisable(spark, monkeypatch):
+    """stop() ends the connection tasks it started while the loop still
+    runs, so closing the loop afterwards leaves no task to close its
+    transport on a closed loop ("Event loop is closed")."""
+    import gc
+    import sys
+
+    from duckdb_pgwire_spark.server.app import PgWireServer
+
+    seen = []
+    monkeypatch.setattr(sys, "unraisablehook", seen.append)
+    port, stop = _serve_in_thread(PgWireServer(spark, host="127.0.0.1", port=0))
+    c = _pgwire_client_module().PgClient(port=port)
+    (r,) = c.query("SELECT 1 AS one")
+    assert r["rows"] == [["1"]], r
+    stop()  # the connection is still open
+    gc.collect()
+    c.close()
+    gc.collect()
+    assert [(u.exc_value, u.object) for u in seen] == []
 
 
 def test_catalog_persists_across_server_restart(spark, tmp_path):
@@ -1008,45 +1024,16 @@ def test_catalog_persists_across_server_restart(spark, tmp_path):
     cast support). The restart is simulated by clearing the process
     dicts between two servers sharing one catalog directory."""
     import copy
-    import importlib.util
-    from pathlib import Path
 
     from duckdb_pgwire_spark.server import compat
     from duckdb_pgwire_spark.server.app import PgWireServer
 
-    spec = importlib.util.spec_from_file_location(
-        "pgwire_client3",
-        Path(__file__).parent.parent / "scripts" / "pgwire_client.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _pgwire_client_module()
 
     def run_server():
-        server = PgWireServer(
-            spark, host="127.0.0.1", port=0, catalog_dir=str(tmp_path)
+        return _serve_in_thread(
+            PgWireServer(spark, host="127.0.0.1", port=0, catalog_dir=str(tmp_path))
         )
-        loop = asyncio.new_event_loop()
-        started = threading.Event()
-        holder: dict[str, int] = {}
-
-        async def run():
-            await server.start()
-            holder["port"] = server._server.sockets[0].getsockname()[1]
-            started.set()
-
-        def tmain():
-            asyncio.set_event_loop(loop)
-            loop.run_until_complete(run())
-            loop.run_forever()
-
-        threading.Thread(target=tmain, daemon=True).start()
-        assert started.wait(30)
-
-        def stop():
-            asyncio.run_coroutine_threadsafe(server.stop(), loop).result(10)
-            loop.call_soon_threadsafe(loop.stop)
-
-        return holder["port"], stop
 
     dicts = (compat.ENUM_TYPES, compat.TYPE_ALIASES, compat.MACROS, compat.SEQUENCES)
     snapshot = [copy.deepcopy(d) for d in dicts]
@@ -2232,6 +2219,155 @@ def test_wire_driver_built_results_start_no_spark_job(client, spark):
     ):
         assert jobs(sql) == 0, sql
     assert jobs("SELECT count(*) FROM nation") == 2
+
+
+def test_wire_statement_work_stays_off_the_event_loop(client, spark, monkeypatch):
+    """Spark planning, catalog lookups and the dialect rewrite of a
+    statement run on the worker pool: SparkSession.sql,
+    SparkSession.table and app.rewrite are never called on a thread
+    that runs an event loop, so the loop stays free for other
+    connections and for CancelRequest."""
+    from duckdb_pgwire_spark.server import app
+
+    on_loop: list[str] = []
+
+    def guard(name, fn):
+        def wrapped(*a, **k):
+            try:
+                asyncio.get_running_loop()
+            except RuntimeError:
+                pass
+            else:
+                on_loop.append(name)
+            return fn(*a, **k)
+
+        return wrapped
+
+    cls = type(spark)
+    for t in ("loopchk", "loopsrc"):
+        _fresh_wire_table(spark, t)
+    monkeypatch.setattr(cls, "sql", guard("SparkSession.sql", cls.sql))
+    monkeypatch.setattr(cls, "table", guard("SparkSession.table", cls.table))
+    monkeypatch.setattr(app, "rewrite", guard("rewrite", app.rewrite))
+    seen = {}
+
+    def run(sql, copy_data=None):
+        on_loop.clear()
+        out = client.query(sql) if copy_data is None else client.copy_in(sql, copy_data)
+        assert all("error" not in r for r in out), (sql, out)
+        seen[sql] = sorted(set(on_loop))
+
+    try:
+        for sql in (
+            "CREATE TABLE loopchk(id int, v string)",
+            "CREATE TABLE loopsrc(id int, v string)",
+            "INSERT INTO loopsrc VALUES (1, 'q'), (4, 'r')",
+            "INSERT INTO loopchk VALUES (1, 'a'), (2, 'b'), (3, 'c')",
+            "INSERT INTO loopchk VALUES (5, 'e') RETURNING id",
+            "INSERT INTO loopchk VALUES (1, 'z') ON CONFLICT (id) DO NOTHING",
+            "UPDATE loopchk SET v = 'x' WHERE id = 1",
+            "UPDATE loopchk SET v = 'y' WHERE id = 2 RETURNING v",
+            "DELETE FROM loopchk WHERE id = 3",
+            "DELETE FROM loopchk WHERE id = 5 RETURNING id",
+            "UPDATE loopchk SET v = loopsrc.v FROM loopsrc "
+            "WHERE loopchk.id = loopsrc.id",
+            "DELETE FROM loopchk USING loopsrc "
+            "WHERE loopchk.id = loopsrc.id AND loopsrc.v = 'q'",
+            "MERGE INTO loopchk t USING loopsrc s ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET v = s.v "
+            "WHEN NOT MATCHED THEN INSERT VALUES (s.id, s.v)",
+            "COPY loopchk TO STDOUT",
+            "CREATE TYPE loop_mood AS ENUM ('lo', 'hi')",
+            "SET VARIABLE loop_var = 40 + 2",
+            "SET search_path TO public",
+            "ATTACH ':memory:' AS loop_mem",
+            "SELECT count(*) AS n FROM loopchk",
+        ):
+            run(sql)
+        run("COPY loopchk FROM STDIN (FORMAT CSV)", b"7,g\n8,h\n")
+        assert {sql: names for sql, names in seen.items() if names} == {}
+    finally:
+        for sql in (
+            "DETACH loop_mem", "RESET VARIABLE loop_var", "DROP TYPE loop_mood",
+        ):
+            client.query(sql)
+        for t in ("loopchk", "loopsrc"):
+            _fresh_wire_table(spark, t)
+
+
+def test_wire_plain_insert_rewrites_once(client, spark, monkeypatch):
+    """A plain INSERT takes one rewrite(): the text the INSERT branch
+    rewrote for its parse is the text Spark runs, unchanged."""
+    from duckdb_pgwire_spark.server import app
+
+    calls: list[str] = []
+    ran: list[str] = []
+    orig, cls = app.rewrite, type(spark)
+    orig_sql = cls.sql
+
+    def counting(sql, *a, **k):
+        calls.append(sql)
+        return orig(sql, *a, **k)
+
+    def recording(self, sql, *a, **k):
+        ran.append(sql)
+        return orig_sql(self, sql, *a, **k)
+
+    _fresh_wire_table(spark, "rw_once")
+    (res,) = client.query("CREATE TABLE rw_once(id int, v string)")
+    assert "error" not in res, res
+    stmts = (
+        ("INSERT INTO rw_once VALUES (1, 'a'), (2, 'b')", "INSERT 0 2"),
+        (
+            "INSERT INTO rw_once SELECT n_nationkey, n_name FROM nation "
+            "WHERE n_regionkey = 1",
+            "INSERT 0 5",
+        ),
+    )
+    expected = [app._hugeint_sums(spark, orig(sql)) for sql, _ in stmts]
+    monkeypatch.setattr(app, "rewrite", counting)
+    monkeypatch.setattr(cls, "sql", recording)
+    for (sql, tag), spark_sql in zip(stmts, expected):
+        calls.clear()
+        ran.clear()
+        (res,) = client.query(sql)
+        assert res.get("tag") == tag, res
+        assert calls == [sql], calls
+        assert spark_sql in ran, ran
+    monkeypatch.undo()
+    (res,) = client.query("SELECT count(*) FROM rw_once")
+    assert res["rows"] == [["7"]], res
+    _fresh_wire_table(spark, "rw_once")
+
+
+def test_wire_describe_statement_of_explain_analyze_runs_nothing(client, spark):
+    """Describe('S') of an EXPLAIN ANALYZE answers its one text column
+    without profiling the query: no Spark job under the connection's
+    tag before Bind and Execute."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    tag = f"pgwire-conn-{client.backend_key[1]}"
+    before = set(tracker.getJobIdsForTag(tag))
+    sql = "EXPLAIN ANALYZE SELECT count(*) FROM orders"
+    client._send_msg(b"P", b"ea\x00" + sql.encode() + b"\x00" + struct.pack("!H", 0))
+    client._send_msg(b"D", b"Sea\x00")
+    client._send_msg(b"S", b"")
+    events, columns, oids = [], [], []
+    while True:
+        mtag, body = client._read_msg()
+        events.append(mtag)
+        if mtag == b"T":
+            (nf,) = struct.unpack("!H", body[:2])
+            off = 2
+            for _ in range(nf):
+                end = body.index(b"\x00", off)
+                columns.append(body[off:end].decode())
+                oids.append(struct.unpack("!I", body[end + 7 : end + 11])[0])
+                off = end + 19
+        if mtag == b"Z":
+            break
+    assert events == [b"1", b"t", b"T", b"Z"], events
+    assert (columns, oids) == (["explain_analyze"], [25])
+    assert set(tracker.getJobIdsForTag(tag)) - before == set()
 
 
 def test_wire_update_delete_returning(client, spark):
