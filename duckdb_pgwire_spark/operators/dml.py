@@ -3,31 +3,37 @@
 The reference executes UPDATE/DELETE by delegation — any DML string a PG
 client sends reaches DuckDB's executor through ``conn.Prepare(query)``
 (``/root/reference/src/duckdb_pgwire_extension.cpp:52``). Spark's v1
-parquet catalog tables have no in-place mutation, so the engine applies
-the standard rewrite-on-write recipe:
+parquet catalog tables have no in-place mutation, so where DuckDB runs
+one plan per statement the engine rewrites the table, in one Spark job:
 
-    1. build the post-image as a SELECT (CASE WHEN for UPDATE, an
-       inverted WHERE for DELETE),
-    2. materialize it to a staging table (distributed CTAS — never
-       through the driver),
-    3. INSERT OVERWRITE the target from the stage, drop the stage.
+    1. build the post-image as a DataFrame over the pre-image scan
+       (CASE WHEN for UPDATE, an inverted filter for DELETE), with the
+       affected-row count observed on that scan (``DataFrame.observe``);
+    2. write it once, through Spark's insert path, into a ``_``-prefixed
+       staging directory inside the table's own location (Spark's file
+       listing skips such directories);
+    3. swap: delete the old data files, rename the staged files into the
+       location, ``REFRESH TABLE``.
 
-Two full-table writes per statement is the scale-correct shape for an
-append-only storage format; a transactional table format (Delta/Iceberg)
-would replace step 2-3 with a metadata swap, not change this API.
+The catalog entry and the location never change, for managed and
+external tables alike. A transactional table format (Delta/Iceberg)
+would make step 3 a metadata commit, not change this API.
 
-Affected-row counts match PG semantics: rows matching WHERE (UPDATE) /
-rows removed (DELETE).
+Affected-row counts match PG semantics: rows whose pre-image matches
+WHERE (UPDATE) / rows removed (DELETE).
 """
 
 from __future__ import annotations
 
+import atexit
 import re
+import shutil
 import tempfile
+import uuid
 from collections import deque
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -155,22 +161,105 @@ def _assert_writable(session: SparkSession, table: str) -> None:
         )
 
 
-def _rewrite_table(session: SparkSession, table: str, post_image_sql: str) -> None:
-    """Materialize the post-image and swap it in (stage CTAS +
-    INSERT OVERWRITE — Spark refuses to overwrite a table from a plan
-    that reads the same table, so the stage hop is mandatory)."""
+def _rewrite_table(
+    session: SparkSession,
+    table: str,
+    post_image: str | DataFrame,
+    counts: Observation | None = None,
+) -> dict:
+    """Replace the rows of ``table`` with ``post_image`` (SQL text or a
+    DataFrame over the table itself) in one Spark job that writes once.
+
+    The post-image goes through Spark's insert path (store-assignment
+    casts, the table's provider and storage options) into a staging
+    table created ``LIKE`` the target, whose location is a ``_``-prefixed
+    directory inside the target's location. After the write, the old
+    data files are deleted and the staged ones renamed into the location
+    with the Hadoop FileSystem API (local and non-local warehouses
+    alike), and the table is refreshed (a partitioned table's catalog
+    partitions synced first). The catalog entry and the location never
+    change. A failed write leaves the table untouched; the staging
+    table is removed either way, and the staging directory unless the
+    swap broke off half done (it then holds the only copy of the new
+    rows). Returns the metrics of
+    ``counts``, an Observation attached to the post-image, read before
+    the swap."""
     _assert_writable(session, table)
-    stage = f"__dml_stage_{table.replace('.', '_')}"
-    session.sql(f"DROP TABLE IF EXISTS {stage}")
-    # fresh external location per statement: the default in-memory
-    # catalog forgets tables across processes but their warehouse dirs
-    # persist, and a leftover dir blocks a managed CTAS
-    loc = tempfile.mkdtemp(prefix="dml_stage_")
-    session.sql(f"CREATE TABLE {stage} USING parquet LOCATION '{loc}' AS {post_image_sql}")
+    state = session._jsparkSession.sessionState()
+    meta = state.catalog().getTableMetadata(
+        state.sqlParser().parseTableIdentifier(table)
+    )
+    ident = meta.identifier()
+    db = ident.database().get()
+    target = f"`{db}`.`{ident.table()}`"
+    Path = session._jvm.org.apache.hadoop.fs.Path
+    root = Path(meta.location())
+    fs = root.getFileSystem(state.newHadoopConf())
+    tag = uuid.uuid4().hex[:12]
+    stage_dir = Path(root, f"_dml_stage_{tag}")
+    stage = f"`{db}`.__dml_stage_{tag}"
+    stage_ident = state.sqlParser().parseTableIdentifier(stage)
+    loc = stage_dir.toString().replace("\\", "\\\\").replace("'", "\\'")
+    swap = "not started"
     try:
-        session.sql(f"INSERT OVERWRITE TABLE {table} SELECT * FROM {stage}")
+        session.sql(f"CREATE TABLE {stage} LIKE {target} LOCATION '{loc}'")
+        df = session.sql(post_image) if isinstance(post_image, str) else post_image
+        df.write.insertInto(stage)
+        metrics = _observed(counts) if counts is not None else {}
+        swap = "started"
+        for st in fs.listStatus(root):
+            if not st.getPath().getName().startswith(("_", ".")):
+                fs.delete(st.getPath(), True)
+        for st in fs.listStatus(stage_dir):
+            name = st.getPath().getName()
+            if not name.startswith(("_", ".")) and not fs.rename(
+                st.getPath(), Path(root, name)
+            ):
+                raise OSError(f"could not move {name} into {root.toString()}")
+        swap = "done"
+        if meta.partitionColumnNames().nonEmpty() and meta.tracksPartitionsInCatalog():
+            session.sql(f"MSCK REPAIR TABLE {target} SYNC PARTITIONS")
     finally:
-        session.sql(f"DROP TABLE IF EXISTS {stage}")
+        # the stage is external and was never cached: drop only its entry
+        state.catalog().dropTable(stage_ident, True, False)
+        state.catalog().invalidateCachedTable(stage_ident)
+        if swap != "started":  # a broken swap keeps the staged rows
+            fs.delete(stage_dir, True)
+        session.sql(f"REFRESH TABLE {target}")
+    return metrics
+
+
+def _observed(obs: Observation) -> dict:
+    """The metrics of an Observation whose action has returned. They are
+    reported when the action ends, so a missing row means the optimizer
+    dropped the observed node — an error, never a wait."""
+    if not obs._jo.getRowOrEmpty().isDefined():
+        raise RuntimeError("the write did not report its row count")
+    return obs.get
+
+
+def counted_write(df: DataFrame, write) -> int:
+    """Run ``write`` on ``df`` with its rows counted in the same job
+    (``DataFrame.observe``); return the count."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return int(_observed(obs)["n"])
+
+
+def _rewrite_matched(
+    session: SparkSession, table: str, pred: str | None, post
+) -> int:
+    """Rewrite ``table`` to ``post(flagged)`` and return the number of
+    rows the predicate matched, counted in the write's own job.
+    ``flagged`` is the pre-image scan plus ``__dml_hit``, the predicate
+    evaluated on each old row (NULL counts as no match); the table's
+    qualifiers stay valid on top of it."""
+    hit = "true" if pred is None else f"coalesce(({pred}), false)"
+    obs = Observation()
+    flagged = session.sql(f"SELECT *, {hit} AS __dml_hit FROM {table}").observe(
+        obs, F.count_if(F.col("__dml_hit")).alias("n")
+    )
+    return int(_rewrite_table(session, table, post(flagged), obs)["n"])
 
 
 def _enum_fix_exprs(
@@ -310,44 +399,35 @@ def update_table(
     pred: str | None,
 ) -> int:
     """Rewrite-on-write UPDATE; returns the matched-row count."""
-    cols = session.table(table).columns
     assignments = _resolve_default_exprs(session, table, assignments)
     assignments = f32_fix_assignments(session, assignments, (table,))
     assignments, pred = _enum_fix_exprs(session, table, assignments, pred)
     set_map = {c.lower(): e for c, e in assignments}
-    if pred is None:
-        select = ", ".join(set_map.get(c.lower(), c) + f" AS {c}" for c in cols)
-        n = session.table(table).count()
-    else:
-        select = ", ".join(
-            f"CASE WHEN ({pred}) THEN ({set_map[c.lower()]}) ELSE {c} END AS {c}"
-            if c.lower() in set_map
-            else c
-            for c in cols
+
+    def post(flagged: DataFrame) -> DataFrame:
+        return flagged.selectExpr(
+            *(
+                f"CASE WHEN __dml_hit THEN ({set_map[c.lower()]}) ELSE {c} END AS {c}"
+                if c.lower() in set_map
+                else c
+                for c in flagged.columns[:-1]  # the table's, then __dml_hit
+            )
         )
-        n = session.sql(f"SELECT count(*) AS n FROM {table} WHERE {pred}").first()["n"]
-    _rewrite_table(session, table, f"SELECT {select} FROM {table}")
-    return int(n)
+
+    return _rewrite_matched(session, table, pred, post)
 
 
 def delete_from(session: SparkSession, table: str, pred: str | None) -> int:
-    """Rewrite-on-write DELETE; returns the removed-row count."""
+    """Rewrite-on-write DELETE; returns the removed-row count. Rows where
+    the predicate is false or NULL stay (PG deletes only rows where it
+    is true)."""
     _, pred = _enum_fix_exprs(session, table, None, pred)
-    if pred is None:
-        n = session.table(table).count()
-        _rewrite_table(
-            session, table, f"SELECT * FROM {table} WHERE 1 = 0"
-        )
-        return int(n)
-    n = session.sql(f"SELECT count(*) AS n FROM {table} WHERE {pred}").first()["n"]
-    # keep rows where the predicate is false OR NULL (PG deletes only
-    # rows where it is true)
-    _rewrite_table(
+    return _rewrite_matched(
         session,
         table,
-        f"SELECT * FROM {table} WHERE NOT coalesce(({pred}), false)",
+        pred,
+        lambda flagged: flagged.filter(~F.col("__dml_hit")).drop("__dml_hit"),
     )
-    return int(n)
 
 
 @dataclass
@@ -693,36 +773,31 @@ def merge_into(session: SparkSession, spec: MergeSpec) -> int:
         sel_parts.append(
             f"CASE {' '.join(whens)} ELSE {t}.{c} END AS {c}" if whens else f"{t}.{c} AS {c}"
         )
-    del_fms = [fm for cl, fm in zip(matched, fms) if cl.action == "delete"]
-    upd_fms = [fm for cl, fm in zip(matched, fms) if cl.action == "update"]
-    where = f" WHERE NOT ({' OR '.join(del_fms)})" if del_fms else ""
-    target_part = f"SELECT {', '.join(sel_parts)} {joined}{where}"
-
-    insert_parts = []
+    # __dml_kind: 0 kept, 1 updated, 2 deleted, 3 inserted; arms are
+    # first-match exclusive, so one count over it is PG's MERGE tag
+    # (inserted + updated + deleted), taken in the write's own job
+    kind = " ".join(
+        f"WHEN {fm} THEN {2 if cl.action == 'delete' else 1}"
+        for cl, fm in zip(matched, fms)
+    )
+    kind = f"CASE {kind} ELSE 0 END" if kind else "0"
+    parts = [f"SELECT {', '.join(sel_parts)}, {kind} AS __dml_kind {joined}"]
     for cl, fm in zip(not_matched, nm_fms):
         ins_cols = cl.insert_cols if cl.insert_cols is not None else cols
         if len(ins_cols) != len(cl.insert_exprs):
             raise ValueError("INSERT column/VALUES arity mismatch in MERGE")
         by_col = {c.lower(): e for c, e in zip(ins_cols, cl.insert_exprs)}
         proj = ", ".join(f"({by_col.get(c.lower(), 'NULL')}) AS {c}" for c in cols)
-        insert_parts.append(f"SELECT {proj} {anti} WHERE {fm}")
+        parts.append(f"SELECT {proj}, 3 AS __dml_kind {anti} WHERE {fm}")
 
-    # affected-row counts (PG MERGE reports inserted+updated+deleted)
-    n = 0
-    if matched:
-        u = " OR ".join(upd_fms) if upd_fms else "false"
-        d = " OR ".join(del_fms) if del_fms else "false"
-        row = session.sql(
-            f"SELECT sum(CASE WHEN {u} THEN 1 ELSE 0 END) AS u, "
-            f"sum(CASE WHEN {d} THEN 1 ELSE 0 END) AS d {joined}"
-        ).first()
-        n += int(row["u"] or 0) + int(row["d"] or 0)
-    for part in insert_parts:
-        n += session.sql(f"SELECT count(*) AS n FROM ({part})").first()["n"]
-
-    post_image = " UNION ALL ".join([target_part] + insert_parts)
-    _rewrite_table(session, spec.target, post_image)
-    return n
+    obs = Observation()
+    post = (
+        session.sql(" UNION ALL ".join(parts))
+        .observe(obs, F.count_if(F.col("__dml_kind") > 0).alias("n"))
+        .filter("__dml_kind <> 2")
+        .drop("__dml_kind")
+    )
+    return int(_rewrite_table(session, spec.target, post, obs)["n"])
 
 
 # --------------------------------------------------------------- RETURNING
@@ -745,20 +820,25 @@ def split_returning(stmt: str) -> tuple[str, str | None]:
 
 
 # Bounded janitor (code-review r6): every RETURNING/upsert/joined-DML
-# statement materializes a snapshot dir and registers uuid temp views;
-# on a long-lived server that's unbounded /tmp + catalog growth. Rows
-# are always consumed within their own statement, so anything 64
-# statements old is garbage — drop the oldest past that window.
+# statement materializes a snapshot dir, every staged INSERT a stage
+# dir, and both register uuid temp views; on a long-lived server that's
+# unbounded /tmp + catalog growth. Rows are always consumed within
+# their own statement, so anything 64 statements old is garbage — drop
+# the oldest past that window, and the rest when the process exits.
 _SNAPSHOT_DIRS: "deque[str]" = deque()
 _TEMP_VIEWS: "deque[str]" = deque()
 _JANITOR_KEEP = 64
 
 
 def _track_snapshot_dir(loc: str) -> None:
-    import shutil
-
     _SNAPSHOT_DIRS.append(loc)
     while len(_SNAPSHOT_DIRS) > _JANITOR_KEEP:
+        shutil.rmtree(_SNAPSHOT_DIRS.popleft(), ignore_errors=True)
+
+
+@atexit.register
+def _remove_snapshot_dirs() -> None:
+    while _SNAPSHOT_DIRS:
         shutil.rmtree(_SNAPSHOT_DIRS.popleft(), ignore_errors=True)
 
 
@@ -778,8 +858,8 @@ def _materialize(session: SparkSession, sql: str) -> DataFrame:
     rewrite-on-write of that table cannot invalidate it. Distributed
     write, never through the driver; dirs are janitor-bounded."""
     loc = tempfile.mkdtemp(prefix="dml_ret_")
-    session.sql(sql).write.mode("overwrite").parquet(loc)
     _track_snapshot_dir(loc)
+    session.sql(sql).write.mode("overwrite").parquet(loc)
     return session.read.parquet(loc)
 
 
@@ -787,8 +867,6 @@ def project_returning(session: SparkSession, df: DataFrame, proj: str) -> DataFr
     """Evaluate a RETURNING projection over the affected-rows snapshot.
     The snapshot carries the target table's columns, so ``*`` and any
     column expression behave exactly as PG's RETURNING scope."""
-    import uuid
-
     view = f"__returning_{uuid.uuid4().hex[:12]}"
     df.createOrReplaceTempView(view)
     _track_temp_view(session, view)
@@ -842,13 +920,13 @@ def truncate_table(session: SparkSession, table: str) -> int:
 
 
 def _recreate_table(session: SparkSession, table: str, select_sql: str) -> None:
-    """Schema-CHANGING rewrite (rename/drop column): the post-image has
-    a different schema, so INSERT OVERWRITE can't swap it. Build the
-    NEW table fully (CTAS — the only step that can fail on data) BEFORE
-    touching the target, then swap with a metadata-only drop+rename:
-    the failure window is two catalog operations, not a distributed
-    write (code-review r6: the stage-then-recreate order could lose the
-    table if the second CTAS failed)."""
+    """Schema-CHANGING rewrite (rename/drop column). A v1 table's catalog
+    entry cannot take a new schema in place, so unlike _rewrite_table
+    this replaces the entry and moves the table: the NEW table is built
+    fully first (CTAS into a fresh external location under the temporary
+    directory — the only step that can fail on data), then swapped in
+    with a metadata-only drop+rename, so the failure window is two
+    catalog operations, not a distributed write."""
     tmp = f"__alter_new_{table.replace('.', '_')}"
     session.sql(f"DROP TABLE IF EXISTS {tmp}")
     loc = tempfile.mkdtemp(prefix="alter_new_")
@@ -905,9 +983,7 @@ def update_from(
     keep ONE match per target row (PG updates each target row once;
     multi-match choice is arbitrary in PG too), then stitch the
     post-image with a left join on __rid and swap. Two joins + the
-    usual two-table-write swap — all key-partitioned, no driver loop."""
-    import uuid
-
+    usual one-write rewrite — all key-partitioned, no driver loop."""
     cols = session.table(table).columns
     assignments = _resolve_default_exprs(session, table, assignments)
     leaf = table.split(".")[-1]
@@ -1202,16 +1278,18 @@ def stage_insert_rows(
         "__ins_ord", F.monotonically_increasing_id()
     )
     loc = tempfile.mkdtemp(prefix="ins_stage_")
+    _track_snapshot_dir(loc)
     staged.write.mode("overwrite").parquet(loc)
     return session.read.parquet(loc)
 
 
 def insert_rows(session: SparkSession, staged: DataFrame, table: str) -> int:
     """Append the staged rows (already schema-aligned) to the target.
-    Returns the inserted-row count."""
+    Returns the inserted-row count, counted by the append itself."""
     _assert_writable(session, table)
-    staged.drop("__ins_ord").write.insertInto(table, overwrite=False)
-    return staged.count()
+    return counted_write(
+        staged.drop("__ins_ord"), lambda df: df.write.insertInto(table, overwrite=False)
+    )
 
 
 _EXCLUDED_RE = re.compile(r"(?<![\w.])excluded\s*\.\s*", re.IGNORECASE)
@@ -1263,13 +1341,11 @@ def upsert_into(
     its count is PG's command-tag count and it feeds RETURNING.
 
     Scale shape: one broadcast-or-shuffle join of the batch against the
-    target per arm, then the same two-full-table-writes swap every DML
-    statement uses. Within-batch duplicate keys ERROR, exactly like
+    target per arm, then the same one-write rewrite every DML statement
+    uses. Within-batch duplicate keys ERROR, exactly like
     DuckDB's constraint check (golden-probed: both arms raise
     "duplicate key" on an intra-batch repeat). NULL key cells never
     match (plain equality, PG unique-constraint semantics)."""
-    import uuid
-
     cols = session.table(table).columns
     keys = conflict.key_cols
     if keys is None:
@@ -1390,7 +1466,8 @@ def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tbl = "dml_demo_customer"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = tempfile.mkdtemp(prefix="dml_demo_")  # see _rewrite_table note
+    # external location: a stale managed dir would block saveAsTable
+    loc = tempfile.mkdtemp(prefix="dml_demo_")
     load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     ).write.option("path", loc).mode("overwrite").saveAsTable(tbl)
@@ -1442,7 +1519,8 @@ def dml_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tbl = "dml_merge_customer"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = tempfile.mkdtemp(prefix="dml_merge_")  # see _rewrite_table note
+    # external location: a stale managed dir would block saveAsTable
+    loc = tempfile.mkdtemp(prefix="dml_merge_")
     load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal").write.option(
         "path", loc
     ).mode("overwrite").saveAsTable(tbl)

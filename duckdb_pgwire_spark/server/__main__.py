@@ -44,9 +44,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    # Pin the PROCESS timezone, not just the Spark session one: the
-    # non-Arrow toLocalIterator path converts timestamps through the
-    # host's local zone, which on a non-UTC host would shift the
+    # Pin the PROCESS timezone, not just the Spark session one: rows
+    # fetched as pickled Rows (collect() and the served-socket stream)
+    # convert timestamps through the host's local zone, which on a non-UTC host would shift the
     # wall-clock text sent to clients.
     os.environ["TZ"] = "UTC"
     try:

@@ -36,9 +36,16 @@ calls). Fetch rule: rows built on the driver
 (DESCRIBE, SHOW, PRAGMA, pg_catalog) are Arrow-backed local relations
 and run no Spark job; a result whose optimized plan bounds its rows at
 ≤1024 is fetched with one collect(); every other result streams
-partition by partition through toLocalIterator(). Either way rows
-reach the socket in bounded batches (the analogue of
-DataChunk-at-a-time).
+through one served socket, partition by partition, written ahead of
+the reader (_ServedRows). Either way rows reach the socket in bounded
+batches (the analogue of DataChunk-at-a-time). A command Spark runs
+itself (CREATE, DROP, a plain INSERT) answers only its CommandComplete.
+
+Write rule: UPDATE, DELETE, TRUNCATE, MERGE, UPDATE … FROM, DELETE …
+USING and INSERT … ON CONFLICT rewrite the table in one Spark job that
+writes it once and counts the affected rows in the same job
+(operators/dml.py _rewrite_table); COPY FROM and INSERT take their
+counts from their one write.
 """
 
 from __future__ import annotations
@@ -135,12 +142,52 @@ def _fetch_iter(df: DataFrame) -> Iterator:
     plan bounds its rows at ≤ _BATCH_ROWS (a LocalRelation, a global
     aggregate, a small LIMIT) — no more than one write burst reaches
     the driver, and a driver-built relation runs no Spark job — else
-    toLocalIterator(), which streams one partition at a time so driver
-    memory stays bounded at any result size."""
+    the rows stream through one served socket (_ServedRows)."""
     bound = df._jdf.queryExecution().optimizedPlan().maxRows()
     if bound.isDefined() and bound.get() <= _BATCH_ROWS:
         return iter(df.collect())
-    return iter(df.toLocalIterator())
+    return _ServedRows(df)
+
+
+class _ServedRows:
+    """A result's rows streamed from the JVM through one served socket.
+    A serving thread (it inherits the connection's job tag) runs one job
+    per partition and writes the pickled rows ahead of the reader;
+    socket backpressure stalls it, so driver memory stays bounded to
+    about one partition, without toLocalIterator()'s request/response
+    round trip per partition. The socket is connected here, at once.
+    When the stream ends or breaks, the serving thread's result is
+    taken, so a failed partition raises instead of ending the rows
+    early."""
+
+    def __init__(self, df: DataFrame) -> None:
+        from pyspark.serializers import BatchedSerializer, CPickleSerializer
+        from pyspark.util import local_connect_and_auth
+
+        jrows = df._jdf.javaToPython().rdd().toLocalIterator()
+        port, secret, self._server = df.sparkSession._jvm.PythonRDD.serveIterator(
+            jrows, "serve-DataFrame"
+        )
+        self._file, self._sock = local_connect_and_auth(port, secret)
+        self._sock.settimeout(None)  # a partition takes as long as it takes
+        self._rows = BatchedSerializer(CPickleSerializer()).load_stream(self._file)
+
+    def __iter__(self) -> "_ServedRows":
+        return self
+
+    def __next__(self):
+        try:
+            return next(self._rows)
+        except Exception:  # StopIteration too: the stream ended
+            self.close()
+            self._server.getResult()  # the serving thread's error wins
+            raise
+
+    def close(self) -> None:
+        """Drop the stream: the serving thread's next write fails and it
+        ends; nothing waits for it."""
+        self._file.close()
+        self._sock.close()
 
 
 class _WireError(Exception):
@@ -170,6 +217,13 @@ class _Portal:
         self.it: Iterator | None = None
         self.cells: list | None = None  # (row index, encoder) per column
         self.sent = 0
+
+    def close(self) -> None:
+        """Drop a suspended cursor, closing its row stream."""
+        close = getattr(self.it, "close", None)
+        if close is not None:
+            close()
+        self.it = None
 
 
 class _CopyIn(NamedTuple):
@@ -1195,6 +1249,11 @@ def _substitute_params(sql: str, args: list[str]) -> str:
     return "".join(out)
 
 
+# words between a command's verb and its object that PostgreSQL's tag
+# leaves out: CREATE OR REPLACE TEMP VIEW answers CREATE VIEW
+_TAG_MODIFIERS = {"OR", "REPLACE", "TEMP", "TEMPORARY", "GLOBAL", "LOCAL"}
+
+
 def _command_tag(sql: str, nrows: int) -> str:
     head = sql.lstrip().split(None, 1)
     word = head[0].upper() if head else "SELECT"
@@ -1209,7 +1268,9 @@ def _command_tag(sql: str, nrows: int) -> str:
         return f"INSERT 0 {nrows}"
     if word in ("UPDATE", "DELETE"):
         return f"{word} {nrows}"
-    return word if len(head) == 1 else f"{word} {head[1].split(None, 1)[0].upper()}"
+    rest = head[1].split(None, len(_TAG_MODIFIERS)) if len(head) > 1 else []
+    obj = next((w.upper() for w in rest if w.upper() not in _TAG_MODIFIERS), None)
+    return word if obj is None else f"{word} {obj}"
 
 
 class PgWireServer:
@@ -1317,6 +1378,7 @@ class PgWireServer:
         task = asyncio.current_task()
         self._tasks.add(task)
         cancel_key: int | None = None
+        state = _ConnState()
         try:
             cancel_key = await self._startup(reader, writer)
             if cancel_key is None:
@@ -1333,14 +1395,15 @@ class PgWireServer:
                 session = await loop.run_in_executor(self._pool, make_session)
             else:
                 session = self.spark
-            await self._query_loop(
-                reader, writer, session, self._cancel_tags[cancel_key]
-            )
+            state.job_tag = self._cancel_tags[cancel_key]
+            await self._query_loop(reader, writer, session, state)
         except (asyncio.IncompleteReadError, ConnectionResetError):
             pass
         except Exception:  # noqa: BLE001
             log.exception("session crashed")
         finally:
+            for portal in state.portals.values():
+                portal.close()
             if cancel_key is not None:
                 self._cancel_tags.pop(cancel_key, None)
             self._tasks.discard(task)
@@ -1411,10 +1474,8 @@ class PgWireServer:
         reader: asyncio.StreamReader,
         writer: asyncio.StreamWriter,
         session: SparkSession,
-        job_tag: str = "",
+        state: _ConnState,
     ) -> None:
-        state = _ConnState()
-        state.job_tag = job_tag
         while True:
             tag = await reader.readexactly(1)
             (length,) = struct.unpack("!I", await reader.readexactly(4))
@@ -1502,6 +1563,8 @@ class PgWireServer:
                 sql = _substitute_params(
                     stmt_sql, [_param_literal(p) for p in decoded]
                 )
+                if (old := state.portals.get(portal)) is not None:
+                    old.close()
                 state.portals[portal] = _Portal(sql, result_fmts)
                 writer.write(P.bind_complete())
             elif tag == b"D":
@@ -1539,7 +1602,10 @@ class PgWireServer:
                     )
             elif tag == b"C":
                 kind, name = P.parse_close(payload)
-                (state.ext_stmts if kind == "S" else state.portals).pop(name, None)
+                if kind == "S":
+                    state.ext_stmts.pop(name, None)
+                elif (p := state.portals.pop(name, None)) is not None:
+                    p.close()
                 writer.write(P.close_complete())
             # b"H" (Flush) falls through to the drain below
             await writer.drain()
@@ -1727,6 +1793,9 @@ class PgWireServer:
         if result is None:
             result = self._run_command(stmt, first, session, state)
             if isinstance(result, DataFrame):
+                if not result.schema.fields:
+                    # a command Spark ran itself answers only its tag
+                    return stmt, _command_tag(stmt, _command_rows(result))
                 result = _ym_safe(_interval_lit_fold(result, stmt))
         return stmt, result
 
@@ -1738,11 +1807,11 @@ class PgWireServer:
         state: _ConnState,
     ) -> str | DataFrame | _CopyIn | _CopyOut:
         """Run a statement that is not row-returning, on the worker
-        pool, and return its result: a command tag; a DataFrame for
-        _run_statement to send — a RETURNING projection, or a command
-        Spark runs itself (its tag counts the rows it wrote); or the
-        descriptor of a COPY … FROM STDIN / TO STDOUT, whose data
-        transfer runs on the loop."""
+        pool, and return its result: a command tag; a DataFrame — a
+        RETURNING projection for _run_statement to send, or a command
+        Spark ran itself, which _plan answers with its tag (counting
+        the rows it wrote); or the descriptor of a COPY … FROM STDIN /
+        TO STDOUT, whose data transfer runs on the loop."""
         if first in self._TXN_TAGS:
             # PG clients autosend BEGIN/COMMIT (implicit transactions).
             # Spark has no transactions — every statement is autocommit —
@@ -2285,11 +2354,10 @@ class PgWireServer:
             if portal is None:
                 writer.write(self._row_description(df, stmt, []))
             if not fields:
-                # DDL/DML or a fully-dropped schema: run for effect, count rows
-                nrows = await self._exec(session, tag, _command_rows, df)
-                if self.reference_compat and df.schema.fields:
-                    nrows = 0
-                writer.write(P.command_complete(_command_tag(stmt, nrows)))
+                # reference_compat dropped every column (commands never
+                # get here, _plan answers them): run for effect, no rows
+                await self._exec(session, tag, _command_rows, df)
+                writer.write(P.command_complete(_command_tag(stmt, 0)))
                 await writer.drain()
                 return
             # text cells for format 0; nested-array columns get the
@@ -2371,13 +2439,17 @@ class PgWireServer:
             return buf.getvalue().encode(), len(rows)
 
         nrows = 0
-        while True:
-            chunk, n = await self._exec(session, tag, next_chunk)
-            if not n:
-                break
-            writer.write(P.copy_data(chunk))
-            nrows += n
-            await writer.drain()
+        try:
+            while True:
+                chunk, n = await self._exec(session, tag, next_chunk)
+                if not n:
+                    break
+                writer.write(P.copy_data(chunk))
+                nrows += n
+                await writer.drain()
+        finally:
+            if (close := getattr(it, "close", None)) is not None:
+                close()
         writer.write(P.copy_done())
         return nrows
 
@@ -2396,6 +2468,8 @@ class PgWireServer:
         import tempfile
 
         from pyspark.sql import types as T
+
+        from ..operators.dml import counted_write
 
         target_cols = copy.cols or copy.schema.names
         writer.write(P.copy_in_response(len(target_cols)))
@@ -2436,10 +2510,10 @@ class PgWireServer:
                 for c in schema.names:
                     if c not in target_cols:
                         df = df.withColumn(c, F.lit(None).cast(schema[c].dataType))
-                df = df.select(*schema.names)
-                n = df.count()
-                df.write.mode("append").insertInto(copy.table)
-                return n
+                return counted_write(
+                    df.select(*schema.names),
+                    lambda d: d.write.mode("append").insertInto(copy.table),
+                )
 
             return await self._exec(session, tag, load)
         finally:
@@ -2465,7 +2539,7 @@ def _copy_from_file(
     unless the statement's HEADER option says otherwise (PG default);
     DELIMITER/QUOTE/ESCAPE/NULL/*FORMAT options (r10) arrive as
     Spark reader options in ``extra``."""
-    from ..operators.dml import _assert_writable
+    from ..operators.dml import _assert_writable, counted_write
 
     _assert_writable(session, table)  # COPY FROM appends THROUGH views (r10)
     tgt = session.table(table)
@@ -2478,10 +2552,9 @@ def _copy_from_file(
         df = session.read.schema(tgt.schema).json(path)
     else:
         df = session.read.parquet(path)
-    df = df.select(*tgt.columns)
-    n = df.count()
-    df.write.mode("append").insertInto(table)
-    return n
+    return counted_write(
+        df.select(*tgt.columns), lambda d: d.write.mode("append").insertInto(table)
+    )
 
 
 def _copy_to_file(
@@ -2502,24 +2575,28 @@ def _copy_to_file(
     the same directory scheme DuckDB emits); DELIMITER/QUOTE/
     ESCAPE/NULL/*FORMAT/FORCE_QUOTE * (r10) arrive as Spark writer
     options in ``extra``."""
+    from ..operators.dml import counted_write
+
     df = _rows_df(session, inner_sql)
     if df is None:
         raise _WireError("COPY … TO needs a query", "42601")
-    n = df.count()
-    writer = df.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    for k, v in extra.items():
-        writer = writer.option(k, v)
-    if fmt == "csv":
-        writer.option("header", str(header).lower()).csv(path)
-    elif fmt == "json":
-        writer.json(path)
-    else:
-        writer.parquet(path)
-    return n
+
+    def write(counted: DataFrame) -> None:
+        writer = counted.write.mode("overwrite")
+        if compression:
+            writer = writer.option("compression", compression)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        for k, v in extra.items():
+            writer = writer.option(k, v)
+        if fmt == "csv":
+            writer.option("header", str(header).lower()).csv(path)
+        elif fmt == "json":
+            writer.json(path)
+        else:
+            writer.parquet(path)
+
+    return counted_write(df, write)
 
 
 def _sqlstate(exc: Exception) -> str:
@@ -2531,7 +2608,7 @@ def _sqlstate(exc: Exception) -> str:
     if get is not None:
         state = get()
         # a raise_error() reports P0001 here when collect() raised it and
-        # arrives as wrapped text (no state) under toLocalIterator(); the
+        # arrives as wrapped text (no state) from a streamed result; the
         # message refinements below decide for it, so the SQLSTATE does
         # not depend on which fetch ran the plan
         if state and (
@@ -5076,7 +5153,7 @@ def _insert_needs_enum_coercion(session: SparkSession, table: str) -> bool:
 
 def _exc_message(exc: Exception) -> str:
     msg = str(exc)
-    # runtime errors raised mid-stream (toLocalIterator) arrive wrapped
+    # runtime errors raised mid-stream (_ServedRows) arrive wrapped
     # in Py4J/SparkException text with the real cause in a Caused-by
     # frame — surface the user-raised payload (raise_error(), used by
     # e.g. the enum conversion check) instead of the wrapper noise

@@ -5874,3 +5874,301 @@ def test_clean_orphan_location_guards(spark, tmp_path):
         import shutil
 
         shutil.rmtree(loc, ignore_errors=True)
+
+
+# ------------------------------------- one-write rewrite-on-write, streaming
+
+
+def _table_dir(spark, name):
+    """The local directory of a catalog table's location."""
+    from urllib.parse import urlparse
+
+    state = spark._jsparkSession.sessionState()
+    meta = state.catalog().getTableMetadata(
+        state.sqlParser().parseTableIdentifier(name)
+    )
+    return urlparse(meta.location().toString()).path
+
+
+def _data_files(path):
+    """name → size of the files Spark reads in a table directory."""
+    import os
+
+    return {
+        n: os.path.getsize(os.path.join(path, n))
+        for n in os.listdir(path)
+        if not n.startswith(("_", "."))
+    }
+
+
+def _stage_leftovers(spark, path):
+    import os
+
+    return [n for n in os.listdir(path) if n.startswith("_dml_stage")] + [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("__dml_stage")
+    ]
+
+
+def test_wire_update_counts_pre_image_matches(client, spark):
+    """The WHERE of an UPDATE is evaluated on the old row: a SET that
+    moves every matched row out of the predicate still reports them."""
+    _fresh_wire_table(spark, "pre_img")
+    client.query("CREATE TABLE pre_img(x int)")
+    client.query("INSERT INTO pre_img VALUES (1), (2), (3), (4), (5), (6), (NULL)")
+    (r,) = client.query("UPDATE pre_img SET x = x + 10 WHERE x < 5")
+    assert r["tag"] == "UPDATE 4", r
+    (r,) = client.query("SELECT x FROM pre_img ORDER BY x NULLS LAST")
+    assert r["rows"] == [["5"], ["6"], ["11"], ["12"], ["13"], ["14"], [None]]
+    _fresh_wire_table(spark, "pre_img")
+
+
+@pytest.mark.parametrize(
+    "set_expr",
+    ["raise_error('no update')", "CAST(x AS BIGINT) * 10000000000"],
+    ids=["raise_error", "cast_overflow"],
+)
+def test_wire_failed_update_leaves_table_untouched(client, spark, set_expr):
+    """An UPDATE whose SET fails at runtime leaves the table's rows and
+    data files as they were, and no staging directory or table."""
+    _fresh_wire_table(spark, "upd_fail")
+    client.query("CREATE TABLE upd_fail(x int)")
+    client.query("INSERT INTO upd_fail VALUES (1), (2), (3)")
+    loc = _table_dir(spark, "upd_fail")
+    before = _data_files(loc)
+    (r,) = client.query(f"UPDATE upd_fail SET x = {set_expr} WHERE x = 2")
+    assert "error" in r, r
+    assert _data_files(loc) == before
+    assert _stage_leftovers(spark, loc) == []
+    (r,) = client.query("SELECT x FROM upd_fail ORDER BY x")
+    assert r["rows"] == [["1"], ["2"], ["3"]], r
+    _fresh_wire_table(spark, "upd_fail")
+
+
+def test_wire_external_table_keeps_location_after_update_delete(
+    client, spark, tmp_path
+):
+    """UPDATE and DELETE on an external table replace its data files in
+    the LOCATION the user declared; the table stays external there."""
+    import os
+
+    loc = os.path.realpath(tmp_path / "ext_loc")
+    _fresh_wire_table(spark, "ext_upd")
+    (r,) = client.query(
+        f"CREATE TABLE ext_upd(k int, v varchar) USING parquet LOCATION '{loc}'"
+    )
+    assert "error" not in r, r
+    client.query("INSERT INTO ext_upd VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    seen = set(_data_files(loc))
+    for sql, tag in (
+        ("UPDATE ext_upd SET v = upper(v) WHERE k >= 2", "UPDATE 2"),
+        ("DELETE FROM ext_upd WHERE k = 1", "DELETE 1"),
+    ):
+        (r,) = client.query(sql)
+        assert r.get("tag") == tag, r
+        assert os.path.realpath(_table_dir(spark, "ext_upd")) == loc
+        files = set(_data_files(loc))
+        assert files and not files & seen, (files, seen)
+        seen |= files
+    assert spark.catalog.getTable("ext_upd").tableType == "EXTERNAL"
+    assert _stage_leftovers(spark, loc) == []
+    (r,) = client.query("SELECT k, v FROM ext_upd ORDER BY k")
+    assert r["rows"] == [["2", "B"], ["3", "C"]], r
+    client.query("DROP TABLE ext_upd")
+
+
+def test_wire_drop_recreate_managed_table_after_update(client, spark):
+    """A managed table keeps its warehouse directory through an UPDATE;
+    DROP removes that directory whole and the name can be created
+    again."""
+    import os
+
+    _fresh_wire_table(spark, "mgd_cycle")
+    client.query("CREATE TABLE mgd_cycle(k int)")
+    client.query("INSERT INTO mgd_cycle VALUES (1), (2)")
+    loc = _table_dir(spark, "mgd_cycle")
+    (r,) = client.query("UPDATE mgd_cycle SET k = k * 10 WHERE k = 2")
+    assert r["tag"] == "UPDATE 1", r
+    assert _table_dir(spark, "mgd_cycle") == loc
+    assert spark.catalog.getTable("mgd_cycle").tableType == "MANAGED"
+    (r,) = client.query("DROP TABLE mgd_cycle")
+    assert "error" not in r, r
+    assert not os.path.exists(loc)
+    (r,) = client.query("CREATE TABLE mgd_cycle(k int)")
+    assert "error" not in r, r
+    (r,) = client.query("SELECT count(*) FROM mgd_cycle")
+    assert r["rows"] == [["0"]], r
+    client.query("DROP TABLE mgd_cycle")
+
+
+def test_wire_writes_start_one_spark_job(client, spark):
+    """Under the connection's job tag, UPDATE … WHERE and DELETE … WHERE
+    each start exactly one Spark job (the write, which also counts the
+    matched rows), and COPY FROM STDIN counts its rows in its write."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    tag = f"pgwire-conn-{client.backend_key[1]}"
+
+    def jobs(run):
+        before = set(tracker.getJobIdsForTag(tag))
+        results = run()
+        assert not any("error" in r for r in results), results
+        return len(set(tracker.getJobIdsForTag(tag)) - before)
+
+    _fresh_wire_table(spark, "one_job")
+    client.query("CREATE TABLE one_job AS SELECT o_orderkey, o_totalprice FROM orders")
+    assert jobs(lambda: client.query(
+        "UPDATE one_job SET o_totalprice = o_totalprice + 1 WHERE o_orderkey < 100"
+    )) == 1
+    assert jobs(lambda: client.query("DELETE FROM one_job WHERE o_orderkey < 50")) == 1
+    rows = "".join(f"{90_000_000 + i}\t{i}.5\n" for i in range(200)).encode()
+    assert jobs(lambda: client.copy_in("COPY one_job FROM STDIN", rows)) <= 2
+    (r,) = client.query("SELECT count(*) FROM one_job WHERE o_orderkey >= 90000000")
+    assert r["rows"] == [["200"]], r
+    _fresh_wire_table(spark, "one_job")
+
+
+def test_wire_dml_leaves_no_staging_dirs(client, spark):
+    """UPDATE, DELETE, MERGE and INSERT … RETURNING add no entry under
+    the temporary directory that the snapshot janitor does not bound,
+    and leave no staging directory in the table's location."""
+    import os
+    import tempfile
+
+    from duckdb_pgwire_spark.operators import dml
+
+    _fresh_wire_table(spark, "leak_t")
+    client.query("CREATE TABLE leak_t(id int, v int)")
+    client.query("INSERT INTO leak_t VALUES (1, 1), (2, 2)")
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    for sql in (
+        "UPDATE leak_t SET v = v + 1 WHERE id = 1",
+        "DELETE FROM leak_t WHERE id = 2",
+        "MERGE INTO leak_t t USING (SELECT 3 AS id, 3 AS v) s ON t.id = s.id "
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.id, s.v)",
+        "INSERT INTO leak_t VALUES (4, 4) RETURNING id",
+    ):
+        (r,) = client.query(sql)
+        assert "error" not in r, (sql, r)
+    new = {os.path.join(tmp, n) for n in set(os.listdir(tmp)) - before}
+    assert new <= set(dml._SNAPSHOT_DIRS), new - set(dml._SNAPSHOT_DIRS)
+    assert len(dml._SNAPSHOT_DIRS) <= dml._JANITOR_KEEP
+    assert _stage_leftovers(spark, _table_dir(spark, "leak_t")) == []
+    (r,) = client.query("SELECT id, v FROM leak_t ORDER BY id")
+    assert r["rows"] == [["1", "2"], ["3", "3"], ["4", "4"]], r
+    _fresh_wire_table(spark, "leak_t")
+
+
+def _simple_query_messages(client, sql):
+    client._send_msg(b"Q", sql.encode() + b"\x00")
+    out = []
+    while True:
+        mtag, body = client._read_msg()
+        out.append((mtag, body))
+        if mtag == b"Z":
+            return out
+
+
+def test_wire_spark_commands_answer_only_command_complete(client, spark):
+    """A command Spark runs itself answers CommandComplete, then
+    ReadyForQuery, with no RowDescription before it (PostgreSQL)."""
+    _fresh_wire_table(spark, "cc_only")
+    for sql, tag in (
+        ("CREATE TABLE cc_only(k int)", b"CREATE TABLE"),
+        ("INSERT INTO cc_only VALUES (1), (2)", b"INSERT 0 2"),
+        ("DROP TABLE cc_only", b"DROP TABLE"),
+    ):
+        msgs = _simple_query_messages(client, sql)
+        assert [t for t, _ in msgs] == [b"C", b"Z"], (sql, msgs)
+        assert msgs[0][1] == tag + b"\x00", msgs
+
+
+def test_wire_command_tag_skips_modifiers(client):
+    """OR REPLACE, TEMP/TEMPORARY and GLOBAL/LOCAL are not part of the
+    tag: CREATE OR REPLACE TEMP VIEW answers CREATE VIEW on both
+    protocols."""
+    from duckdb_pgwire_spark.server.app import _command_tag
+
+    (r,) = client.query("CREATE OR REPLACE TEMP VIEW tag_v AS SELECT 1 AS one")
+    assert r.get("tag") == "CREATE VIEW", r
+    r = client.extended_query(
+        "CREATE OR REPLACE TEMPORARY VIEW tag_v AS SELECT 2 AS two"
+    )
+    assert r.get("tag") == "CREATE VIEW", r
+    (r,) = client.query("SELECT * FROM tag_v")
+    assert r["rows"] == [["2"]], r
+    assert _command_tag("CREATE GLOBAL TEMPORARY VIEW g AS SELECT 1", 0) == "CREATE VIEW"
+    assert _command_tag("CREATE TABLE t AS SELECT true OR false", 0) == "CREATE TABLE"
+    client.query("DROP VIEW tag_v")
+
+
+def test_wire_streamed_result_error_is_not_a_short_result(client):
+    """A result too large to collect streams from a served socket; a
+    partition that fails mid-stream ends the statement with its error,
+    not with a shorter result."""
+    (r,) = client.query(
+        "SELECT CASE WHEN o_orderkey = (SELECT max(o_orderkey) FROM orders) "
+        "THEN raise_error('late row') ELSE o_orderkey END AS k FROM orders"
+    )
+    assert "late row" in r.get("error", ""), r
+
+
+def test_wire_dropped_portal_closes_its_stream(wire_server, monkeypatch):
+    """Closing a suspended portal, or dropping its connection, closes the
+    socket its rows stream from."""
+    import time
+
+    from duckdb_pgwire_spark.server import app
+
+    closed = []
+    orig = app._ServedRows.close
+
+    def close(self):
+        closed.append(self)
+        orig(self)
+
+    monkeypatch.setattr(app._ServedRows, "close", close)
+    sql = b"SELECT o_orderkey FROM orders"
+    for drop in ("close", "disconnect"):
+        c = _pgwire_client_module().PgClient(port=wire_server)
+        closed.clear()
+        c._send_msg(b"P", b"\x00" + sql + b"\x00" + struct.pack("!H", 0))
+        c._send_msg(b"B", b"\x00\x00" + struct.pack("!HHH", 0, 0, 0))
+        c._send_msg(b"E", b"\x00" + struct.pack("!i", 10))
+        c._send_msg(b"H", b"")
+        events = []
+        while not events or events[-1] != b"s":
+            events.append(c._read_msg()[0])
+        assert events == [b"1", b"2"] + [b"D"] * 10 + [b"s"], events
+        if drop == "close":
+            c._send_msg(b"C", b"P\x00")
+            c._send_msg(b"S", b"")
+            msgs = []
+            while not msgs or msgs[-1] != b"Z":
+                msgs.append(c._read_msg()[0])
+            assert msgs == [b"3", b"Z"], msgs
+            assert len(closed) == 1
+            c.close()
+        else:
+            c.close()
+            deadline = time.monotonic() + 10
+            while not closed and time.monotonic() < deadline:
+                time.sleep(0.05)
+            assert len(closed) == 1
+
+
+def test_wire_update_partitioned_table_moves_rows_between_partitions(client, spark):
+    """An UPDATE of a partition column moves rows into partitions the
+    table did not have: the catalog's partition list follows the swap."""
+    _fresh_wire_table(spark, "part_upd")
+    (r,) = client.query(
+        "CREATE TABLE part_upd(id int, p int) USING parquet PARTITIONED BY (p)"
+    )
+    assert "error" not in r, r
+    client.query("INSERT INTO part_upd VALUES (1, 1), (2, 2), (3, 2)")
+    (r,) = client.query("UPDATE part_upd SET p = p + 10 WHERE id >= 2")
+    assert r["tag"] == "UPDATE 2", r
+    (r,) = client.query("SELECT id, p FROM part_upd ORDER BY id")
+    assert r["rows"] == [["1", "1"], ["2", "12"], ["3", "12"]], r
+    parts = sorted(x.partition for x in spark.sql("SHOW PARTITIONS part_upd").collect())
+    assert parts == ["p=1", "p=12"], parts
+    _fresh_wire_table(spark, "part_upd")
