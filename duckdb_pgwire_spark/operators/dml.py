@@ -246,61 +246,56 @@ def counted_write(df: DataFrame, write) -> int:
     return int(_observed(obs)["n"])
 
 
-def _rewrite_matched(
-    session: SparkSession, table: str, pred: str | None, post
-) -> int:
-    """Rewrite ``table`` to ``post(flagged)`` and return the number of
-    rows the predicate matched, counted in the write's own job.
-    ``flagged`` is the pre-image scan plus ``__dml_hit``, the predicate
+def _flagged(session: SparkSession, table: str, pred: str | None) -> DataFrame:
+    """The pre-image scan of ``table`` plus ``__dml_hit``, the predicate
     evaluated on each old row (NULL counts as no match); the table's
     qualifiers stay valid on top of it."""
     hit = "true" if pred is None else f"coalesce(({pred}), false)"
+    return session.sql(f"SELECT *, {hit} AS __dml_hit FROM {table}")
+
+
+def _rewrite_matched(
+    session: SparkSession, table: str, pred: str | None, post
+) -> int:
+    """Rewrite ``table`` to ``post(flagged)`` (see ``_flagged``) and
+    return the number of rows the predicate matched, counted in the
+    write's own job."""
     obs = Observation()
-    flagged = session.sql(f"SELECT *, {hit} AS __dml_hit FROM {table}").observe(
+    flagged = _flagged(session, table, pred).observe(
         obs, F.count_if(F.col("__dml_hit")).alias("n")
     )
     return int(_rewrite_table(session, table, post(flagged), obs)["n"])
 
 
-def _enum_fix_exprs(
+def _prepare_assignments(
     session: SparkSession,
     table: str,
-    assignments: list[tuple[str, str]] | None,
-    pred: str | None,
-) -> tuple[list[tuple[str, str]] | None, str | None]:
-    """Enum table-column semantics for DML expressions (code review
-    r10: the SELECT path got the schema-aware pass, UPDATE/DELETE
-    didn't). Only the PREDICATE and assignment RHS expressions are
-    rewritten — never the statement text, so SET targets can't be
-    corrupted. A bare string literal assigned to an enum column gets
-    the validating constructor (DuckDB's implicit VARCHAR→enum cast)."""
-    from ..server.compat import (
-        ENUM_TYPES,
-        _enum_struct_sql,
-        enum_columns_of,
-        rewrite_enum_table_columns,
-    )
+    assignments: list[tuple[str, str]],
+    tables: tuple[str, ...] | None = None,
+) -> list[tuple[str, str]]:
+    """The one preparation of rewrite-on-write UPDATE assignments:
+    ``DEFAULT`` → the declared default, SET chains narrowed per-op over
+    the schemas of ``tables`` (the target by default), and a bare
+    string literal assigned to an enum column → the validating
+    constructor (DuckDB's implicit VARCHAR→enum cast). Enum columns in
+    the expressions themselves were typed with the statement text."""
+    from ..server.compat import ENUM_TYPES, _enum_struct_sql, enum_columns_of
 
+    assignments = _resolve_default_exprs(session, table, assignments)
+    assignments = f32_fix_assignments(session, assignments, tables or (table,))
     if not ENUM_TYPES:
-        return assignments, pred
-    enum_cols, varchar_cols = enum_columns_of(session.table(table).schema.fields)
-    if not enum_cols:
-        return assignments, pred
-    if pred is not None:
-        pred = rewrite_enum_table_columns(pred, enum_cols, varchar_cols)
-    if assignments is not None:
-        fixed = []
-        for c, e in assignments:
-            tn = enum_cols.get(c.lower())
-            if tn is not None and re.fullmatch(
-                r"\s*'(?:[^']|'')*'\s*", e
-            ):
-                e = _enum_struct_sql(e.strip(), tn, strict=True)
-            else:
-                e = rewrite_enum_table_columns(e, enum_cols, varchar_cols)
-            fixed.append((c, e))
-        assignments = fixed
-    return assignments, pred
+        return assignments
+    enum_cols, _ = enum_columns_of(session.table(table).schema.fields)
+    return [
+        (
+            c,
+            _enum_struct_sql(e.strip(), tn, strict=True)
+            if (tn := enum_cols.get(c.lower())) is not None
+            and re.fullmatch(r"\s*'(?:[^']|'')*'\s*", e)
+            else e,
+        )
+        for c, e in assignments
+    ]
 
 
 def _resolve_default_exprs(
@@ -333,14 +328,17 @@ def f32_fix_assignments(
     assignments: list[tuple[str, str]],
     tables: tuple[str, ...],
 ) -> list[tuple[str, str]]:
-    """Narrow UPDATE/MERGE SET chains PER-OP like duck (r17, closes the
+    """Narrow UPDATE SET chains PER-OP like duck (r17, closes the
     NOTES r16 residue): ``SET x = f * 2 + g * 3`` stores duck's
     float32-per-operation value (probed — the stored value matches
     f32(f32(f*2)+f32(g*3)), NOT the narrow-once f32(f64 chain); they
     differ in the last ulp). Each RHS types through the f32 grammar
-    with the statement tables' schema kinds; unparseable expressions
-    stay native (the store-time cast then narrows once — the old
-    behavior, exact for single-op chains)."""
+    with the schema kinds of ``tables``; unparseable expressions stay
+    native (the store-time cast then narrows once — the old behavior,
+    exact for single-op chains). Part of ``_prepare_assignments``: the
+    statement's schema-typed pass (app._hugeint_sums) narrows
+    comparisons but leaves SET assignments to this step; MERGE arms
+    narrow through ``_f32_fix_pairs`` with the source schema."""
     from ..server.app import _schema_fields  # memoized catalog probe
 
     field_lists = [_schema_fields(session, t) or [] for t in tables]
@@ -392,17 +390,16 @@ def _f32_fix_pairs(
     return out
 
 
-def update_table(
-    session: SparkSession,
-    table: str,
-    assignments: list[tuple[str, str]],
-    pred: str | None,
-) -> int:
-    """Rewrite-on-write UPDATE; returns the matched-row count."""
-    assignments = _resolve_default_exprs(session, table, assignments)
-    assignments = f32_fix_assignments(session, assignments, (table,))
-    assignments, pred = _enum_fix_exprs(session, table, assignments, pred)
-    set_map = {c.lower(): e for c, e in assignments}
+def _update_post(
+    session: SparkSession, table: str, assignments: list[tuple[str, str]]
+):
+    """The post-image of a rewrite-on-write UPDATE as a function of the
+    flagged pre-image (``_flagged``): each assigned column takes its
+    prepared expression on hit rows."""
+    set_map = {
+        c.lower(): e
+        for c, e in _prepare_assignments(session, table, assignments)
+    }
 
     def post(flagged: DataFrame) -> DataFrame:
         return flagged.selectExpr(
@@ -414,6 +411,17 @@ def update_table(
             )
         )
 
+    return post
+
+
+def update_table(
+    session: SparkSession,
+    table: str,
+    assignments: list[tuple[str, str]],
+    pred: str | None,
+) -> int:
+    """Rewrite-on-write UPDATE; returns the matched-row count."""
+    post = _update_post(session, table, assignments)
     return _rewrite_matched(session, table, pred, post)
 
 
@@ -421,7 +429,6 @@ def delete_from(session: SparkSession, table: str, pred: str | None) -> int:
     """Rewrite-on-write DELETE; returns the removed-row count. Rows where
     the predicate is false or NULL stay (PG deletes only rows where it
     is true)."""
-    _, pred = _enum_fix_exprs(session, table, None, pred)
     return _rewrite_matched(
         session,
         table,
@@ -852,14 +859,16 @@ def _track_temp_view(session: SparkSession, name: str) -> None:
             pass
 
 
-def _materialize(session: SparkSession, sql: str) -> DataFrame:
-    """Snapshot a SELECT to a temp parquet dir and read it back —
-    decouples the result from the source table so the subsequent
-    rewrite-on-write of that table cannot invalidate it. Distributed
-    write, never through the driver; dirs are janitor-bounded."""
+def _materialize(session: SparkSession, rows: str | DataFrame) -> DataFrame:
+    """Snapshot a SELECT (text or DataFrame) to a temp parquet dir and
+    read it back — decouples the result from the source table so the
+    subsequent rewrite-on-write of that table cannot invalidate it.
+    Distributed write, never through the driver; dirs are
+    janitor-bounded."""
     loc = tempfile.mkdtemp(prefix="dml_ret_")
     _track_snapshot_dir(loc)
-    session.sql(sql).write.mode("overwrite").parquet(loc)
+    df = session.sql(rows) if isinstance(rows, str) else rows
+    df.write.mode("overwrite").parquet(loc)
     return session.read.parquet(loc)
 
 
@@ -884,17 +893,18 @@ def update_returning(
     pred: str | None,
 ) -> DataFrame:
     """UPDATE that also snapshots the post-image of the affected rows
-    (PG: RETURNING sees the NEW values). Returns the snapshot; the
+    (PG: RETURNING sees the NEW values, as stored). The snapshot is the
+    hit rows of the same post-image the table is rewritten to, cast to
+    the column types the store applies. Returns the snapshot; the
     affected count is its row count."""
-    cols = session.table(table).columns
-    assignments = f32_fix_assignments(session, assignments, (table,))
-    set_map = {c.lower(): e for c, e in assignments}
-    proj = ", ".join(
-        f"({set_map[c.lower()]}) AS {c}" if c.lower() in set_map else c for c in cols
-    )
-    where = f" WHERE coalesce(({pred}), false)" if pred is not None else ""
-    affected = _materialize(session, f"SELECT {proj} FROM {table}{where}")
-    update_table(session, table, assignments, pred)
+    post = _update_post(session, table, assignments)
+    stored = [
+        F.col(f.name).cast(f.dataType).alias(f.name)
+        for f in session.table(table).schema.fields
+    ]
+    hits = _flagged(session, table, pred).filter("__dml_hit")
+    affected = _materialize(session, post(hits).select(*stored))
+    _rewrite_matched(session, table, pred, post)
     return affected
 
 
@@ -985,11 +995,11 @@ def update_from(
     post-image with a left join on __rid and swap. Two joins + the
     usual one-write rewrite — all key-partitioned, no driver loop."""
     cols = session.table(table).columns
-    assignments = _resolve_default_exprs(session, table, assignments)
     leaf = table.split(".")[-1]
     src_rel, src_alias = from_rel
-    assignments = f32_fix_assignments(
+    assignments = _prepare_assignments(
         session,
+        table,
         assignments,
         (table,) if " " in src_rel else (table, src_rel),
     )
@@ -1468,6 +1478,7 @@ def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     # external location: a stale managed dir would block saveAsTable
     loc = tempfile.mkdtemp(prefix="dml_demo_")
+    _track_snapshot_dir(loc)  # removed with the process's snapshots
     load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     ).write.option("path", loc).mode("overwrite").saveAsTable(tbl)
@@ -1521,6 +1532,7 @@ def dml_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     # external location: a stale managed dir would block saveAsTable
     loc = tempfile.mkdtemp(prefix="dml_merge_")
+    _track_snapshot_dir(loc)  # removed with the process's snapshots
     load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal").write.option(
         "path", loc
     ).mode("overwrite").saveAsTable(tbl)
@@ -1559,6 +1571,7 @@ def dml_insert_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = "dml_ret_demo"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     loc = tempfile.mkdtemp(prefix="dml_ret_demo_")
+    _track_snapshot_dir(loc)  # removed with the process's snapshots
     spark.sql(
         "SELECT CAST(NULL AS BIGINT) AS id, CAST(NULL AS STRING) AS name, "
         "CAST(NULL AS STRING) AS note WHERE 1 = 0"
@@ -1606,6 +1619,7 @@ def dml_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = "dml_upsert_customer"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     loc = tempfile.mkdtemp(prefix="dml_upsert_")
+    _track_snapshot_dir(loc)  # removed with the process's snapshots
     load_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey AS k", "c_acctbal AS bal"
     ).write.option("path", loc).mode("overwrite").saveAsTable(tbl)
@@ -1645,6 +1659,7 @@ def dml_update_from(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = "dml_updfrom_customer"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     loc = tempfile.mkdtemp(prefix="dml_updfrom_")
+    _track_snapshot_dir(loc)  # removed with the process's snapshots
     load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal"
     ).write.option("path", loc).mode("overwrite").saveAsTable(tbl)

@@ -1107,16 +1107,20 @@ def _rows_df(session: SparkSession, stmt: str) -> DataFrame | None:
     return _ym_safe(_interval_lit_fold(df, stmt))
 
 
-def _planned(session: SparkSession, stmt: str, sql: str | None = None) -> DataFrame:
+def _planned(session: SparkSession, stmt: str) -> DataFrame:
     """session.sql of the rewritten statement — the "prepare" step: the
     schema is known before execution, like conn.Prepare → GetNames/
-    GetTypes (cpp:52,62-64). ``sql`` is rewrite(stmt) when the caller
-    already has it. The pg_catalog emulation views are rebuilt first
-    when the statement reads them."""
-    sql = rewrite(stmt) if sql is None else sql
-    if _PG_CATALOG_RE.search(sql):
+    GetTypes (cpp:52,62-64)."""
+    return _prepared(session, _hugeint_sums(session, rewrite(stmt)))
+
+
+def _prepared(session: SparkSession, typed: str) -> DataFrame:
+    """session.sql of statement text that has been through rewrite()
+    and the schema-typed pass; the pg_catalog emulation views are
+    rebuilt first when the statement reads them."""
+    if _PG_CATALOG_RE.search(typed):
         _refresh_pg_catalog(session)
-    return session.sql(_hugeint_sums(session, sql))
+    return session.sql(typed)
 
 
 def _union_by_name_df(session: SparkSession, stmt: str):
@@ -2041,7 +2045,7 @@ class PgWireServer:
             )
 
             sql, returning = split_returning(
-                _dml_composite_ord(session, rewrite(stmt))
+                _hugeint_sums(session, rewrite(stmt))
             )
             if first == "UPDATE":
                 parsed = parse_update(sql)
@@ -2085,8 +2089,8 @@ class PgWireServer:
                 upsert_into,
             )
 
-            rewritten = rewrite(stmt)
-            sql, returning = split_returning(_dml_composite_ord(session, rewritten))
+            typed = _hugeint_sums(session, rewrite(stmt))
+            sql, returning = split_returning(typed)
             spec = parse_insert(sql)
             # never write THROUGH a view: the plain INSERT runs
             # spark.sql directly, and Spark appends into the files
@@ -2119,7 +2123,7 @@ class PgWireServer:
                 )
                 return f"INSERT 0 {insert_rows(session, staged, spec.table)}"
             if returning is None and (spec is None or not spec.conflict):
-                return _planned(session, stmt, rewritten)
+                return _prepared(session, typed)
             if spec is None:
                 raise _WireError("unsupported INSERT form with RETURNING", "0A000")
             staged = stage_insert_rows(session, spec.table, spec.cols, spec.source_sql)
@@ -2140,7 +2144,7 @@ class PgWireServer:
         if first == "MERGE":
             from ..operators.dml import merge_into, parse_merge
 
-            spec = parse_merge(_dml_composite_ord(session, rewrite(stmt)))
+            spec = parse_merge(_hugeint_sums(session, rewrite(stmt)))
             if spec is None:
                 raise _WireError("syntax error in MERGE", "42601")
             return f"MERGE {merge_into(session, spec)}"
@@ -2604,24 +2608,29 @@ def _sqlstate(exc: Exception) -> str:
     the reference collapses everything to one DataException class
     (cpp:68-73) — we keep the more useful codes."""
     msg = str(exc)
+    get = getattr(exc, "getCondition", None)
+    cond = get() if get is not None else None
     get = getattr(exc, "getSqlState", None)
-    if get is not None:
-        state = get()
-        # a raise_error() reports P0001 here when collect() raised it and
-        # arrives as wrapped text (no state) from a streamed result; the
-        # message refinements below decide for it, so the SQLSTATE does
-        # not depend on which fetch ran the plan
-        if state and (
-            isinstance(exc, _WireError) or "USER_RAISED_EXCEPTION" not in msg
-        ):
-            return state
+    state = get() if get is not None else None
+    # the error class decides, not the message: an AnalysisException
+    # quotes the plan, so a guarded raise_error() in it is no user raise
+    if state and cond != "USER_RAISED_EXCEPTION":
+        return state
+    # a raise_error() reports USER_RAISED_EXCEPTION (P0001) when
+    # collect() raised it and arrives as wrapped text (no class, no
+    # state) from a streamed result; the message refinements below
+    # decide for both, so the SQLSTATE does not depend on which fetch
+    # ran the plan
+    user_raised = cond == "USER_RAISED_EXCEPTION" or (
+        cond is None and "USER_RAISED_EXCEPTION" in msg
+    )
     # Cancel detection anchored on what our CancelRequest path actually
     # produces — the cancelJobsWithTag tag and Spark's job-cancelled
     # phrasing — NOT a bare 'cancelled' substring, which user data (a
     # failed cast of the value 'cancelled', a column named canceled_at)
     # can contain (advice r9 + code review r10). USER_RAISED still
     # wins: raise_error payloads embed user strings verbatim.
-    if "USER_RAISED_EXCEPTION" not in msg and (
+    if not user_raised and (
         "pgwire-conn-" in msg  # our cancelJobsWithTag tag
         or re.search(
             r"\bJob \d+ (?:in group [\w.-]+ )?(?:was )?cancell?ed", msg
@@ -2630,7 +2639,7 @@ def _sqlstate(exc: Exception) -> str:
         or re.search(r"cancell?ed (?:as )?part of cancell?ed job", msg)
     ):
         return "57014"  # query_canceled — CancelRequest killed the jobs
-    if "USER_RAISED_EXCEPTION" in msg:
+    if user_raised:
         if "Could not convert string" in msg:
             # the enum conversion check rides raise_error(); clients
             # branching on the SQLSTATE class should see PG/DuckDB's
@@ -2788,7 +2797,7 @@ _HAS_DIV_RE = re.compile(r"(?<!/)/(?!/)")
 _HAS_AVG_RE = re.compile(r"\b(?:avg|mean)\s*\(", re.IGNORECASE)
 
 
-# Resolved-schema memo for _hugeint_sums' gate loop: the has_cmp gate
+# Resolved-schema memo (_schema_fields) for _hugeint_sums: the has_cmp gate
 # (r11) made nearly every table statement pay a session.table() Py4J
 # round trip (~7 ms measured); table schemas only change on non-read
 # statements, which clear the memo at the dispatch chokepoints.
@@ -2925,11 +2934,14 @@ def _make_expr_typer(session: SparkSession, sql: str, from_table=None, leaf=None
     the operand hoisted into EACH select list (top level first, then
     subquery/CTE scopes — capped at 8 points, and every succeeding
     point must AGREE on the resolved type); each point retries wrapped
-    in first() (grouped statements reject a bare non-aggregate); for
-    DML, a single-table SELECT over the target. Any analysis failure
-    (set-op arity, out-of-scope columns…) just drops that point; zero
-    successes or disagreeing scopes return None and the regex legs'
-    conservative skip stands."""
+    in first() (grouped statements reject a bare non-aggregate). With
+    a ``from_table`` scope (the statement's ``_statement_scope``: the
+    target of a single-relation UPDATE/DELETE, or the joint
+    target+source clause of UPDATE … FROM / DELETE … USING / MERGE),
+    ``SELECT (expr) FROM <scope>`` is probed as well. Any analysis
+    failure (set-op arity, out-of-scope columns…) just drops that
+    point; zero successes or disagreeing scopes return None and the
+    regex legs' conservative skip stands."""
 
     # hoist probes ONLY into read-only statements: session.sql() of a
     # DML statement EXECUTES it eagerly — probing an INSERT whose
@@ -3211,14 +3223,18 @@ def _bool_leaf(dt):
 
 
 def _schema_fields(session: SparkSession, name: str):
-    """Resolved schema fields for one table via the statement memo
-    (same caching discipline as the _hugeint_sums gate loop)."""
+    """Resolved schema fields for one table via the schema memo, or None
+    when the name does not resolve to a table."""
     fields = _SCHEMA_FIELDS_CACHE.get(name)
     if fields is None:
         try:
             fields = session.table(name).schema.fields
         except Exception:  # noqa: BLE001 — file relations, typos: skip
             return None
+        # '__'-prefixed names are one-shot generated temp views
+        # (recursive-CTE frames) dropped right after use — caching
+        # them grows the memo unboundedly (ADVICE r11); the size
+        # bound is a backstop against out-of-band catalog churn
         if not name.split(".")[-1].strip("`").startswith("__"):
             if len(_SCHEMA_FIELDS_CACHE) >= 1024:
                 _SCHEMA_FIELDS_CACHE.clear()
@@ -3303,83 +3319,32 @@ def _dml_joint_scope(sql: str) -> str | None:
     return f"{target}, {src}"
 
 
-def _dml_bool_coercion(session: SparkSession, sql: str) -> str:
-    """duck's numeric/string→BOOLEAN coercion for DML statements (r13
-    continuation): ``UPDATE t SET … WHERE v`` / ``DELETE FROM t WHERE
-    n + 1`` coerce in duck exactly like the SELECT path, but DML
-    dispatch bypasses _hugeint_sums — so the column legs and the
-    single-relation from_table typer plumb in here (same target
-    discipline as the composite legs below: multi-relation forms get
-    no typer; probe failure is safe, wrong-scope success isn't)."""
-    from .compat import _BOOL_CTX_L_RE, statement_tables
-
-    if _BOOL_CTX_L_RE.search(sql) is None:
-        return sql
+def _statement_scope(sql: str) -> tuple[list[str], str | None]:
+    """The statement's relations and its typer scope, resolved once per
+    statement. Relations: ``statement_tables`` plus the DML target.
+    Scope (``from_table`` of every typer built for the statement): None
+    for read-only heads, whose typers hoist into the statement's own
+    select lists, and for INSERT, whose source scope is its SELECT body
+    (unprobed); the target for a single-relation UPDATE/DELETE; the
+    joint target+source clause for UPDATE … FROM, DELETE … USING and
+    MERGE (``_dml_joint_scope``). A pure function of the text, as the
+    typer memo's key requires."""
     tables = list(statement_tables(sql))
     tm = _DML_TARGET_RE.match(sql)
-    if tm is not None and tm.group(1) not in tables:
-        tables.append(tm.group(1))
-    kind_map: dict[str, set[str]] = {}
-    for name in tables:
-        fields = _schema_fields(session, name)
-        for f in fields or []:
-            kind_map.setdefault(f.name.lower(), set()).add(
-                _bool_leaf(f.dataType)
-            )
-    num_cols = {n for n, ks in kind_map.items() if ks == {"num"}}
-    str_cols = {n for n, ks in kind_map.items() if ks == {"str"}}
-    bool_cols = {n for n, ks in kind_map.items() if ks == {"bool"}}
+    if tm is None:
+        return tables, None
+    target = tm.group(1)
+    if target not in tables:
+        tables.append(target)
     head = sql.lstrip().split(None, 1)[0].upper()
-    target = (
-        tm.group(1)
-        if tm is not None
-        and head in ("UPDATE", "DELETE")
+    single = (
+        head in ("UPDATE", "DELETE")
         and len({t.lower() for t in tables}) <= 1
+        # DELETE … USING's relation is invisible to statement_tables
+        # (FROM/JOIN only)
         and re.search(r"(?i)\bUSING\b", sql) is None
-        else _dml_joint_scope(sql)  # multi-relation joint probe (r14)
     )
-    from .compat import rewrite_int_bool_contexts
-
-    return rewrite_int_bool_contexts(
-        sql,
-        num_cols,
-        str_cols,
-        lambda neutral: _make_expr_typer(
-            session, neutral, from_table=target, leaf=_bool_leaf
-        ),
-        bool_cols,
-    )
-
-
-def _dml_f32_narrow(session: SparkSession, sql: str) -> str:
-    """Schema-aware f32 comparison narrowing for DML statements (r17):
-    duck evaluates ``UPDATE t SET … WHERE f * 3 = 0.3`` with FLOAT
-    per-op arithmetic and FLOAT comparison promotion — the SELECT path
-    gets this via _hugeint_sums' rewrite_f32_positions, but DML
-    dispatch bypasses that, so boundary rows could silently mutate the
-    WRONG set (probed: duck matches f=0.1 on f*3=0.3; the un-narrowed
-    DOUBLE comparison matches nothing). Comparison/BETWEEN/IN legs
-    — SET assignment '=' sites are excluded inside the leg
-    (_is_set_assignment_eq), and SET RHS chains narrow per-op in
-    operators.dml.f32_fix_assignments. Runs the FULL orchestrator
-    (rewrite_f32_positions), so INSERT … SELECT sources staged through
-    stage_insert_rows (RETURNING / ON CONFLICT) and subqueries inside
-    DML predicates get their select items narrowed too — the plain
-    INSERT fall-through already gets this via _hugeint_sums."""
-    from ..operators.dml import _f32_kinds_of_fields
-    from .compat import rewrite_f32_positions, statement_tables
-
-    tables = list(statement_tables(sql))
-    tm = _DML_TARGET_RE.match(sql)
-    if tm is not None and tm.group(1) not in tables:
-        tables.append(tm.group(1))
-    kinds = _f32_kinds_of_fields(
-        [_schema_fields(session, name) or [] for name in tables]
-    )
-    low = sql.lower()
-    if not any(k == "f32" and n in low for n, k in kinds.items()):
-        return sql
-    return rewrite_f32_positions(sql, kinds)
+    return tables, target if single else _dml_joint_scope(sql)
 
 
 def _f32_narrow(typer, f32_names):
@@ -3398,199 +3363,25 @@ def _f32_narrow(typer, f32_names):
     return t2
 
 
-def _dml_pipe_concat(session: SparkSession, sql: str) -> str:
-    """``||`` operands with special-typed / composite columns in DML
-    statements (r15): the SELECT path plumbs
-    rewrite_pipe_concat_special_cols via _hugeint_sums; DML dispatch
-    bypasses it, so ``'x' || arr_col`` in an UPDATE/DELETE predicate
-    failed Spark's same-type concat (or rendered Java float text)
-    where duck stringifies with its own text. Same joint-scope typer
-    discipline as the composite legs."""
-    if "||" not in sql or not _code_pipe_present(sql):
-        return sql
-    from pyspark.sql import types as T
-
-    from .compat import (
-        rewrite_pipe_concat_special_cols,
-        statement_tables,
-    )
-
-    tables = list(statement_tables(sql))
-    tm = _DML_TARGET_RE.match(sql)
-    if tm is not None and tm.group(1) not in tables:
-        tables.append(tm.group(1))
-    kind_seen: dict[str, set] = {}
-    shape_seen: dict[str, set] = {}
-    dml_arr_cols: set[str] = set()
-    for name in tables:
-        for f in _schema_fields(session, name) or []:
-            low = f.name.lower()
-            if (
-                isinstance(
-                    f.dataType, T.ArrayType | T.MapType | T.StructType
-                )
-                and _enum_emulation_type(f.dataType) is None
-            ):
-                shape_seen.setdefault(low, set()).add(
-                    "cf32"
-                    if _float_kinds(f.dataType, set()) == {"f32"}
-                    else "complex"
-                )
-                kind_seen.setdefault(low, set()).add("other")
-                if isinstance(f.dataType, T.ArrayType):
-                    dml_arr_cols.add(low)
-                continue
-            if isinstance(f.dataType, T.DoubleType):
-                k = "f64"
-            elif isinstance(f.dataType, T.FloatType):
-                k = "f32"
-            elif isinstance(f.dataType, T.DayTimeIntervalType):
-                k = "dtivl"
-            elif isinstance(f.dataType, T.YearMonthIntervalType):
-                k = "ym"
-            elif isinstance(f.dataType, T.StringType):
-                k = "str"
-            else:
-                k = "other"
-            kind_seen.setdefault(low, set()).add(k)
-            shape_seen.setdefault(low, set()).add("atomic")
-    dml_str_cols = {n for n, ks in kind_seen.items() if ks == {"str"}}
-    kinds = {
-        n: next(iter(ks))
-        for n, ks in kind_seen.items()
-        if len(ks) == 1 and "other" not in ks and "str" not in ks
-    }
-    f32_cols = {n for n, ks in shape_seen.items() if ks == {"cf32"}}
-    complex_cols = f32_cols | {
-        n for n, ks in shape_seen.items() if ks == {"complex"}
-    }
-    if not (kinds or complex_cols):
-        return sql
-    head = sql.lstrip().split(None, 1)[0].upper()
-    target = (
-        tm.group(1)
-        if tm is not None
-        and head in ("UPDATE", "DELETE")
-        and len({t.lower() for t in tables}) <= 1
-        and re.search(r"(?i)\bUSING\b", sql) is None
-        else _dml_joint_scope(sql)
-    )
-    scalar_f32 = {n for n, k in kinds.items() if k == "f32"}
-    return rewrite_pipe_concat_special_cols(
-        sql, kinds, complex_cols, f32_cols,
-        typer_factory=lambda cur: _f32_narrow(
-            _make_expr_typer(
-                session, cur, from_table=target, leaf=_vc_leaf
-            ),
-            scalar_f32,
-        ),
-        str_cols=dml_str_cols,
-        array_cols=dml_arr_cols,
-    )
-
-
-def _dml_composite_ord(session: SparkSession, sql: str) -> str:
-    """Schema-typed composite ORDERING + EQUALITY for DML statements
-    (r13, closes the r12 residue): UPDATE SET expressions / WHERE
-    tails, DELETE WHERE tails, and MERGE source/ON/arm expressions
-    where a comparison operand is a complex-typed COLUMN
-    (constructor-literal sides were already handled inside rewrite()).
-    The SELECT path gets this via _hugeint_sums; DML dispatch bypasses
-    that, so the plumbing lives here — silent wrong-row mutation on
-    NULL-bearing composite keys is the worst residue class (VERDICT
-    r12 item 1)."""
-    sql = _dml_bool_coercion(session, sql)
-    sql = _dml_pipe_concat(session, sql)
-    # BEFORE the comparison gate (r17 review find): a staged
-    # INSERT … SELECT f * 2 + g * 3 … RETURNING has no comparison
-    # token, but its select items still need the per-op narrowing
-    sql = _dml_f32_narrow(session, sql)
-    if _HAS_CMP_RE.search(sql) is None:
-        return sql
-    from pyspark.sql import types as T
-
-    from .compat import (
-        propagate_complex_aliases,
-        rewrite_composite_col_ord,
-        statement_tables,
-    )
-
-    tables = list(statement_tables(sql))
-    tm = _DML_TARGET_RE.match(sql)
-    if tm is not None and tm.group(1) not in tables:
-        tables.append(tm.group(1))
-    ctypes: dict[str, object] = {}
-    ambiguous: set[str] = set()
-    all_names: set[str] = set()
-    for name in tables:
-        fields = _schema_fields(session, name)
-        if fields is None:
-            continue
-        for f in fields:
-            low = f.name.lower()
-            all_names.add(low)
-            if not isinstance(
-                f.dataType, T.ArrayType | T.MapType | T.StructType
-            ) or _enum_emulation_type(f.dataType) is not None:
-                ambiguous.add(low)  # complex in one table, plain here
-                continue
-            tr = _type_tree(f.dataType)
-            if ctypes.get(low, tr) != tr:
-                ambiguous.add(low)
-            ctypes[low] = tr
-    for low in ambiguous:
-        # r15 (VERDICT item 7): a name that is complex in ≥1 scope but
-        # typed differently across scopes keeps an "ambig" marker —
-        # the compat legs route QUALIFIED references (t.arr) through
-        # the joint-scope analysis typer, which resolves them exactly;
-        # bare references stay conservative (duck itself refuses them
-        # as ambiguous)
-        if low in ctypes:
-            ctypes[low] = "ambig"
-    from .compat import _COMPLEX_EXPR_HINT_RE
-
-    if not ctypes and _COMPLEX_EXPR_HINT_RE.search(sql) is None:
-        return sql
-    blocked = {n for n in all_names if n not in ctypes}
-    ctypes = propagate_complex_aliases(sql, ctypes, blocked)
-    # SINGLE-relation UPDATE/DELETE get the analysis typer scoped to
-    # the target (the statement is not SELECT-headed, so the hoist
-    # probe can't apply). UPDATE…FROM / DELETE…USING / MERGE get the
-    # JOINT target+source scope (r14, VERDICT item 6): an unqualified
-    # name ambiguous across the joint relations fails analysis — safe
-    # skip — while a qualified/single-scope name types correctly, so
-    # the r13 wholesale refusal of these forms is no longer needed.
-    # INSERT stays unprobed (its source scope is the SELECT body).
-    head = sql.lstrip().split(None, 1)[0].upper()
-    target = (
-        tm.group(1)
-        if tm is not None
-        and head in ("UPDATE", "DELETE")
-        and len({t.lower() for t in tables}) <= 1
-        # DELETE … USING's relation is invisible to statement_tables
-        # (FROM/JOIN only — third review r13)
-        and re.search(r"(?i)\bUSING\b", sql) is None
-        else _dml_joint_scope(sql)
-    )
-    typer = _make_expr_typer(session, sql, from_table=target)
-    from .compat import rewrite_composite_col_eq
-
-    # eq first (r13: _comp_body_span spans UPDATE/MERGE, and duck SET
-    # expressions are 3VL value positions for equality too), then the
-    # ordering leg — same order as the SELECT path
-    sql = rewrite_composite_col_eq(sql, ctypes, typer)
-    return rewrite_composite_col_ord(sql, ctypes, typer)
-
-
 def _hugeint_sums(session: SparkSession, sql: str) -> str:
-    """Schema-aware rewrites that need the statement's resolved column
-    types (catalog lookups — runs in the worker pool):
+    """The schema-typed pass: every statement, read or write, gets the
+    rewrites that need its resolved column types here, once (catalog
+    lookups — runs in the worker pool). Among them:
     - SUM(int) → DECIMAL(38,0) accumulation (DuckDB HUGEINT semantics;
       cannot overflow at 100 TB row counts);
     - length(array_col) → size(array_col) (DuckDB's polymorphic
       len/length; Spark's length rejects arrays);
     - COLUMNS(*) / COLUMNS('regex') star expressions → explicit
-      schema-resolved column lists."""
+      schema-resolved column lists;
+    - enum, date/time ± INTERVAL, DECIMAL division/avg, FLOAT
+      narrowing, composite comparison, VARCHAR rendering, ``||``,
+      printf, set-op widening and boolean-context coercion legs.
+    Column kinds come from ``_statement_scope``'s relations (the DML
+    target included); every expression typer gets its scope as
+    ``from_table`` — None for read-only heads (hoist probes), the
+    target or the joint target+source clause for UPDATE/DELETE/MERGE.
+    The printf leg keeps the read-only hoist only, and the set-op leg
+    runs on read-only heads only."""
     from .compat import (
         ENUM_TYPES,
         rewrite_date_interval_cols,
@@ -3672,21 +3463,15 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
     non_enum_cols: set[str] = set()
     varchar_cols: set[str] = set()
     tbl_fields: dict[str, list] = {}
-    for name in statement_tables(sql):
-        fields = _SCHEMA_FIELDS_CACHE.get(name)
+    tables, scope = _statement_scope(sql)
+
+    def scoped_typer(text: str, leaf=None):
+        return _make_expr_typer(session, text, from_table=scope, leaf=leaf)
+
+    for name in tables:
+        fields = _schema_fields(session, name)
         if fields is None:
-            try:
-                fields = session.table(name).schema.fields
-            except Exception:  # noqa: BLE001 — file relations, typos: skip
-                continue
-            # '__'-prefixed names are one-shot generated temp views
-            # (recursive-CTE frames) dropped right after use — caching
-            # them grows the memo unboundedly (ADVICE r11); the size
-            # bound is a backstop against out-of-band catalog churn
-            if not name.split(".")[-1].strip("`").startswith("__"):
-                if len(_SCHEMA_FIELDS_CACHE) >= 1024:
-                    _SCHEMA_FIELDS_CACHE.clear()
-                _SCHEMA_FIELDS_CACHE[name] = fields
+            continue
         tbl_fields[name] = fields
         int_cols.update(
             f.name.lower() for f in fields if isinstance(f.dataType, int_types)
@@ -3954,7 +3739,7 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
             # fail analysis and starve the probe (review r13)
             from .compat import neutralize_bool_slots
 
-            typer = _make_expr_typer(session, neutralize_bool_slots(sql))
+            typer = scoped_typer(neutralize_bool_slots(sql))
             sql = rewrite_composite_col_eq(sql, ctypes, typer)
             sql = rewrite_composite_col_ord(sql, ctypes, typer)
     if has_vc_cast:
@@ -3971,9 +3756,7 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
             for f in fields4
         }
         vc_base = _f32_narrow(
-            _make_expr_typer(
-                session, neutralize_bool_slots(sql), leaf=_vc_leaf
-            ),
+            scoped_typer(neutralize_bool_slots(sql), _vc_leaf),
             {n for n, ks in vc_kind_seen.items() if ks == {"f32"}},
         )
 
@@ -4020,9 +3803,7 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
 
         sql = rewrite_array_string_casts(
             sql,
-            _make_expr_typer(
-                session, neutralize_bool_slots(sql), leaf=_vc_arr_leaf
-            ),
+            scoped_typer(neutralize_bool_slots(sql), _vc_arr_leaf),
         )
     if has_pipe:
         from .compat import (
@@ -4039,9 +3820,7 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
         sql = rewrite_pipe_concat_special_cols(
             sql, vc_kinds, complex_cols, f32_cols,
             typer_factory=lambda cur: _f32_narrow(
-                _make_expr_typer(
-                    session, neutralize_bool_slots(cur), leaf=_vc_leaf
-                ),
+                scoped_typer(neutralize_bool_slots(cur), _vc_leaf),
                 {n for n, k in vc_kinds.items() if k == "f32"},
             ),
             str_cols={
@@ -4054,8 +3833,8 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
         # duck refuses a mismatched COLUMN argument per non-null row
         # where Java coerces — the typer resolves each marked arg and
         # a mismatch becomes a NULL-guarded raise_error. Read-only
-        # heads only (the typer's hoist gate); DML-embedded printf
-        # keeps the documented coercion fallback.
+        # heads only (the typer's hoist gate, no statement scope);
+        # DML-embedded printf keeps the documented coercion fallback.
         from .compat import (
             neutralize_bool_slots,
             neutralize_pf_casts,
@@ -4116,9 +3895,7 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
                         branch_sql,
                         int_cols | double_cols | dec_cols,
                         str_cols,
-                        lambda neutral: _make_expr_typer(
-                            session, neutral, leaf=_bool_leaf
-                        ),
+                        lambda neutral: scoped_typer(neutral, _bool_leaf),
                         bool_cols,
                     )
                     fields = session.sql(coerced).schema.fields
@@ -4214,7 +3991,7 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
             sql,
             int_cols | double_cols | dec_cols,
             str_cols,
-            lambda neutral: _make_expr_typer(session, neutral, leaf=_bool_leaf),
+            lambda neutral: scoped_typer(neutral, _bool_leaf),
             bool_cols,
         )
     if has_tb:
@@ -4226,9 +4003,7 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
         sql = rewrite_time_bucket_date_cols(
             sql,
             date_cols,
-            _make_expr_typer(
-                session, neutralize_bool_slots(sql), leaf=_date_leaf
-            ),
+            scoped_typer(neutralize_bool_slots(sql), _date_leaf),
         )
     return sql
 

@@ -4011,6 +4011,9 @@ def rewrite_enum_table_columns(
     for s, e, _ in edits:
         for i in range(s, e):
             taken[i] = True
+    # UPDATE / MERGE-arm / DO UPDATE SET '=' assigns, never compares:
+    # neither its target nor its value is a comparison operand
+    assign_eqs = _set_assignment_eqs(sql, mask)
     for m in _ENUM_QIDENT_RE.finditer(sql):
         if not all(mask[m.start() : m.end()]) or taken[m.start()]:
             continue
@@ -4020,6 +4023,8 @@ def rewrite_enum_table_columns(
         label = f"{m.group(1)}.__elabel_{tn}"
         rest = sql[m.end() :]
         rm = _ENUM_CMP_RE.match(rest)
+        if rm is not None and m.end() + rm.start(1) in assign_eqs:
+            continue  # a SET target
         hit = False
         if rm is not None:
             kind = _enum_operand_kind(
@@ -4043,6 +4048,7 @@ def rewrite_enum_table_columns(
                 lm is not None
                 and all(mask[lm.start() : lm.end()])
                 and (lm.start() == 0 or sql[lm.start() - 1] not in "<>=!-:")
+                and lm.start() not in assign_eqs
             ):
                 kind = _enum_left_kind(
                     sql, mask, lm.start(), enum_cols, varchar_cols
@@ -14860,19 +14866,6 @@ def _match_paren_back(
     return None
 
 
-def _pipe_col_repl(
-    col: str, kinds: dict[str, str], complex_cols, cf32_cols
-) -> str | None:
-    base = col.split(".")[-1].lower()
-    kind = kinds.get(base)
-    if kind is not None:
-        return _scalar_vc_repl(col, kind)
-    if base in complex_cols:
-        fn = "duck_varchar_f32" if base in cf32_cols else "duck_varchar"
-        return f"{fn}({col})"
-    return None
-
-
 def rewrite_composite_varchar(
     sql: str, complex_cols=frozenset(), f32_cols=frozenset(), typer=None
 ) -> str:
@@ -15763,6 +15756,30 @@ _ASSIGN_TARGET_RE = re.compile(
     r"(?:[A-Za-z_]\w*|\"[^\"]+\"|`[^`]+`)"
     r"(?:\.(?:[A-Za-z_]\w*|\"[^\"]+\"|`[^`]+`))*"
 )
+
+
+def _set_assignment_eqs(sql: str, mask: list[bool]) -> set[int]:
+    """Positions of the SET assignment ``=`` operators in ``sql`` (see
+    ``_is_set_assignment_eq``); empty for statements without SET."""
+    if re.search(r"(?i)\bSET\b", sql) is None:
+        return set()
+    depth: list[int] = []
+    d = 0
+    for i, ch in enumerate(sql):
+        if mask[i] and ch == ")":
+            d -= 1
+        depth.append(d)
+        if mask[i] and ch == "(":
+            d += 1
+    clause_kws = [
+        k for k in _CLAUSE_KW_RE.finditer(sql) if all(mask[k.start() : k.end()])
+    ]
+    return {
+        m.start()
+        for m in re.finditer(r"(?<![<>!=:])=(?![=>])", sql)
+        if mask[m.start()]
+        and _is_set_assignment_eq(sql, mask, clause_kws, depth, m.start())
+    }
 
 
 def _is_set_assignment_eq(sql, mask, clause_kws, depth, at: int) -> bool:

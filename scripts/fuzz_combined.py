@@ -275,9 +275,9 @@ def run_spark_dml(spark, sql):
         parse_update,
         update_from,
     )
-    from duckdb_pgwire_spark.server.app import _dml_composite_ord
+    from duckdb_pgwire_spark.server.app import _hugeint_sums
 
-    typed = _dml_composite_ord(spark, rewrite(sql))
+    typed = _hugeint_sums(spark, rewrite(sql))
     if typed.lstrip().upper().startswith("UPDATE"):
         table, assignments, pred, from_rel = parse_update(typed)
         update_from(spark, table, assignments, pred, from_rel)

@@ -1631,7 +1631,7 @@ def test_dml_joint_scope_types_source_columns(spark, oracle):
     wrong rows (duck orders NULL elements GREATEST: [1,NULL] >= [1,2]
     is TRUE)."""
     register_udfs(spark)
-    from duckdb_pgwire_spark.server.app import _dml_composite_ord
+    from duckdb_pgwire_spark.server.app import _hugeint_sums
     from duckdb_pgwire_spark.operators.dml import parse_update, update_from
 
     for s in ("jt14", "js14"):
@@ -1652,7 +1652,7 @@ def test_dml_joint_scope_types_source_columns(spark, oracle):
             " WHERE jt14.id = js14.id AND js14.a >= [1,2]"
         )
         oracle.execute(stmt)
-        typed = _dml_composite_ord(spark, rewrite(stmt))
+        typed = _hugeint_sums(spark, rewrite(stmt))
         parsed = parse_update(typed)
         assert parsed is not None
         table, assignments, pred, from_rel = parsed
@@ -1777,7 +1777,7 @@ def test_dml_ambig_complex_qualified_types_via_typer(spark, oracle):
     updates. The "ambig" marker now routes qualified references
     through the joint-scope analysis typer."""
     register_udfs(spark)
-    from duckdb_pgwire_spark.server.app import _dml_composite_ord
+    from duckdb_pgwire_spark.server.app import _hugeint_sums
     from duckdb_pgwire_spark.operators.dml import parse_update, update_from
 
     for s in ("jt15", "js15"):
@@ -1802,7 +1802,7 @@ def test_dml_ambig_complex_qualified_types_via_typer(spark, oracle):
             " jt15.a >= array_append(array_slice(jt15.a, 1, 1), 2)"
         )
         oracle.execute(stmt)  # duck: [1,NULL] >= [1,2] — NULL greatest
-        typed = _dml_composite_ord(spark, rewrite(stmt))
+        typed = _hugeint_sums(spark, rewrite(stmt))
         parsed = parse_update(typed)
         assert parsed is not None
         table, assignments, pred, from_rel = parsed

@@ -64,13 +64,16 @@ def test_upsert_matches_duckdb_pk_semantics(spark, case):
     con.close()
 
     spark.sql("DROP TABLE IF EXISTS ut")
-    loc = tempfile.mkdtemp(prefix="ut_")
-    spark.createDataFrame(init or [(None, None)], "k int, v int").filter(
-        "k IS NOT NULL" if not init else "true"
-    ).write.option("path", loc).mode("overwrite").saveAsTable("ut")
-    spec = parse_insert(stmt)
-    assert spec is not None and spec.conflict is not None, stmt
-    staged = stage_insert_rows(spark, "ut", spec.cols, spec.source_sql)
-    upsert_into(spark, "ut", staged, spec.conflict)
-    got = sorted(tuple(r) for r in spark.table("ut").collect())
+    with tempfile.TemporaryDirectory(prefix="ut_") as loc:
+        spark.createDataFrame(init or [(None, None)], "k int, v int").filter(
+            "k IS NOT NULL" if not init else "true"
+        ).write.option("path", loc).mode("overwrite").saveAsTable("ut")
+        try:
+            spec = parse_insert(stmt)
+            assert spec is not None and spec.conflict is not None, stmt
+            staged = stage_insert_rows(spark, "ut", spec.cols, spec.source_sql)
+            upsert_into(spark, "ut", staged, spec.conflict)
+            got = sorted(tuple(r) for r in spark.table("ut").collect())
+        finally:
+            spark.sql("DROP TABLE IF EXISTS ut")
     assert got == want, (stmt, init, got, want)

@@ -5261,8 +5261,8 @@ def test_wire_composite_ordering_dml_vs_duckdb(client, spark):
     SET expressions are duck VALUE positions (3VL: ``SET flag =
     (a < b)`` assigns NULL on a NULL element pair), UPDATE/DELETE
     WHERE col-vs-col ordering is the 2VL NULLs-greatest filter order
-    (the schema-typed leg now reaches the DML dispatch path via
-    app._dml_composite_ord), CASE-WHEN cond slots inside SET stay
+    (DML takes the same schema-typed pass as SELECT,
+    app._hugeint_sums), CASE-WHEN cond slots inside SET stay
     2VL. Mirrors the duck probe statement-for-statement on arrays
     AND structs."""
     import duckdb
@@ -5533,9 +5533,9 @@ def test_wire_random_composite_dml_fuzz_vs_duckdb(client, spark):
 def test_wire_dml_bool_coercion_vs_duckdb(client, spark):
     """duck coerces numerics/strings to BOOLEAN in DML WHERE tails and
     IF cond slots exactly like the SELECT path (r13 continuation —
-    DML dispatch bypasses _hugeint_sums, so _dml_bool_coercion plumbs
-    the column legs + the from_table typer). Same statement run on
-    both engines, full state compared after each."""
+    DML takes _hugeint_sums' column legs with the target as the
+    typer scope). Same statement run on both engines, full state
+    compared after each."""
     import duckdb
 
     con = duckdb.connect()
@@ -5711,8 +5711,8 @@ def test_wire_update_f32_per_op_narrowing(client, oracle, spark):
     PER-OP in FLOAT (probed: the stored value is f32(f32(f*2)+f32(g*3)),
     which differs from narrow-once-at-store in the last ulp) and
     UPDATE/DELETE predicates with FLOAT comparison promotion (duck's
-    `WHERE f * 3 = 0.3` matches f=0.1). DML dispatch bypasses
-    _hugeint_sums, so these ride _dml_f32_narrow + f32_fix_assignments."""
+    `WHERE f * 3 = 0.3` matches f=0.1). Predicates narrow in
+    _hugeint_sums, SET chains in f32_fix_assignments."""
     _fresh_wire_table(spark, "f32dml")
     stmts = [
         "CREATE TABLE f32dml(id int, x float, f float, g float)",
@@ -5800,9 +5800,8 @@ def test_wire_merge_f32_per_op_narrowing(client, oracle, spark):
 
 def test_wire_insert_select_f32_narrowing(client, oracle, spark):
     """r17: INSERT … SELECT sources compute f32 select items per-op in
-    duck — both the plain fall-through (via _hugeint_sums) and the
-    staged RETURNING / ON CONFLICT path (via _dml_f32_narrow's full
-    orchestrator) must narrow them."""
+    duck — both the plain fall-through and the staged RETURNING / ON
+    CONFLICT path (one _hugeint_sums pass each) must narrow them."""
     _fresh_wire_table(spark, "f32src")
     _fresh_wire_table(spark, "f32dst")
     stmts = [
@@ -5825,9 +5824,8 @@ def test_wire_insert_select_f32_narrowing(client, oracle, spark):
         (r,) = client.query(s)
         assert "error" not in r, (s, r)
         # staged path with NO comparison token and a MULTI-OP chain —
-        # the r17 review found _dml_f32_narrow gated behind the
-        # comparison check, so this stored narrow-once instead of
-        # duck's per-op value
+        # an f32 leg gated behind the comparison check stored
+        # narrow-once instead of duck's per-op value
         s = ("INSERT INTO f32dst SELECT id + 20, f * 2 + f * 3"
              " FROM f32src RETURNING id")
         oracle.execute(s.replace(" RETURNING id", ""))
@@ -6172,3 +6170,161 @@ def test_wire_update_partitioned_table_moves_rows_between_partitions(client, spa
     parts = sorted(x.partition for x in spark.sql("SHOW PARTITIONS part_upd").collect())
     assert parts == ["p=1", "p=12"], parts
     _fresh_wire_table(spark, "part_upd")
+
+
+def _dml_state_vs_duckdb(client, con, stmts, select):
+    """Run each statement on DuckDB and over the wire; after each,
+    compare ``select`` (one text-rendered row list) on both sides."""
+    for s in stmts:
+        con.execute(s)
+        (r,) = client.query(s)
+        assert "error" not in r, (s, r)
+        want = [
+            [None if v is None else str(v) for v in row]
+            for row in con.execute(select).fetchall()
+        ]
+        (r,) = client.query(select)
+        assert r.get("rows") == want, (s, r, want)
+
+
+def test_wire_dml_array_length_vs_duckdb(client, spark):
+    """DML takes the same schema-typed pass as SELECT: ``len(arr)`` on
+    an INT[] column becomes ``size(arr)`` in UPDATE SET values and
+    DELETE predicates too (Spark's length() rejects arrays)."""
+    import duckdb
+
+    con = duckdb.connect()
+    _fresh_wire_table(spark, "dml_len")
+    try:
+        _dml_state_vs_duckdb(
+            client,
+            con,
+            [
+                "CREATE TABLE dml_len(k INT, arr INT[])",
+                "INSERT INTO dml_len VALUES (1, [1,2,3]), (2, [1]),"
+                " (3, NULL), (4, [4,5,6,7])",
+                "UPDATE dml_len SET k = len(arr) WHERE k > 1",
+                "DELETE FROM dml_len WHERE len(arr) > 2",
+            ],
+            "SELECT k, len(arr) AS n FROM dml_len ORDER BY k NULLS LAST, n",
+        )
+    finally:
+        con.close()
+        client.query("DROP TABLE IF EXISTS dml_len")
+
+
+def test_wire_enum_column_dml_vs_duckdb(client, spark):
+    """UPDATE/DELETE on an enum column: the SET target stays a column
+    (the enum leg skips the assignment '='), the predicate compares
+    labels, a bare literal assigned to the column is validated — an
+    invalid member refuses with 22P02 like DuckDB's conversion error."""
+    import duckdb
+
+    con = duckdb.connect()
+    _fresh_wire_table(spark, "dml_em")
+    ddl = "CREATE TYPE dml_mood AS ENUM ('sad', 'ok', 'happy')"
+    con.execute(ddl)
+    (r,) = client.query(ddl)
+    assert "error" not in r, r
+    try:
+        _dml_state_vs_duckdb(
+            client,
+            con,
+            [
+                "CREATE TABLE dml_em(k INT, m dml_mood)",
+                "INSERT INTO dml_em VALUES (1, 'happy'), (2, 'ok'),"
+                " (3, 'sad'), (4, 'happy')",
+                "UPDATE dml_em SET m = 'sad' WHERE m = 'happy'",
+                "DELETE FROM dml_em WHERE m = 'ok'",
+            ],
+            "SELECT k, CAST(m AS VARCHAR) AS m FROM dml_em ORDER BY k",
+        )
+        (r,) = client.query("UPDATE dml_em SET m = 'x' WHERE k = 1")
+        assert r.get("sqlstate") == "22P02", r
+        (r,) = client.query("SELECT CAST(m AS VARCHAR) AS m FROM dml_em WHERE k = 1")
+        assert r["rows"] == [["sad"]], r
+    finally:
+        con.close()
+        client.query("DROP TABLE IF EXISTS dml_em")
+        client.query("DROP TYPE IF EXISTS dml_mood")
+
+
+def test_wire_update_date_interval_vs_duckdb(client, spark):
+    """``date_col + INTERVAL`` in an UPDATE SET is a TIMESTAMP in DuckDB,
+    so a VARCHAR target stores the timestamp text."""
+    import duckdb
+
+    con = duckdb.connect()
+    _fresh_wire_table(spark, "dml_di")
+    try:
+        _dml_state_vs_duckdb(
+            client,
+            con,
+            [
+                "CREATE TABLE dml_di(k INT, d DATE, s VARCHAR, ts TIMESTAMP)",
+                "INSERT INTO dml_di VALUES (1, DATE '2024-01-31', NULL, NULL)",
+                "UPDATE dml_di SET s = d + INTERVAL 1 DAY,"
+                " ts = d + INTERVAL 36 HOUR",
+            ],
+            "SELECT k, s, ts FROM dml_di ORDER BY k",
+        )
+    finally:
+        con.close()
+        client.query("DROP TABLE IF EXISTS dml_di")
+
+
+def test_wire_update_returning_matches_stored_rows(client, spark):
+    """UPDATE … RETURNING projects the rows the UPDATE stores: ``SET v =
+    DEFAULT`` resolves the declared default, and a DECIMAL(10,2) target
+    returns the stored 0.33, not the unrounded quotient (DuckDB-probed
+    values)."""
+    import duckdb
+
+    con = duckdb.connect()
+    _fresh_wire_table(spark, "dml_rt")
+    try:
+        for s in (
+            "CREATE TABLE dml_rt(k INT, v INT DEFAULT 7, x DECIMAL(10,2))",
+            "INSERT INTO dml_rt VALUES (1, 1, 1.00), (2, 2, 2.00)",
+        ):
+            con.execute(s)
+            (r,) = client.query(s)
+            assert "error" not in r, (s, r)
+        for s in (
+            "UPDATE dml_rt SET v = DEFAULT WHERE k = 2 RETURNING *",
+            "UPDATE dml_rt SET x = x / 3 WHERE k = 1 RETURNING x",
+        ):
+            want = [[str(v) for v in row] for row in con.execute(s).fetchall()]
+            (r,) = client.query(s)
+            assert r.get("rows") == want, (s, r, want)
+        q = "SELECT k, v, x FROM dml_rt ORDER BY k"
+        (r,) = client.query(q)
+        assert r["rows"] == [
+            [str(v) for v in row] for row in con.execute(q).fetchall()
+        ], r
+    finally:
+        con.close()
+        client.query("DROP TABLE IF EXISTS dml_rt")
+
+
+def test_guarded_statement_sqlstate(client, spark):
+    """A statement that fails analysis answers the analysis error's
+    SQLSTATE even when it carries a guarded raise_error(): the
+    AnalysisException quotes the plan, raise_error call included, so
+    the error class — not the message text — must decide."""
+    from pyspark.errors import AnalysisException
+
+    from duckdb_pgwire_spark.server.app import _sqlstate
+
+    with pytest.raises(AnalysisException) as exc:
+        spark.sql(
+            "SELECT CASE WHEN 1 < 0 THEN raise_error('Out of Range Error: x')"
+            " ELSE length(array(1,2)) END"
+        )
+    assert "USER_RAISED_EXCEPTION" in str(exc.value)
+    assert _sqlstate(exc.value) == "42K09"
+    # over the wire: ln() carries its DuckDB-parity guard
+    (r,) = client.query("SELECT ln(n_nationkey) + [1, 2] AS v FROM nation")
+    assert r.get("sqlstate") == "42K09", r
+    (r,) = client.query("SELECT raise_error('boom')")
+    assert r.get("sqlstate") == "P0001", r
