@@ -31,6 +31,7 @@ import shutil
 import tempfile
 import uuid
 from collections import deque
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -859,27 +860,33 @@ def _track_temp_view(session: SparkSession, name: str) -> None:
             pass
 
 
-def _materialize(session: SparkSession, rows: str | DataFrame) -> DataFrame:
-    """Snapshot a SELECT (text or DataFrame) to a temp parquet dir and
-    read it back — decouples the result from the source table so the
-    subsequent rewrite-on-write of that table cannot invalidate it.
-    Distributed write, never through the driver; dirs are
-    janitor-bounded."""
+def _materialize(rows: DataFrame) -> DataFrame:
+    """Snapshot rows to a temp parquet dir and read them back —
+    decouples the result from the source table so the subsequent
+    rewrite-on-write of that table cannot invalidate it. Distributed
+    write, never through the driver; dirs are janitor-bounded."""
     loc = tempfile.mkdtemp(prefix="dml_ret_")
     _track_snapshot_dir(loc)
-    df = session.sql(rows) if isinstance(rows, str) else rows
-    df.write.mode("overwrite").parquet(loc)
-    return session.read.parquet(loc)
+    rows.write.mode("overwrite").parquet(loc)
+    return rows.sparkSession.read.parquet(loc)
 
 
-def project_returning(session: SparkSession, df: DataFrame, proj: str) -> DataFrame:
+def project_returning(
+    session: SparkSession,
+    df: DataFrame,
+    proj: str,
+    typed: Callable[[str], str] = lambda q: q,
+) -> DataFrame:
     """Evaluate a RETURNING projection over the affected-rows snapshot.
     The snapshot carries the target table's columns, so ``*`` and any
-    column expression behave exactly as PG's RETURNING scope."""
+    column expression behave exactly as PG's RETURNING scope. ``typed``
+    rewrites the projection's SELECT text in that scope (the server's
+    schema-typed pass, for an INSERT whose body was typed in its
+    source's scope)."""
     view = f"__returning_{uuid.uuid4().hex[:12]}"
     df.createOrReplaceTempView(view)
     _track_temp_view(session, view)
-    out = session.sql(f"SELECT {proj} FROM {view}")
+    out = session.sql(typed(f"SELECT {proj} FROM {view}"))
     out.schema  # force analysis now so a bad projection errors here  # noqa: B018
     # the uuid-fresh view stays registered for the lazy execution that
     # streams the rows; no name collision across statements/sessions
@@ -903,7 +910,7 @@ def update_returning(
         for f in session.table(table).schema.fields
     ]
     hits = _flagged(session, table, pred).filter("__dml_hit")
-    affected = _materialize(session, post(hits).select(*stored))
+    affected = _materialize(post(hits).select(*stored))
     _rewrite_matched(session, table, pred, post)
     return affected
 
@@ -914,7 +921,7 @@ def delete_returning(
     """DELETE that snapshots the removed rows (PG: RETURNING sees the
     OLD values)."""
     where = f" WHERE coalesce(({pred}), false)" if pred is not None else ""
-    affected = _materialize(session, f"SELECT * FROM {table}{where}")
+    affected = _materialize(session.sql(f"SELECT * FROM {table}{where}"))
     delete_from(session, table, pred)
     return affected
 
@@ -1007,8 +1014,9 @@ def update_from(
     set_map = {c.lower(): e for c, e in assignments}
     collist = ", ".join(cols)
     rid = _materialize(
-        session,
-        f"SELECT *, monotonically_increasing_id() AS __rid FROM {table}",
+        session.sql(
+            f"SELECT *, monotonically_increasing_id() AS __rid FROM {table}"
+        )
     )
     sv = f"__updfrom_{uuid.uuid4().hex[:12]}"
     rid.createOrReplaceTempView(sv)
@@ -1019,12 +1027,13 @@ def update_from(
         for c in cols
     )
     matched = _materialize(
-        session,
-        f"SELECT __rid, {collist} FROM ("
-        f"SELECT {leaf}.__rid AS __rid, {proj}, "
-        f"row_number() OVER (PARTITION BY {leaf}.__rid ORDER BY {leaf}.__rid) AS __rn "
-        f"FROM {sv} {leaf} JOIN ({src_sql}) {src_alias} ON {on}"
-        f") WHERE __rn = 1",
+        session.sql(
+            f"SELECT __rid, {collist} FROM ("
+            f"SELECT {leaf}.__rid AS __rid, {proj}, "
+            f"row_number() OVER (PARTITION BY {leaf}.__rid ORDER BY {leaf}.__rid) AS __rn "
+            f"FROM {sv} {leaf} JOIN ({src_sql}) {src_alias} ON {on}"
+            f") WHERE __rn = 1"
+        )
     )
     mv = f"__updmatch_{uuid.uuid4().hex[:12]}"
     matched.createOrReplaceTempView(mv)
@@ -1058,9 +1067,10 @@ def delete_using(
     src_sql = src_rel if " " in src_rel else f"SELECT * FROM {src_rel}"
     on = f"({pred})" if pred is not None else "true"
     affected = _materialize(
-        session,
-        f"SELECT {leaf}.* FROM {table} {leaf} "
-        f"LEFT SEMI JOIN ({src_sql}) {src_alias} ON {on}",
+        session.sql(
+            f"SELECT {leaf}.* FROM {table} {leaf} "
+            f"LEFT SEMI JOIN ({src_sql}) {src_alias} ON {on}"
+        )
     )
     _rewrite_table(
         session,
@@ -1391,7 +1401,7 @@ def upsert_into(
         f"FROM {sview} s LEFT ANTI JOIN {table} t ON ({cond})"
     )
     if conflict.action == "nothing":
-        affected = _materialize(session, inserted)
+        affected = _materialize(session.sql(inserted))
         aview = f"__upsert_aff_{uuid.uuid4().hex[:12]}"
         affected.createOrReplaceTempView(aview)
         _track_temp_view(session, aview)
@@ -1406,7 +1416,7 @@ def upsert_into(
             f"SELECT {', '.join(f's.{c} AS {c}' for c in cols)} "
             f"FROM {table} t JOIN {sview} s ON ({cond})"
         )
-        affected = _materialize(session, f"{replaced} UNION ALL {inserted}")
+        affected = _materialize(session.sql(f"{replaced} UNION ALL {inserted}"))
         aview = f"__upsert_aff_{uuid.uuid4().hex[:12]}"
         affected.createOrReplaceTempView(aview)
         _track_temp_view(session, aview)
@@ -1435,7 +1445,7 @@ def upsert_into(
     updated = (
         f"SELECT {upd_proj} FROM {table} t JOIN {sview} s ON ({cond}) WHERE {predq}"
     )
-    affected = _materialize(session, f"{updated} UNION ALL {inserted}")
+    affected = _materialize(session.sql(f"{updated} UNION ALL {inserted}"))
     aview = f"__upsert_aff_{uuid.uuid4().hex[:12]}"
     affected.createOrReplaceTempView(aview)
     _track_temp_view(session, aview)
@@ -1447,6 +1457,31 @@ def upsert_into(
     post = f"{kept} UNION ALL SELECT {collist} FROM {aview}"
     _rewrite_table(session, table, post)
     return affected
+
+
+# The registry entries' tables stay in the catalog after an entry
+# returns (its DataFrame reads them lazily), so their directories are
+# not snapshots: an entry removes its previous directory when it runs
+# again, after dropping the table, and the last ones go at exit.
+_REGISTRY_TABLE_DIRS: dict[str, str] = {}
+
+
+def _fresh_registry_table(spark: SparkSession, tbl: str, prefix: str) -> str:
+    """Drop a registry entry's table and its previous directory; return
+    a new external location for it (a stale managed dir would block
+    saveAsTable)."""
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    old = _REGISTRY_TABLE_DIRS.pop(tbl, None)
+    if old is not None:
+        shutil.rmtree(old, ignore_errors=True)
+    loc = _REGISTRY_TABLE_DIRS[tbl] = tempfile.mkdtemp(prefix=prefix)
+    return loc
+
+
+@atexit.register
+def _remove_registry_table_dirs() -> None:
+    for loc in _REGISTRY_TABLE_DIRS.values():
+        shutil.rmtree(loc, ignore_errors=True)
 
 
 @query(
@@ -1475,10 +1510,7 @@ def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     two statements.
     """
     tbl = "dml_demo_customer"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # external location: a stale managed dir would block saveAsTable
-    loc = tempfile.mkdtemp(prefix="dml_demo_")
-    _track_snapshot_dir(loc)  # removed with the process's snapshots
+    loc = _fresh_registry_table(spark, tbl, "dml_demo_")
     load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     ).write.option("path", loc).mode("overwrite").saveAsTable(tbl)
@@ -1529,10 +1561,7 @@ def dml_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``/root/reference/src/duckdb_pgwire_extension.cpp:52``).
     """
     tbl = "dml_merge_customer"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # external location: a stale managed dir would block saveAsTable
-    loc = tempfile.mkdtemp(prefix="dml_merge_")
-    _track_snapshot_dir(loc)  # removed with the process's snapshots
+    loc = _fresh_registry_table(spark, tbl, "dml_merge_")
     load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal").write.option(
         "path", loc
     ).mode("overwrite").saveAsTable(tbl)
@@ -1569,9 +1598,7 @@ def dml_insert_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's RETURNING via delegation,
     ``/root/reference/src/duckdb_pgwire_extension.cpp:52``)."""
     tbl = "dml_ret_demo"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = tempfile.mkdtemp(prefix="dml_ret_demo_")
-    _track_snapshot_dir(loc)  # removed with the process's snapshots
+    loc = _fresh_registry_table(spark, tbl, "dml_ret_demo_")
     spark.sql(
         "SELECT CAST(NULL AS BIGINT) AS id, CAST(NULL AS STRING) AS name, "
         "CAST(NULL AS STRING) AS note WHERE 1 = 0"
@@ -1617,9 +1644,7 @@ def dml_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     target column, and a table-qualified column in the WHERE arm). The
     oracle is the pure-SELECT post-image of PG upsert semantics."""
     tbl = "dml_upsert_customer"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = tempfile.mkdtemp(prefix="dml_upsert_")
-    _track_snapshot_dir(loc)  # removed with the process's snapshots
+    loc = _fresh_registry_table(spark, tbl, "dml_upsert_")
     load_table(spark, sf_dir, "customer").selectExpr(
         "c_custkey AS k", "c_acctbal AS bal"
     ).write.option("path", loc).mode("overwrite").saveAsTable(tbl)
@@ -1657,9 +1682,7 @@ def dml_update_from(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-match-per-target-row rule is deterministic and the oracle
     is a pure LEFT-JOIN post-image."""
     tbl = "dml_updfrom_customer"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    loc = tempfile.mkdtemp(prefix="dml_updfrom_")
-    _track_snapshot_dir(loc)  # removed with the process's snapshots
+    loc = _fresh_registry_table(spark, tbl, "dml_updfrom_")
     load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal"
     ).write.option("path", loc).mode("overwrite").saveAsTable(tbl)

@@ -2089,8 +2089,10 @@ class PgWireServer:
                 upsert_into,
             )
 
-            typed = _hugeint_sums(session, rewrite(stmt))
-            sql, returning = split_returning(typed)
+            # the body reads its source relations and RETURNING the
+            # inserted rows: each is typed in its own scope
+            sql, returning = split_returning(rewrite(stmt))
+            sql = _hugeint_sums(session, sql)
             spec = parse_insert(sql)
             # never write THROUGH a view: the plain INSERT runs
             # spark.sql directly, and Spark appends into the files
@@ -2123,7 +2125,7 @@ class PgWireServer:
                 )
                 return f"INSERT 0 {insert_rows(session, staged, spec.table)}"
             if returning is None and (spec is None or not spec.conflict):
-                return _prepared(session, typed)
+                return _prepared(session, sql)
             if spec is None:
                 raise _WireError("unsupported INSERT form with RETURNING", "0A000")
             staged = stage_insert_rows(session, spec.table, spec.cols, spec.source_sql)
@@ -2139,7 +2141,10 @@ class PgWireServer:
                 ret_src = (
                     staged.drop("__ins_ord") if spec.conflict is not None else aff
                 )
-                return project_returning(session, ret_src, returning)
+                return project_returning(
+                    session, ret_src, returning,
+                    typed=lambda q: _hugeint_sums(session, q),
+                )
             return f"INSERT 0 {aff.count()}"
         if first == "MERGE":
             from ..operators.dml import merge_into, parse_merge
@@ -3242,6 +3247,8 @@ def _schema_fields(session: SparkSession, name: str):
     return fields
 
 
+# INSERT … ON CONFLICT … DO UPDATE: its SET arms read the target row
+_UPSERT_UPDATE_RE = re.compile(r"(?is)\bON\s+CONFLICT\b.*\bDO\s+UPDATE\b")
 _DML_TARGET_RE = re.compile(
     r"^\s*(?:UPDATE|MERGE\s+INTO|DELETE\s+FROM|INSERT\s+INTO)\s+"
     r"((?:[\w$]+|\"[^\"]+\"|`[^`]+`)(?:\.(?:[\w$]+|\"[^\"]+\"|`[^`]+`))*)",
@@ -3319,32 +3326,40 @@ def _dml_joint_scope(sql: str) -> str | None:
     return f"{target}, {src}"
 
 
-def _statement_scope(sql: str) -> tuple[list[str], str | None]:
+def _statement_scope(sql: str) -> tuple[list[str], str | None, str | None]:
     """The statement's relations and its typer scope, resolved once per
-    statement. Relations: ``statement_tables`` plus the DML target.
-    Scope (``from_table`` of every typer built for the statement): None
-    for read-only heads, whose typers hoist into the statement's own
-    select lists, and for INSERT, whose source scope is its SELECT body
+    statement, as ``(sources, target, scope)``. ``sources`` are the
+    FROM/JOIN relations (``statement_tables``). ``target`` is the DML
+    target where its columns are in expression scope and FROM does not
+    already name it: UPDATE and MERGE, and INSERT only with ON CONFLICT
+    … DO UPDATE (a plain INSERT's expressions read its source relations
+    alone); otherwise None. ``scope`` (``from_table`` of every typer
+    built for the statement): None for read-only heads, whose typers
+    hoist into the statement's own select lists, and for INSERT
     (unprobed); the target for a single-relation UPDATE/DELETE; the
     joint target+source clause for UPDATE … FROM, DELETE … USING and
     MERGE (``_dml_joint_scope``). A pure function of the text, as the
     typer memo's key requires."""
-    tables = list(statement_tables(sql))
+    sources = list(statement_tables(sql))
     tm = _DML_TARGET_RE.match(sql)
     if tm is None:
-        return tables, None
-    target = tm.group(1)
-    if target not in tables:
-        tables.append(target)
+        return sources, None, None
     head = sql.lstrip().split(None, 1)[0].upper()
+    target = tm.group(1)
+    if target in sources or (
+        head == "INSERT" and _UPSERT_UPDATE_RE.search(sql) is None
+    ):
+        target = None
+    if head == "INSERT":
+        return sources, target, None
     single = (
         head in ("UPDATE", "DELETE")
-        and len({t.lower() for t in tables}) <= 1
+        and len({t.lower() for t in sources + [tm.group(1)]}) <= 1
         # DELETE … USING's relation is invisible to statement_tables
         # (FROM/JOIN only)
         and re.search(r"(?i)\bUSING\b", sql) is None
     )
-    return tables, target if single else _dml_joint_scope(sql)
+    return sources, target, tm.group(1) if single else _dml_joint_scope(sql)
 
 
 def _f32_narrow(typer, f32_names):
@@ -3377,9 +3392,11 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
       narrowing, composite comparison, VARCHAR rendering, ``||``,
       printf, set-op widening and boolean-context coercion legs.
     Column kinds come from ``_statement_scope``'s relations (the DML
-    target included); every expression typer gets its scope as
-    ``from_table`` — None for read-only heads (hoist probes), the
-    target or the joint target+source clause for UPDATE/DELETE/MERGE.
+    target where its columns are in expression scope; star expressions
+    expand the FROM relations only); every expression typer gets its
+    scope as ``from_table`` — None for read-only heads (hoist probes)
+    and INSERT, the target or the joint target+source clause for
+    UPDATE/DELETE/MERGE.
     The printf leg keeps the read-only hoist only, and the set-op leg
     runs on read-only heads only."""
     from .compat import (
@@ -3463,12 +3480,12 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
     non_enum_cols: set[str] = set()
     varchar_cols: set[str] = set()
     tbl_fields: dict[str, list] = {}
-    tables, scope = _statement_scope(sql)
+    sources, target, scope = _statement_scope(sql)
 
     def scoped_typer(text: str, leaf=None):
         return _make_expr_typer(session, text, from_table=scope, leaf=leaf)
 
-    for name in tables:
+    for name in sources + ([target] if target is not None else []):
         fields = _schema_fields(session, name)
         if fields is None:
             continue
@@ -3541,7 +3558,9 @@ def _hugeint_sums(session: SparkSession, sql: str) -> str:
             if isinstance(f.dataType, T.BooleanType)
         )
         for f in fields:
-            if f.name not in ordered_cols:
+            # star expressions expand the FROM relations, never the
+            # DML target
+            if name != target and f.name not in ordered_cols:
                 ordered_cols.append(f.name)
             if has_enum:
                 low = f.name.lower()

@@ -6273,6 +6273,62 @@ def test_wire_update_date_interval_vs_duckdb(client, spark):
         client.query("DROP TABLE IF EXISTS dml_di")
 
 
+def test_wire_insert_select_types_in_source_scope_vs_duckdb(client, spark):
+    """An INSERT … SELECT types its body in its source relations' scope,
+    not the target's: a source DATE column that shares its name with a
+    VARCHAR target column keeps DuckDB's DATE ± INTERVAL → TIMESTAMP
+    promotion, and ``* REPLACE`` / ``COLUMNS(*)`` expand the source's
+    columns only. RETURNING is typed over the inserted rows."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("ins_src", "ins_dst", "ins_ret"):
+        _fresh_wire_table(spark, t)
+    try:
+        for s in (
+            "CREATE TABLE ins_src(a INT, b INT, d DATE)",
+            "CREATE TABLE ins_dst(x INT, y INT, d VARCHAR)",
+            "INSERT INTO ins_src VALUES (1, 10, DATE '2024-01-31'),"
+            " (2, 20, NULL)",
+        ):
+            con.execute(s)
+            (r,) = client.query(s)
+            assert "error" not in r, (s, r)
+        _dml_state_vs_duckdb(
+            client,
+            con,
+            [
+                "INSERT INTO ins_dst SELECT a, b, d + INTERVAL 1 DAY"
+                " FROM ins_src",
+                "INSERT INTO ins_dst SELECT * REPLACE (a + 100 AS a)"
+                " FROM ins_src",
+                "INSERT INTO ins_dst SELECT COLUMNS(*) FROM ins_src"
+                " WHERE a = 1",
+            ],
+            "SELECT x, y, d FROM ins_dst ORDER BY x, d",
+        )
+        for s in (
+            "INSERT INTO ins_dst SELECT a + 10, b, d - INTERVAL 1 DAY"
+            " FROM ins_src RETURNING x, d",
+            "CREATE TABLE ins_ret(k INT, d DATE)",
+            "INSERT INTO ins_ret VALUES (1, DATE '2024-01-31')"
+            " RETURNING k, d + INTERVAL 1 DAY AS e",
+        ):
+            want = [
+                [None if v is None else str(v) for v in row]
+                for row in con.execute(s).fetchall()
+            ]
+            (r,) = client.query(s)
+            assert "error" not in r, (s, r)
+            assert sorted(r.get("rows") or [], key=str) == sorted(
+                want, key=str
+            ), (s, r, want)
+    finally:
+        con.close()
+        for t in ("ins_src", "ins_dst", "ins_ret"):
+            client.query(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_wire_update_returning_matches_stored_rows(client, spark):
     """UPDATE … RETURNING projects the rows the UPDATE stores: ``SET v =
     DEFAULT`` resolves the declared default, and a DECIMAL(10,2) target
