@@ -26,6 +26,7 @@ WHERE (UPDATE) / rows removed (DELETE).
 from __future__ import annotations
 
 import atexit
+import json
 import re
 import shutil
 import tempfile
@@ -167,9 +168,14 @@ def _rewrite_table(
     table: str,
     post_image: str | DataFrame,
     counts: Observation | None = None,
+    data_schema=None,
 ) -> dict:
     """Replace the rows of ``table`` with ``post_image`` (SQL text or a
     DataFrame over the table itself) in one Spark job that writes once.
+    With ``data_schema`` (a JVM StructType of the non-partition
+    columns), the post-image has that schema instead of the table's,
+    and the catalog entry takes it after the swap (ALTER TABLE … RENAME/
+    DROP COLUMN, _recreate_table).
 
     The post-image goes through Spark's insert path (store-assignment
     casts, the table's provider and storage options) into a staging
@@ -201,9 +207,12 @@ def _rewrite_table(
     stage = f"`{db}`.__dml_stage_{tag}"
     stage_ident = state.sqlParser().parseTableIdentifier(stage)
     loc = stage_dir.toString().replace("\\", "\\\\").replace("'", "\\'")
+    external = state.catalog().externalCatalog()
     swap = "not started"
     try:
         session.sql(f"CREATE TABLE {stage} LIKE {target} LOCATION '{loc}'")
+        if data_schema is not None:
+            external.alterTableDataSchema(db, stage_ident.table(), data_schema)
         df = session.sql(post_image) if isinstance(post_image, str) else post_image
         df.write.insertInto(stage)
         metrics = _observed(counts) if counts is not None else {}
@@ -218,6 +227,8 @@ def _rewrite_table(
             ):
                 raise OSError(f"could not move {name} into {root.toString()}")
         swap = "done"
+        if data_schema is not None:
+            external.alterTableDataSchema(db, ident.table(), data_schema)
         if meta.partitionColumnNames().nonEmpty() and meta.tracksPartitionsInCatalog():
             session.sql(f"MSCK REPAIR TABLE {target} SYNC PARTITIONS")
     finally:
@@ -936,22 +947,36 @@ def truncate_table(session: SparkSession, table: str) -> int:
     return delete_from(session, table, None)
 
 
-def _recreate_table(session: SparkSession, table: str, select_sql: str) -> None:
-    """Schema-CHANGING rewrite (rename/drop column). A v1 table's catalog
-    entry cannot take a new schema in place, so unlike _rewrite_table
-    this replaces the entry and moves the table: the NEW table is built
-    fully first (CTAS into a fresh external location under the temporary
-    directory — the only step that can fail on data), then swapped in
-    with a metadata-only drop+rename, so the failure window is two
-    catalog operations, not a distributed write."""
-    tmp = f"__alter_new_{table.replace('.', '_')}"
-    session.sql(f"DROP TABLE IF EXISTS {tmp}")
-    loc = tempfile.mkdtemp(prefix="alter_new_")
-    session.sql(
-        f"CREATE TABLE {tmp} USING parquet LOCATION '{loc}' AS {select_sql}"
+def _recreate_table(
+    session: SparkSession, table: str, select_sql: str, renamed: Callable
+) -> None:
+    """Schema-CHANGING rewrite (rename/drop column): ``select_sql``
+    gives the new rows and ``renamed(column)`` each old column's new
+    name, or None for a dropped one. SQL cannot give a v1 table's
+    catalog entry a new schema in place, so _rewrite_table writes the
+    rows into its in-location stage and swaps them in, and the catalog
+    entry then takes the new data schema: the table keeps its location
+    and its managed or external kind. A partition column names a
+    directory level, so it is refused."""
+    from pyspark.sql.types import StructType
+
+    _assert_writable(session, table)
+    jss = session._jsparkSession
+    state = jss.sessionState()
+    meta = state.catalog().getTableMetadata(
+        state.sqlParser().parseTableIdentifier(table)
     )
-    session.sql(f"DROP TABLE {table}")
-    session.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
+    for i in range(meta.partitionColumnNames().size()):
+        col = meta.partitionColumnNames().apply(i)
+        if renamed(col) != col:
+            raise ValueError(f'cannot rename or drop partition column "{col}"')
+    fields = [
+        f.jsonValue() | {"name": name}
+        for f in StructType.fromJson(json.loads(meta.dataSchema().json())).fields
+        if (name := renamed(f.name)) is not None
+    ]
+    schema = jss.parseDataType(json.dumps({"type": "struct", "fields": fields}))
+    _rewrite_table(session, table, select_sql, data_schema=schema)
 
 
 def rename_column(session: SparkSession, table: str, old: str, new: str) -> None:
@@ -963,7 +988,12 @@ def rename_column(session: SparkSession, table: str, old: str, new: str) -> None
     sel = ", ".join(
         f"{c} AS {new}" if c.lower() == old.lower() else c for c in cols
     )
-    _recreate_table(session, table, f"SELECT {sel} FROM {table}")
+    _recreate_table(
+        session,
+        table,
+        f"SELECT {sel} FROM {table}",
+        lambda c: new if c.lower() == old.lower() else c,
+    )
 
 
 def drop_column(
@@ -978,7 +1008,12 @@ def drop_column(
     keep = [c for c in cols if c.lower() != col.lower()]
     if not keep:
         raise ValueError("cannot drop the only column of a table")
-    _recreate_table(session, table, f"SELECT {', '.join(keep)} FROM {table}")
+    _recreate_table(
+        session,
+        table,
+        f"SELECT {', '.join(keep)} FROM {table}",
+        lambda c: None if c.lower() == col.lower() else c,
+    )
 
 
 # ----------------------------------------------------- joined UPDATE/DELETE

@@ -32,20 +32,27 @@ runs as one call on the worker pool, under the connection's Spark job
 tag (so a CancelRequest reaches it); the event loop does only protocol
 framing and COPY data transfer (fetching each batch of result rows,
 and the load at the end of COPY FROM STDIN, are further tagged pool
-calls). Fetch rule: rows built on the driver
-(DESCRIBE, SHOW, PRAGMA, pg_catalog) are Arrow-backed local relations
-and run no Spark job; a result whose optimized plan bounds its rows at
-≤1024 is fetched with one collect(); every other result streams
-through one served socket, partition by partition, written ahead of
-the reader (_ServedRows). Either way rows reach the socket in bounded
-batches (the analogue of DataChunk-at-a-time). A command Spark runs
-itself (CREATE, DROP, a plain INSERT) answers only its CommandComplete.
+calls). Fetch rule (_fetch_iter): rows built on the driver (DESCRIBE,
+SHOW, PRAGMA, pg_catalog) are Arrow-backed local relations and run no
+Spark job. A fold-shaped statement — Project/Filter/Limit over a
+FROM-less SELECT's one row or over a fixture view's driver-resident
+copy (session.resident_relation) — is planned again over that
+LocalRelation, and when Catalyst folds it to ≤1024 rows it is fetched
+with one collect() and no Spark job; the reference answers from an
+in-process engine the same way (cpp:52,97). Otherwise a result whose
+optimized plan bounds its rows at ≤1024 is fetched with one collect();
+every other result streams through one served socket, partition by
+partition, written ahead of the reader (_ServedRows). Either way rows
+reach the socket in bounded batches (the analogue of
+DataChunk-at-a-time). A command Spark runs itself (CREATE, DROP, a
+plain INSERT) answers only its CommandComplete.
 
 Write rule: UPDATE, DELETE, TRUNCATE, MERGE, UPDATE … FROM, DELETE …
-USING and INSERT … ON CONFLICT rewrite the table in one Spark job that
-writes it once and counts the affected rows in the same job
-(operators/dml.py _rewrite_table); COPY FROM and INSERT take their
-counts from their one write.
+USING, INSERT … ON CONFLICT and ALTER TABLE … RENAME/DROP COLUMN
+rewrite the table inside its own location in one Spark job that writes
+it once and counts the affected rows in the same job (operators/dml.py
+_rewrite_table); COPY FROM and INSERT take their counts from their one
+write.
 """
 
 from __future__ import annotations
@@ -61,6 +68,8 @@ import threading
 from collections.abc import Iterator
 from typing import NamedTuple
 
+from py4j.protocol import Py4JError, Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -98,6 +107,7 @@ from .compat import (
     statement_tables,
     strip_table_constraints,
 )
+from ..session import resident_relation
 from .typemap import (
     decode_binary_param,
     encode_binary,
@@ -138,15 +148,127 @@ def _local_df(session: SparkSession, rows: list, ddl: str) -> DataFrame:
 
 
 def _fetch_iter(df: DataFrame) -> Iterator:
-    """The row iterator of a result: one collect() when the optimized
-    plan bounds its rows at ≤ _BATCH_ROWS (a LocalRelation, a global
-    aggregate, a small LIMIT) — no more than one write burst reaches
-    the driver, and a driver-built relation runs no Spark job — else
-    the rows stream through one served socket (_ServedRows)."""
+    """The row iterator of a result. A fold-shaped plan (see _folded)
+    is answered from its folded copy with one collect() and no Spark
+    job. Otherwise: one collect() when the optimized plan bounds its
+    rows at ≤ _BATCH_ROWS (a LocalRelation, a global aggregate, a small
+    LIMIT) — no more than one write burst reaches the driver, and a
+    driver-built relation runs no Spark job — else the rows stream
+    through one served socket (_ServedRows)."""
+    folded = _folded(df)
+    if folded is not None:
+        return iter(folded.collect())
     bound = df._jdf.queryExecution().optimizedPlan().maxRows()
     if bound.isDefined() and bound.get() <= _BATCH_ROWS:
         return iter(df.collect())
     return _ServedRows(df)
+
+
+# analyzed-plan nodes a fold-shaped statement may stack over its leaf
+_FOLD_CHAIN = frozenset(
+    ("Project", "Filter", "GlobalLimit", "LocalLimit", "SubqueryAlias", "View")
+)
+
+
+class _FoldJvm:
+    """The JVM handles _folded calls, looked up once per process (each
+    lookup of a class through py4j is a round trip per package name).
+    _folded keeps its own py4j calls few: every JVM object handed to
+    Python costs a further round trip when its proxy is collected, and
+    py4j sends those from a background thread that competes with the
+    statements that follow."""
+
+    def __init__(self, session: SparkSession) -> None:
+        jvm = session._jvm
+        self.of_rows = jvm.org.apache.spark.sql.classic.Dataset.ofRows
+        patterns = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        self.python_udf = patterns.PYTHON_UDF()
+        # one row, no columns: what a FROM-less SELECT reads
+        row = jvm.org.apache.spark.sql.RowFactory.create(
+            session.sparkContext._gateway.new_array(jvm.java.lang.Object, 0)
+        )
+        rows = jvm.java.util.ArrayList()
+        rows.add(row)
+        self.one_row = (
+            session._jsparkSession.createDataFrame(
+                rows, jvm.org.apache.spark.sql.types.StructType()
+            )
+            .queryExecution()
+            .analyzed()
+        )
+        # Nil's `::`: a plan's one-child Seq in one call
+        self.one_child = getattr(self.one_row.children(), "$colon$colon")
+        self.limit = jvm.org.apache.spark.sql.catalyst.plans.logical.Limit.apply
+        self.past_batch = jvm.org.apache.spark.sql.catalyst.expressions.Literal.create(
+            _BATCH_ROWS + 1, jvm.org.apache.spark.sql.types.DataTypes.IntegerType
+        )
+
+
+_FOLD_JVM: _FoldJvm | None = None
+
+
+def _folded(df: DataFrame) -> DataFrame | None:
+    """``df`` with its leaf swapped for a driver-resident LocalRelation,
+    when its analyzed plan is a chain of Project, Filter, Limit,
+    SubqueryAlias and View nodes over one leaf (rebuilt without the last
+    two, which the optimizer drops first anyway), and the swapped plan's
+    optimized plan is a LocalRelation of ≤ _BATCH_ROWS rows: Catalyst's
+    ConvertToLocalRelation then evaluated the chain at optimization
+    time, so collect() runs no Spark job. The leaf is a OneRowRelation
+    (a FROM-less SELECT; it becomes one row of no columns) or the scan
+    of a fixture view (it becomes the table's resident copy,
+    session.resident_relation). Otherwise None, and ``df`` runs as it
+    is. A Python UDF is evaluated by a worker, never folded, so a plan
+    that calls one is not tried. A fold that raises (a guard, a cast
+    overflow) is dropped too: ``df`` then raises the same error from
+    its own job; so is a copy that fails to build (``df``'s own scan
+    then meets the same fault)."""
+    global _FOLD_JVM
+    if _FOLD_JVM is None:
+        _FOLD_JVM = _FoldJvm(df.sparkSession)
+    j = _FOLD_JVM
+    root = df._jdf.queryExecution().analyzed()
+    if root.containsPattern(j.python_udf):
+        return None
+    chain, node, filters = [], root, False
+    while (name := node.nodeName()) in _FOLD_CHAIN:
+        if name not in ("SubqueryAlias", "View"):
+            chain.append(node)
+        filters = filters or name == "Filter"
+        node = node.child()
+    if name == "OneRowRelation":
+        leaf = j.one_row
+    elif name == "LogicalRelation":
+        limited = filters
+        if not limited:
+            bound = root.maxRows()
+            limited = bound.isDefined() and bound.get() <= _BATCH_ROWS
+        try:
+            leaf = resident_relation(
+                df.sparkSession, node, None if limited else _BATCH_ROWS
+            )
+        except (PySparkException, Py4JError, OSError):  # df's scan reports it
+            return None
+        if leaf is None:
+            return None
+    else:
+        return None
+    for parent in reversed(chain):
+        leaf = parent.withNewChildren(j.one_child(leaf))
+    if filters:
+        # past _BATCH_ROWS survivors the fold is thrown away: folding this
+        # limit right after the chain keeps the optimizer's later rules
+        # from walking every survivor of an unselective filter
+        leaf = j.limit(j.past_batch, leaf)
+    session = df.sparkSession
+    try:
+        folded = DataFrame(j.of_rows(session._jsparkSession, leaf), session)
+        plan = folded._jdf.queryExecution().optimizedPlan()
+    except (PySparkException, Py4JJavaError):  # df raises it from its job
+        return None
+    if plan.nodeName() != "LocalRelation" or plan.maxRows().get() > _BATCH_ROWS:
+        return None
+    return folded
 
 
 class _ServedRows:

@@ -109,7 +109,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     re-lists the directory and re-parses parquet footers, a fixed
     ~50-100ms planning tax per query that the reference (a long-lived
     embedded catalog) never pays. Parquet files here are immutable
-    fixtures, so the cached plan never goes stale.
+    fixtures, so the cached plan never goes stale. On the same ground a
+    fixture under the row bounds (_RESIDENT_TABLE_ROWS per table,
+    _RESIDENT_TOTAL_ROWS per process) also gets a driver-resident copy
+    at its first fold-shaped use over the wire (resident_relation), and
+    that copy is never refreshed either.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's reader has no
     native type for — read as nanosecond longs (legacy conf, runtime-
@@ -306,8 +310,148 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     Mirrors the reference's catalog surface: any SQL arriving over the wire
     resolves tables by bare name (``SELECT * FROM users``,
     ``client/go/cmd/simple/main.go:31``).
+
+    Each registered file is also recorded as a fixture, so that
+    ``resident_relation`` may stand a driver-resident copy in for its
+    scan. Nothing is read here: a copy is built at its first use.
     """
     for name in TABLES:
         path = table_path(sf_dir, name)
         if os.path.exists(path):
             load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+            _FIXTURES[os.path.abspath(path)] = (sf_dir, name)
+
+
+# Driver-resident fixture copies. A point lookup over a fixture view
+# otherwise starts a Spark job to scan a file of a few hundred KB; over
+# a LocalRelation, Catalyst folds Project/Filter/Limit at optimization
+# time and collect() runs no job. A table is admitted when its row
+# count (parquet footer, no job) is within the per-table bound and every
+# copy together stays within the process cap: the sf0.01 fixtures other
+# than lineitem (60,000 rows) fit, 29,630 rows in all, and sf0.1 orders
+# (150,000) does not. The per-table bound also caps the cost of a fold
+# that is thrown away: a filter that keeps more than 1024 rows is still
+# evaluated over the whole copy at optimization time before the table's
+# own scan runs. On the JVM heap a copy takes under 1 KB a row (orders,
+# 15,000 rows: 11 MB). Fixtures are immutable (see load_table), so a
+# copy is never refreshed; catalog tables are never copied.
+_RESIDENT_TABLE_ROWS = 16384
+_RESIDENT_TOTAL_ROWS = 32768
+
+# fixture file (absolute path) → (sf_dir, table), filled by register_views
+_FIXTURES: dict[str, tuple[str, str]] = {}
+# (sf_dir, table) → its copy: one per process, shared by every session
+_RESIDENT: dict[tuple[str, str], "_Resident"] = {}
+# a leaf's output (attribute names and expression ids, unique in the
+# JVM) → what resident_relation found for that leaf, None for a leaf
+# that is no fixture; oldest entries dropped past _LEAVES_MAX
+_LEAVES: dict[str, "_Leaf | None"] = {}
+_LEAVES_MAX = 256
+# guards the writes to _RESIDENT and _LEAVES (pool threads share them)
+_RESIDENT_LOCK = _threading.Lock()
+
+
+class _Resident:
+    """One table's rows as a LocalRelation's data (a JVM Seq[InternalRow]),
+    with the schema of the scan they were collected from."""
+
+    def __init__(self, data, rows: int, schema: str) -> None:
+        self.data = data
+        self.rows = rows
+        self.schema = schema
+
+
+class _Leaf:
+    """A fixture scan seen in a plan: its table, row count, schema and
+    output attributes, and, once the copy exists, the LocalRelation
+    standing in for it. Looking a leaf up by its output string takes
+    one py4j call where the fixture checks take a dozen (every JVM
+    object handed to Python costs one more round trip when its proxy is
+    collected), and reusing the LocalRelation saves its hash, which
+    covers every row once per instance."""
+
+    def __init__(self, key: tuple[str, str], rows: int, schema: str, output) -> None:
+        self.key = key
+        self.rows = rows
+        self.schema = schema
+        self.output = output
+        self.relation = None
+
+
+def _fixture_leaf(spark: SparkSession, leaf, output) -> _Leaf | None:
+    """The fixture register_views recorded that ``leaf`` scans, or None.
+    A scan of several files (a glob, a list of paths) is no fixture
+    scan, even when one of its files is a fixture. The row count comes
+    from the file's parquet footer, read in the JVM (no job; reading it
+    with pyarrow would load its parquet module into the server)."""
+    if not leaf.catalogTable().isEmpty():
+        return None
+    rel = leaf.relation()
+    if rel.getClass().getSimpleName() != "HadoopFsRelation":
+        return None
+    paths = rel.location().rootPaths()
+    if paths.size() != 1:
+        return None
+    path = paths.head()
+    key = _FIXTURES.get(path.toUri().getPath())
+    if key is None:
+        return None
+    footer = spark._jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark.sparkContext._jsc.hadoopConfiguration(), path
+    )
+    rows = sum(block.getRowCount() for block in footer.getBlocks())
+    return _Leaf(key, rows, leaf.schema().json(), output)
+
+
+_UNSEEN = object()
+
+
+def resident_relation(spark: SparkSession, leaf, max_rows: int | None):
+    """The driver-resident stand-in for ``leaf``, the LogicalRelation of
+    a fixture scan: a LocalRelation with the same output attributes over
+    the table's rows. None when ``leaf`` is not a fixture register_views
+    recorded, when the table is over the bounds, when it has more than
+    ``max_rows`` rows (the caller passes None when the plan above the
+    leaf filters or limits its rows), or when the copy was collected
+    from a scan of another schema. The copy is built in the JVM at the
+    first use of its table, in one Spark job, and no row crosses into
+    Python."""
+    output = leaf.output()
+    sig = output.toString()
+    found = _LEAVES.get(sig, _UNSEEN)
+    if found is _UNSEEN:
+        found = _fixture_leaf(spark, leaf, output)
+        with _RESIDENT_LOCK:
+            _LEAVES[sig] = found
+            while len(_LEAVES) > _LEAVES_MAX:
+                del _LEAVES[next(iter(_LEAVES))]
+    if found is None or found.rows > _RESIDENT_TABLE_ROWS:
+        return None
+    if max_rows is not None and found.rows > max_rows:
+        return None
+    copy = _RESIDENT.get(found.key) or _build_resident(spark, found, leaf)
+    if copy is None or copy.schema != found.schema:
+        return None
+    if found.relation is None:
+        jvm = spark._jvm
+        relation = jvm.org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+        found.relation = relation(
+            found.output, copy.data, False, jvm.scala.Option.empty()
+        )
+    return found.relation
+
+
+def _build_resident(spark: SparkSession, found: _Leaf, leaf) -> _Resident | None:
+    """Collect the fixture scan ``leaf`` into a LocalRelation, once per
+    process, if the process cap leaves room for its rows."""
+    with _RESIDENT_LOCK:
+        if found.key in _RESIDENT:
+            return _RESIDENT[found.key]
+        if sum(c.rows for c in _RESIDENT.values()) + found.rows > _RESIDENT_TOTAL_ROWS:
+            return None
+        jss = spark._jsparkSession
+        scan = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(jss, leaf)
+        local = jss.createDataFrame(scan.collectAsList(), scan.schema())
+        copy = _Resident(local.queryExecution().analyzed().data(), found.rows, found.schema)
+        _RESIDENT[found.key] = copy
+        return copy

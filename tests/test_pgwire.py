@@ -993,6 +993,54 @@ def test_isolated_sessions_temp_views(spark):
         stop()
 
 
+def test_isolated_sessions_share_resident_copies(spark):
+    """Two --isolate-sessions connections read one resident copy of a
+    fixture; a view one of them creates under a fixture's name answers
+    that connection's lookups from the user's view, and the other
+    connection still reads the fixture."""
+    from duckdb_pgwire_spark import session as fixtures
+    from duckdb_pgwire_spark.server.app import PgWireServer
+    from duckdb_pgwire_spark.session import register_views
+
+    port, stop = _serve_in_thread(
+        PgWireServer(
+            spark,
+            host="127.0.0.1",
+            port=0,
+            isolate_sessions=True,
+            session_setup=lambda s: register_views(s, SF_DIR),
+        )
+    )
+    mod = _pgwire_client_module()
+    a = mod.PgClient(port=port)
+    b = mod.PgClient(port=port)
+    lookup = "SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderkey = 4"
+    try:
+        (ra,) = a.query(lookup)
+        copy = fixtures._RESIDENT[(SF_DIR, "orders")]
+        (rb,) = b.query(lookup)
+        assert ra["rows"] == rb["rows"] == [["4", "F"]], (ra, rb)
+        assert fixtures._RESIDENT[(SF_DIR, "orders")] is copy
+        jobs_b = _job_counter(b, spark)
+        assert jobs_b(lookup) == 0
+        (r,) = a.query(
+            "CREATE OR REPLACE TEMP VIEW orders AS "
+            "SELECT c_custkey AS o_orderkey, c_name AS o_orderstatus FROM customer"
+        )
+        assert "error" not in r, r
+        (ra,) = a.query(lookup)
+        assert ra["rows"] == [["4", "Customer#000000004"]], ra
+        assert _job_counter(a, spark)(lookup) == 0
+        (rb,) = b.query(lookup)
+        assert rb["rows"] == [["4", "F"]], rb
+        assert jobs_b(lookup) == 0
+        assert [k for k in fixtures._RESIDENT if k[1] == "orders"] == [(SF_DIR, "orders")]
+    finally:
+        a.close()
+        b.close()
+        stop()
+
+
 def test_server_stop_with_open_connection_leaves_no_unraisable(spark, monkeypatch):
     """stop() ends the connection tasks it started while the loop still
     runs, so closing the loop afterwards leaves no task to close its
@@ -2196,29 +2244,249 @@ def test_wire_plain_insert_tag_counts_rows(client, spark):
     spark.sql("DROP TABLE IF EXISTS tag_rows")
 
 
-def test_wire_driver_built_results_start_no_spark_job(client, spark):
-    """DESCRIBE, SHOW and PRAGMA answers are built on the driver as
-    Arrow-backed local relations and collected without a Spark job
-    under the connection's job tag; a scan starts jobs as usual (the
-    positive control: one shuffle-map job and one result job, since
-    AQE runs the aggregate's exchange as its own query stage)."""
+def _job_counter(client, spark):
+    """jobs(sql, extended=False) → the Spark jobs the statement started
+    under the connection's job tag (it must not fail)."""
     tracker = spark.sparkContext._jsc.sc().statusTracker()
     tag = f"pgwire-conn-{client.backend_key[1]}"
 
-    def jobs(sql):
+    def jobs(sql, extended=False):
         before = set(tracker.getJobIdsForTag(tag))
-        (res,) = client.query(sql)
-        assert "error" not in res, res
+        res = client.extended_query(sql) if extended else client.query(sql)[0]
+        assert "error" not in res, (sql, res)
         return len(set(tracker.getJobIdsForTag(tag)) - before)
 
+    return jobs
+
+
+_FOLD_LOOKUPS = (
+    "SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders "
+    "WHERE o_orderkey = 4",
+    "SELECT c_custkey, c_name, c_acctbal FROM customer WHERE c_custkey = 7",
+)
+
+
+def test_wire_driver_built_results_start_no_spark_job(client, spark, monkeypatch):
+    """DESCRIBE, SHOW and PRAGMA answers are built on the driver as
+    Arrow-backed local relations and collected without a Spark job
+    under the connection's job tag. A FROM-less SELECT and a point
+    lookup on a fixture view fold to a driver-resident LocalRelation
+    (app._folded) and start none either, in the simple and the
+    extended protocol, once the table's copy is built. A scan starts
+    jobs as usual (the positive control: one shuffle-map job and one
+    result job, since AQE runs the aggregate's exchange as its own
+    query stage), and so does a lookup on a table above the bound."""
+    from duckdb_pgwire_spark import session as fixtures
+
+    jobs = _job_counter(client, spark)
+    for sql in _FOLD_LOOKUPS:
+        jobs(sql)  # the first use builds the table's copy
     for sql in (
         "DESCRIBE SELECT n_nationkey, n_name FROM nation",
         "SHOW TABLES",
         "SHOW transaction_isolation",
         "PRAGMA version",
+        "SELECT 1",
+        "SELECT '2021-03-04'::DATE + 30 AS d, upper('x') || 'y' AS u",
+        *_FOLD_LOOKUPS,
     ):
         assert jobs(sql) == 0, sql
+    for sql in ("SELECT 1", *_FOLD_LOOKUPS):
+        assert jobs(sql, extended=True) == 0, sql
+    # folded at each execution: a fresh value every time
+    fresh = "SELECT random() AS r, now() AS t"
+    assert jobs(fresh) == 0
+    assert client.query(fresh)[0]["rows"] != client.query(fresh)[0]["rows"]
     assert jobs("SELECT count(*) FROM nation") == 2
+    monkeypatch.setattr(fixtures, "_RESIDENT_TABLE_ROWS", 1000)
+    assert jobs(_FOLD_LOOKUPS[0]) >= 1
+    assert jobs(_FOLD_LOOKUPS[0], extended=True) >= 1
+
+
+# one fold-shaped statement per fixture (and FROM-less ones): NULLs,
+# LIMIT, casts to text, printf, timestamps, arrays
+_FOLD_STATEMENTS = (
+    "SELECT 1 AS a, NULL AS b, 'x' || 'y' AS c, 2.5::DECIMAL(5,2) AS d",
+    "SELECT '2020-02-28'::DATE + 2 AS d, strftime(TIMESTAMP '2020-02-28 10:11:00',"
+    " '%Y/%m/%d %H') AS s, list_aggregate([3, 4, 5], 'sum') AS l",
+    "SELECT * FROM region",
+    "SELECT n_name, NULLIF(n_regionkey, 2) AS r FROM nation WHERE n_nationkey % 3 = 0",
+    "SELECT printf('%s-%d', c_name, c_nationkey + 5) AS p, c_acctbal FROM customer"
+    " WHERE c_custkey BETWEEN 10 AND 20",
+    "SELECT s_name, s_acctbal * 2 AS a FROM supplier LIMIT 7",
+    "SELECT p_partkey, p_brand || '/' || p_type AS u, p_retailprice FROM part"
+    " WHERE p_size = 7 LIMIT 20",
+    "SELECT o_orderkey, o_orderdate::VARCHAR || '/x' AS v, o_orderdate,"
+    " CASE WHEN o_orderstatus = 'F' THEN NULL ELSE o_totalprice END AS t"
+    " FROM orders WHERE o_orderkey < 200",
+    "SELECT * FROM lineitem WHERE l_orderkey = 4",
+    "SELECT event_id, ts, props, value FROM events WHERE user_id = 3 LIMIT 10",
+    "SELECT doc_id, length(text) AS n, lang FROM documents WHERE doc_id < 5",
+    "SELECT vec_id, embedding, label FROM embeddings WHERE vec_id < 3",
+)
+
+
+def test_wire_folded_results_match_file_scans(wire_server, spark, monkeypatch):
+    """Fold-shaped statements over every fixture answer byte-identical
+    messages (RowDescription, DataRows, CommandComplete), in text and
+    in binary, from the resident copies (no Spark job; lineitem is over
+    the bound and scanned) and with the bound forced to 0 (the parquet
+    scans)."""
+    from duckdb_pgwire_spark import session as fixtures
+
+    from .test_wire_golden import _Raw
+
+    raw = _Raw(wire_server)
+    c = _pgwire_client_module().PgClient(port=wire_server)
+    jobs = _job_counter(c, spark)
+
+    def answers():
+        return [
+            (raw.simple(sql), raw.extended(sql, maxrows=0, binary=True))
+            for sql in _FOLD_STATEMENTS
+        ]
+
+    try:
+        for sql in _FOLD_STATEMENTS:
+            jobs(sql)  # builds the copies
+        # lineitem's 60,000 rows are over the per-table bound: scanned either way
+        assert [jobs(sql) == 0 for sql in _FOLD_STATEMENTS] == [
+            "lineitem" not in sql for sql in _FOLD_STATEMENTS
+        ]
+        resident = answers()
+        monkeypatch.setattr(fixtures, "_RESIDENT_TABLE_ROWS", 0)
+        scanned = answers()
+        assert all(jobs(sql) >= 1 for sql in _FOLD_STATEMENTS[2:])
+    finally:
+        raw.close()
+        c.close()
+    for sql, got, want in zip(_FOLD_STATEMENTS, resident, scanned):
+        assert got == want, sql
+        assert not any(tag == "E" for part in got for tag, _ in part), (sql, got)
+
+
+def test_wire_folding_errors_keep_their_answer(client, monkeypatch, oracle):
+    """A fold evaluates expressions at optimization time, so a guard or
+    cast failure is raised there instead of in a job; the statement
+    then runs its own plan and answers the file scan's SQLSTATE (class
+    22, data exception) and message. DuckDB rejects each statement."""
+    import duckdb
+
+    from duckdb_pgwire_spark import session as fixtures
+
+    cases = [
+        # (statement, message fragment, DuckDB's error)
+        ("SELECT ln(c_acctbal - 100000) AS l FROM customer WHERE c_custkey = 7",
+         "Out of Range Error", duckdb.OutOfRangeException),
+        ("SELECT printf('%d', c_name) AS p FROM customer WHERE c_custkey = 7",
+         'Invalid type specifier "d"', duckdb.InvalidInputException),
+        ("SELECT CAST(o_totalprice * 1000 AS SMALLINT) AS s FROM orders"
+         " WHERE o_orderkey = 4", "CAST_OVERFLOW", duckdb.ConversionException),
+        ("SELECT CAST(40000 AS SMALLINT) AS s", "CAST_OVERFLOW",
+         duckdb.ConversionException),
+        ("SELECT 'cancelled'::fold_mood AS m", "Could not convert",
+         duckdb.ConversionException),
+        ("SELECT c_mktsegment::fold_mood AS m FROM customer WHERE c_custkey = 7",
+         "Could not convert", duckdb.ConversionException),
+    ]
+    (r,) = client.query("CREATE TYPE fold_mood AS ENUM ('sad', 'ok')")
+    assert "error" not in r, r
+    oracle.execute("CREATE TYPE fold_mood AS ENUM ('sad', 'ok')")
+    answers = {}
+    try:
+        for bound in (fixtures._RESIDENT_TABLE_ROWS, 0):
+            monkeypatch.setattr(fixtures, "_RESIDENT_TABLE_ROWS", bound)
+            for sql, frag, _ in cases:
+                (r,) = client.query(sql)
+                assert frag in r.get("error", ""), (bound, sql, r)
+                answers.setdefault(sql, set()).add(r["sqlstate"])
+    finally:
+        client.query("DROP TYPE fold_mood")
+    for sql, _, duck in cases:
+        (state,) = answers[sql]  # the same with and without the copies
+        assert state.startswith("22"), (sql, state)
+        with pytest.raises(duck):
+            oracle.execute(sql).fetchall()
+    oracle.execute("DROP TYPE fold_mood")
+    assert answers[cases[0][0]] == {"22003"}
+    assert answers[cases[1][0]] == {"22023"}
+    assert answers[cases[4][0]] == answers[cases[5][0]] == {"22P02"}
+
+
+def test_wire_user_view_over_fixture_folds(client, spark, oracle):
+    """A user's view over a fixture view folds through both views and
+    answers DuckDB's rows without a Spark job."""
+    jobs = _job_counter(client, spark)
+    ddl = (
+        "CREATE OR REPLACE TEMP VIEW fold_big_orders AS "
+        "SELECT * FROM orders WHERE o_totalprice > 300000"
+    )
+    sql = "SELECT o_orderkey, o_totalprice FROM fold_big_orders WHERE o_orderkey < 400"
+    (r,) = client.query(ddl)
+    assert "error" not in r, r
+    try:
+        jobs(sql)
+        assert jobs(sql) == 0
+        (r,) = client.query(sql)
+        oracle.execute(ddl.replace("TEMP ", ""))
+        want = oracle.execute(sql).fetchall()
+        assert sorted(r["rows"]) == sorted([[str(k), str(v)] for k, v in want])
+        assert len(want) > 0
+    finally:
+        client.query("DROP VIEW fold_big_orders")
+        oracle.execute("DROP VIEW IF EXISTS fold_big_orders")
+
+
+def test_wire_fixture_glob_gets_no_resident_copy(client, monkeypatch, oracle):
+    """A glob over two fixture files scans both, so it is no fixture
+    scan: a fold-shaped read of the glob, then a lookup on one of its
+    fixtures, answer the same rows with the copies on (no copy built
+    yet) and with the bound forced to 0; the lookup answers DuckDB's
+    rows."""
+    from duckdb_pgwire_spark import session as fixtures
+
+    glob = f"SELECT * FROM read_parquet('{SF_DIR}/{{nation,region}}.parquet') LIMIT 40"
+    lookup = "SELECT n_nationkey, n_name FROM nation WHERE n_nationkey < 4"
+    answers = []
+    for bound in (fixtures._RESIDENT_TABLE_ROWS, 0):
+        monkeypatch.setattr(fixtures, "_RESIDENT_TABLE_ROWS", bound)
+        monkeypatch.setattr(fixtures, "_RESIDENT", {})
+        monkeypatch.setattr(fixtures, "_LEAVES", {})
+        rows = []
+        for sql in (glob, lookup, glob):
+            (r,) = client.query(sql)
+            assert "error" not in r, (sql, r)
+            rows.append(sorted(r["rows"], key=repr))
+        answers.append(rows)
+    assert answers[0] == answers[1]
+    assert len(answers[1][0]) == 30  # 25 nations and 5 regions
+    want = sorted([[str(k), n] for k, n in oracle.execute(lookup).fetchall()], key=repr)
+    assert answers[1][1] == want and len(want) == 4
+
+
+def test_resident_relation_under_concurrent_lookups(wire_server, spark, monkeypatch):
+    """Eight threads look up fixture leaves (each read of a file brings
+    new attribute ids, so every leaf is new) while the leaf memo evicts
+    past a lowered _LEAVES_MAX: every lookup returns the table's copy
+    over its own leaf's attributes."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from duckdb_pgwire_spark import session as fixtures
+    from duckdb_pgwire_spark.session import resident_relation, table_path
+
+    monkeypatch.setattr(fixtures, "_LEAVES_MAX", 3)
+    leaves = [
+        spark.read.parquet(table_path(SF_DIR, name))._jdf.queryExecution().analyzed()
+        for name in ("nation", "region", "supplier") * 8
+    ]
+
+    def look(leaf):
+        found = resident_relation(spark, leaf, None)
+        return found is not None and found.output().toString() == leaf.output().toString()
+
+    with ThreadPoolExecutor(8) as pool:
+        assert all(pool.map(look, leaves * 4))
+    assert len(fixtures._LEAVES) <= 3
 
 
 def test_wire_statement_work_stays_off_the_event_loop(client, spark, monkeypatch):
@@ -2642,6 +2910,54 @@ def test_wire_truncate_and_alter_columns(client, spark):
     (res,) = client.query("SELECT * FROM alt_w")
     assert res["columns"] == ["a", "bb"]
     _fresh_wire_table(spark, "alt_w")
+
+
+def test_wire_alter_column_keeps_table_in_place(client, spark, tmp_path):
+    """ALTER TABLE … RENAME/DROP COLUMN rewrite the rows inside the
+    table's own location: a managed table stays managed in the
+    warehouse and DROP removes its directory; a LOCATION table stays
+    external at its location. Nothing is left in the temporary
+    directory."""
+    import glob
+    import os
+    import tempfile
+
+    def where(name):
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        info = {r.col_name: r.data_type for r in rows}
+        return info["Type"], info["Location"]
+
+    left = os.path.join(tempfile.gettempdir(), "alter_new_*")
+    before = set(glob.glob(left))
+    ext = tmp_path / "alt_ext"
+    for name, ddl in (
+        ("alt_mg", "CREATE TABLE alt_mg(a int, b varchar, c double)"),
+        ("alt_ex", f"CREATE TABLE alt_ex(a int, b varchar, c double) LOCATION '{ext}'"),
+    ):
+        _fresh_wire_table(spark, name)
+        for sql in (
+            ddl,
+            f"INSERT INTO {name} VALUES (1, 'x', 1.5), (2, NULL, 2.5)",
+            f"ALTER TABLE {name} RENAME COLUMN b TO bb",
+            f"ALTER TABLE {name} DROP COLUMN c",
+        ):
+            if sql.startswith("ALTER"):
+                kind, loc = where(name)
+            (r,) = client.query(sql)
+            assert "error" not in r, (sql, r)
+            if sql.startswith("ALTER"):
+                assert where(name) == (kind, loc), sql
+        (r,) = client.query(f"SELECT * FROM {name} ORDER BY a")
+        assert r["columns"] == ["a", "bb"] and r["rows"] == [["1", "x"], ["2", None]], r
+        assert kind == ("MANAGED" if name == "alt_mg" else "EXTERNAL"), kind
+        path = loc.removeprefix("file:")
+        assert os.listdir(path) and not any(
+            f.startswith("_dml_stage_") for f in os.listdir(path)
+        )
+        (r,) = client.query(f"DROP TABLE {name}")
+        assert "error" not in r, r
+        assert os.path.exists(path) == (name == "alt_ex"), path
+    assert set(glob.glob(left)) == before
 
 
 def test_wire_star_replace_and_argminmax_golden(client):
