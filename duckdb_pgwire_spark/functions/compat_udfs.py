@@ -176,43 +176,6 @@ def _duck_fmt1(spec: pd.Series, val: pd.Series) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
-def _duck_simple_case(fn: str):
-    """Per-codepoint duck SIMPLE case mapping for the casefold PUA
-    fallback (r12): divergence tables from server.casefold give duck's
-    answer wherever it differs from the Java/Python FULL mapping; any
-    other codepoint takes the per-char Python mapping when it stays
-    1:1 and is left unchanged otherwise (multi-char expansions are all
-    in the tables). Only reached for strings that CONTAIN the
-    sandwich's private-use sentinels — the JVM translate path handles
-    everything else."""
-    from ..server import casefold as cf
-
-    if fn == "upper":
-        div = dict(zip(cf.UPPER_SRC, cf.UPPER_DST))
-    else:
-        div = dict(zip(cf.LOWER_SRC, cf.LOWER_DST))
-
-    def one(ch: str) -> str:
-        got = div.get(ch)
-        if got is not None:
-            return got
-        full = ch.upper() if fn == "upper" else ch.lower()
-        return full if len(full) == 1 else ch
-
-    def fold(s):
-        return "".join(one(c) for c in s) if s is not None else None
-
-    @F.pandas_udf(T.StringType())
-    def _fold(col: pd.Series) -> pd.Series:
-        return col.map(fold)
-
-    return _fold
-
-
-_duck_simple_upper = _duck_simple_case("upper")
-_duck_simple_lower = _duck_simple_case("lower")
-
-
 @F.pandas_udf(T.StringType())
 def _nfc_normalize(s: pd.Series) -> pd.Series:
     return s.map(
@@ -1480,8 +1443,6 @@ def register_compat_udfs(spark: SparkSession) -> None:
     spark.udf.register("damerau_levenshtein", _damerau_levenshtein)
     spark.udf.register("nfc_normalize", _nfc_normalize)
     spark.udf.register("__duck_fmt1", _duck_fmt1)
-    spark.udf.register("__duck_simple_upper", _duck_simple_upper)
-    spark.udf.register("__duck_simple_lower", _duck_simple_lower)
     spark.udf.register("strip_accents", _strip_accents)
     spark.udf.register("duck_chr", _duck_chr)
     spark.udf.register("duck_varchar", _duck_varchar)

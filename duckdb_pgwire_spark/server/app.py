@@ -9,8 +9,9 @@ handler factory per session (:184-186)           _handle() task per connection
 fresh Connection per query, shared DB (:42)      shared SparkSession per query
 conn.Prepare(q) → names/types (:52,62-64)        df = spark.sql(q); df.schema
    → RowDescription (:75-88)                        → RowDescription
-p->Execute(); chunk iteration (:97,119)          _fetch_iter(df) → 1024-row batches
-per-value text encode / NULL (:120-165)          typemap.encode_cell
+p->Execute(); chunk iteration (:97,119)          _fetch_iter(df) → 1024-row bursts
+per-value text encode / NULL (:120-165)          batchenc: column-at-a-time
+                                                 kernels, typemap per cell
 errors → SqlException(DataException) (:65-73)    ErrorResponse, SQLSTATE kept
 pg_is_in_recovery / duckdb_pgwire UDFs (:206-12) registered in Spark catalog
 
@@ -30,22 +31,28 @@ Thread rule: Spark calls block, and so do the catalog lookups and the
 dialect rewrite. All Spark, catalog and rewrite work of a statement
 runs as one call on the worker pool, under the connection's Spark job
 tag (so a CancelRequest reaches it); the event loop does only protocol
-framing and COPY data transfer (fetching each batch of result rows,
-and the load at the end of COPY FROM STDIN, are further tagged pool
-calls). Fetch rule (_fetch_iter): rows built on the driver (DESCRIBE,
-SHOW, PRAGMA, pg_catalog) are Arrow-backed local relations and run no
-Spark job. A fold-shaped statement — Project/Filter/Limit over a
+I/O and COPY data transfer (fetching, encoding and framing each burst
+of result rows, and the load at the end of COPY FROM STDIN, are
+further tagged pool calls, never overlapping the loop's writes).
+Fetch rule (_fetch_iter): rows built on the driver (DESCRIBE, SHOW,
+PRAGMA, pg_catalog) are Arrow-backed local relations and run no Spark
+job. A fold-shaped statement — Project/Filter/Limit over a
 FROM-less SELECT's one row or over a fixture view's driver-resident
 copy (session.resident_relation) — is planned again over that
 LocalRelation, and when Catalyst folds it to ≤1024 rows it is fetched
 with one collect() and no Spark job; the reference answers from an
 in-process engine the same way (cpp:52,97). Otherwise a result whose
-optimized plan bounds its rows at ≤1024 is fetched with one collect();
-every other result streams through one served socket, partition by
-partition, written ahead of the reader (_ServedRows). Either way rows
-reach the socket in bounded batches (the analogue of
-DataChunk-at-a-time). A command Spark runs itself (CREATE, DROP, a
-plain INSERT) answers only its CommandComplete.
+optimized plan bounds its rows at ≤1024 is fetched with one collect()
+(fetching a LocalRelation through Arrow would start a job); every
+other result streams from the JVM as Arrow record batches through one
+served socket, partition by partition, written ahead of the reader
+(_ServedRows). Either way rows reach the socket in bursts of ≤1024
+(the analogue of DataChunk-at-a-time): one tagged pool call per burst
+(_next_batch) encodes it column at a time into framed DataRow bytes
+(batchenc — Arrow text kernels where they reproduce typemap's text,
+typemap's per-cell encoders elsewhere), and the event loop writes them
+as one buffer. A command Spark runs itself (CREATE, DROP, a plain
+INSERT) answers only its CommandComplete.
 
 Write rule: UPDATE, DELETE, TRUNCATE, MERGE, UPDATE … FROM, DELETE …
 USING, INSERT … ON CONFLICT and ALTER TABLE … RENAME/DROP COLUMN
@@ -108,13 +115,12 @@ from .compat import (
     strip_table_constraints,
 )
 from ..session import resident_relation
+from .batchenc import ResultEncoder
 from .typemap import (
     decode_binary_param,
-    encode_binary,
     encode_text,
     pg_oid,
     reference_visible,
-    text_cell_encoder,
 )
 
 log = logging.getLogger("duckdb_pgwire_spark.server")
@@ -272,44 +278,157 @@ def _folded(df: DataFrame) -> DataFrame | None:
 
 
 class _ServedRows:
-    """A result's rows streamed from the JVM through one served socket.
-    A serving thread (it inherits the connection's job tag) runs one job
-    per partition and writes the pickled rows ahead of the reader;
-    socket backpressure stalls it, so driver memory stays bounded to
-    about one partition, without toLocalIterator()'s request/response
-    round trip per partition. The socket is connected here, at once.
-    When the stream ends or breaks, the serving thread's result is
-    taken, so a failed partition raises instead of ending the rows
-    early."""
+    """A result's rows streamed from the JVM as Arrow record batches
+    through one served socket. A serving thread (it inherits the
+    connection's job tag) runs one job per partition and writes each
+    partition's batches (≤ spark.sql.execution.arrow.maxRecordsPerBatch
+    rows) ahead of the reader; socket backpressure stalls it, so driver
+    memory stays bounded to about one partition, without
+    toLocalIterator()'s request/response round trip per partition. The
+    socket is connected here, at once. ``take`` hands out slices of the
+    batches, which batchenc frames column at a time. When the stream
+    ends or breaks, the serving thread's result is taken, so a failed
+    partition raises (as _StreamError, which keeps the Spark error's
+    condition and SQLSTATE) instead of ending the rows early."""
 
     def __init__(self, df: DataFrame) -> None:
-        from pyspark.serializers import BatchedSerializer, CPickleSerializer
+        from pyspark.serializers import NoOpSerializer
+        from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.util import local_connect_and_auth
 
-        jrows = df._jdf.javaToPython().rdd().toLocalIterator()
+        self.schema = df.schema
+        df = _arrow_safe(df)
+        self._arrow_schema = to_arrow_schema(
+            df.schema,
+            prefers_large_types=df.sparkSession.conf.get(
+                "spark.sql.execution.arrow.useLargeVarTypes", "false"
+            ) == "true",
+        )
+        jbatches = df._jdf.toArrowBatchRdd().toLocalIterator()
         port, secret, self._server = df.sparkSession._jvm.PythonRDD.serveIterator(
-            jrows, "serve-DataFrame"
+            jbatches, "serve-Arrow-batches"
         )
         self._file, self._sock = local_connect_and_auth(port, secret)
         self._sock.settimeout(None)  # a partition takes as long as it takes
-        self._rows = BatchedSerializer(CPickleSerializer()).load_stream(self._file)
+        self._messages = NoOpSerializer().load_stream(self._file)
+        self._batch = None  # the batch being sliced, and its next row
+        self._pos = 0
 
-    def __iter__(self) -> "_ServedRows":
-        return self
+    def take(self, n: int) -> list:
+        """Slices of the next ``n`` rows (fewer only at the end)."""
+        import pyarrow as pa
 
-    def __next__(self):
+        out = []
+        while n > 0:
+            if self._batch is None or self._pos == self._batch.num_rows:
+                try:
+                    message = next(self._messages)
+                except Exception as exc:  # StopIteration too: the stream ended
+                    self.close()
+                    self._result(exc)
+                    break
+                self._batch = pa.ipc.read_record_batch(
+                    pa.py_buffer(message), self._arrow_schema
+                )
+                self._pos = 0
+                continue
+            piece = self._batch.slice(self._pos, n)
+            self._pos += piece.num_rows
+            n -= piece.num_rows
+            out.append(piece)
+        return out
+
+    def rows(self, n: int) -> list[tuple]:
+        """The next ``n`` rows (fewer only at the end) as Python values."""
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+        import pyarrow as pa
+
+        pieces = self.take(n)
+        if not pieces:
+            return []
+        table = pa.Table.from_batches(pieces, self._arrow_schema)
+        return ArrowTableToRowsConversion.convert(
+            table, self.schema, return_as_tuples=True
+        )
+
+    def _result(self, exc: Exception) -> None:
+        """Raise the serving thread's error if it has one, else ``exc``
+        when the stream broke rather than ended."""
         try:
-            return next(self._rows)
-        except Exception:  # StopIteration too: the stream ended
-            self.close()
-            self._server.getResult()  # the serving thread's error wins
-            raise
+            self._server.getResult()
+        except Py4JJavaError as err:
+            raise _StreamError(err) from err
+        if not isinstance(exc, StopIteration | EOFError):
+            raise exc
 
     def close(self) -> None:
         """Drop the stream: the serving thread's next write fails and it
         ends; nothing waits for it."""
         self._file.close()
         self._sock.close()
+
+
+class _StreamError(Exception):
+    """A served stream's failure with the condition and SQLSTATE of the
+    first Spark error in its Java cause chain (the serving thread wraps
+    it in a SparkException that has neither), so _sqlstate answers a
+    streamed error as it answers the same error from collect()."""
+
+    def __init__(self, err: Py4JJavaError) -> None:
+        message, self._cond, self._state = str(err), None, None
+        cause = err.java_exception
+        for _ in range(16):  # a cause chain is short; never loop forever
+            if cause is None:
+                break
+            try:
+                self._cond = cause.getCondition()
+            except Py4JError:  # not a SparkThrowable
+                pass
+            if self._cond is not None:
+                message, self._state = cause.getMessage(), cause.getSqlState()
+                break
+            cause = cause.getCause()
+        super().__init__(message)
+
+    def getCondition(self) -> str | None:  # noqa: N802 — PySpark's accessor
+        return self._cond
+
+    def getSqlState(self) -> str | None:  # noqa: N802 — PySpark's accessor
+        return self._state
+
+
+def _arrow_safe(df: DataFrame) -> DataFrame:
+    """``df`` with every struct whose field names repeat cast to the
+    same struct with deduplicated names (pyspark's _dedup_names, the
+    names ArrowTableToRowsConversion reads back): Spark refuses to
+    build an Arrow struct with repeated names."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import _dedup_names
+
+    def dedup(dt):
+        if isinstance(dt, T.StructType):
+            return T.StructType(
+                [
+                    T.StructField(name, dedup(f.dataType), f.nullable)
+                    for name, f in zip(_dedup_names(dt.names), dt.fields)
+                ]
+            )
+        if isinstance(dt, T.ArrayType):
+            return T.ArrayType(dedup(dt.elementType), dt.containsNull)
+        if isinstance(dt, T.MapType):
+            return T.MapType(dedup(dt.keyType), dedup(dt.valueType), dt.valueContainsNull)
+        return dt
+
+    fields = df.schema.fields
+    types = [dedup(f.dataType) for f in fields]
+    if types == [f.dataType for f in fields]:
+        return df
+    # positional names: the result's own may repeat
+    cols = [F.col(f"_{i}").cast(t) for i, t in enumerate(types)]
+    return df.toDF(*(f"_{i}" for i in range(len(fields)))).select(*cols).toDF(
+        *(f.name for f in fields)
+    )
 
 
 class _WireError(Exception):
@@ -337,7 +456,7 @@ class _Portal:
         # portal-suspension state (Execute with maxrows > 0): a live row
         # iterator survives across Execute messages until exhausted
         self.it: Iterator | None = None
-        self.cells: list | None = None  # (row index, encoder) per column
+        self.enc: ResultEncoder | None = None  # the kept columns' encoder
         self.sent = 0
 
     def close(self) -> None:
@@ -2491,37 +2610,39 @@ class PgWireServer:
                 writer.write(P.command_complete(_command_tag(stmt, 0)))
                 await writer.drain()
                 return
-            # text cells for format 0; nested-array columns get the
-            # rectangularity-checked encoder so the wire never carries a
-            # literal inconsistent with the advertised array OID (ADVICE
-            # r8 item 1)
-            cur.cells = _make_cells(
+            cur.enc = ResultEncoder(
                 [(i, f.dataType) for i, f in fields], cur.result_fmts
             )
             # "execute": fetch per _fetch_iter, write DataRows in bounded
-            # batches — chunk-at-a-time like cpp:119-165.
+            # bursts — chunk-at-a-time like cpp:119-165.
             cur.it = await self._exec(session, tag, _fetch_iter, df)
             cur.sent = 0
         n = 0
-        while True:
-            want = _BATCH_ROWS if maxrows <= 0 else min(_BATCH_ROWS, maxrows - n)
-            if want == 0:
-                cur.sent += n
-                writer.write(P.portal_suspended())
+        try:
+            while True:
+                want = _BATCH_ROWS if maxrows <= 0 else min(_BATCH_ROWS, maxrows - n)
+                if want == 0:
+                    cur.sent += n
+                    writer.write(P.portal_suspended())
+                    await writer.drain()
+                    return
+                # one pool call encodes and frames the burst; the loop
+                # writes it as one buffer
+                framed, got = await self._exec(
+                    session, tag, _next_batch, cur.it, want, cur.enc
+                )
+                if framed:
+                    writer.write(framed)
+                n += got
                 await writer.drain()
-                return
-            batch = await self._exec(
-                session, tag, _next_batch, cur.it, want, cur.cells
-            )
-            for encoded in batch:
-                writer.write(P.data_row(encoded))
-            n += len(batch)
-            await writer.drain()
-            if len(batch) < want:  # iterator exhausted
-                cur.it = None
-                writer.write(P.command_complete(_command_tag(stmt, cur.sent + n)))
-                await writer.drain()
-                return
+                if got < want:  # iterator exhausted
+                    cur.it = None
+                    writer.write(P.command_complete(_command_tag(stmt, cur.sent + n)))
+                    await writer.drain()
+                    return
+        except BaseException:
+            cur.close()  # a broken stream or connection: drop the socket
+            raise
 
     async def _copy_to_stdout(
         self,
@@ -2532,8 +2653,10 @@ class PgWireServer:
     ) -> int:
         """COPY ... TO STDOUT: CopyOutResponse + CopyData rows of the
         query the pool built, fetched per _fetch_iter in _BATCH_ROWS
-        chunks — bounded memory at any result size. Returns the row
-        count for the command tag."""
+        chunks — bounded memory at any result size; a streamed result
+        is read from its Arrow batches. The text format escapes
+        backslash, tab, newline and carriage return as PostgreSQL does
+        (\\N stays NULL). Returns the row count for the command tag."""
         import csv
         import io
 
@@ -2551,7 +2674,10 @@ class PgWireServer:
             nonlocal it
             if it is None:
                 it = _fetch_iter(copy.df)
-            rows = list(itertools.islice(it, _BATCH_ROWS))
+            if isinstance(it, _ServedRows):
+                rows = it.rows(_BATCH_ROWS)
+            else:
+                rows = list(itertools.islice(it, _BATCH_ROWS))
             buf = io.StringIO()
             if is_csv:
                 w = csv.writer(buf, lineterminator="\n")
@@ -2563,7 +2689,8 @@ class PgWireServer:
                 for row in rows:
                     buf.write(
                         "\t".join(
-                            "\\N" if v is None else encode_text(v) for v in row
+                            "\\N" if v is None else _copy_escape(encode_text(v))
+                            for v in row
                         )
                         + "\n"
                     )
@@ -2741,6 +2868,8 @@ def _sqlstate(exc: Exception) -> str:
     state = get() if get is not None else None
     # the error class decides, not the message: an AnalysisException
     # quotes the plan, so a guarded raise_error() in it is no user raise
+    if cond == "SPARK_JOB_CANCELLED":
+        return "57014"  # query_canceled — CancelRequest killed the jobs
     if state and cond != "USER_RAISED_EXCEPTION":
         return state
     # a raise_error() reports USER_RAISED_EXCEPTION (P0001) when
@@ -5002,19 +5131,6 @@ def _bit_oids_for(stmt: str, ncols: int) -> dict[int, int]:
     return oids
 
 
-def _make_cells(kept: list, result_fmts: list[int]) -> list:
-    """Per-output-column (row index, encoder) pairs honoring the
-    portal's result format codes (PG broadcast rules)."""
-    fmts = P.expand_formats(result_fmts, len(kept))
-    cells = []
-    for (i, dt), fmt in zip(kept, fmts):
-        if fmt == 1:
-            cells.append((i, (lambda d: lambda v: encode_binary(v, d))(dt)))
-        else:
-            cells.append((i, text_cell_encoder(dt)))
-    return cells
-
-
 def _command_rows(df: DataFrame) -> int:
     """Row count for the command tag of a result without columns. A
     command that session.sql already ran eagerly holds its result rows
@@ -5028,15 +5144,23 @@ def _command_rows(df: DataFrame) -> int:
     return written.get().value() if written.isDefined() else len(df.collect())
 
 
-def _next_batch(it: Iterator, n: int, cells: list) -> list[list[bytes | None]]:
-    out = []
-    for _ in range(n):
-        try:
-            row = next(it)
-        except StopIteration:
-            break
-        out.append([enc(row[i]) for i, enc in cells])
-    return out
+# PostgreSQL's COPY text format: these four characters are escaped
+_COPY_ESCAPES = str.maketrans({"\\": "\\\\", "\t": "\\t", "\n": "\\n", "\r": "\\r"})
+
+
+def _copy_escape(text: str) -> str:
+    return text.translate(_COPY_ESCAPES)
+
+
+def _next_batch(it: Iterator, n: int, enc: ResultEncoder) -> tuple[bytes, int]:
+    """The next burst of a result: up to ``n`` rows framed as DataRow
+    messages, and how many rows they are. A streamed result's Arrow
+    slices are encoded column at a time, collected rows cell by cell."""
+    if isinstance(it, _ServedRows):
+        pieces = it.take(n)
+        return b"".join(enc.batch(rb) for rb in pieces), sum(rb.num_rows for rb in pieces)
+    rows = list(itertools.islice(it, n))
+    return enc.rows(rows), len(rows)
 
 
 from .compat import enum_emulation_type as _enum_emulation_type  # noqa: E402
@@ -5069,7 +5193,7 @@ def _insert_needs_enum_coercion(session: SparkSession, table: str) -> bool:
 
 def _exc_message(exc: Exception) -> str:
     msg = str(exc)
-    # runtime errors raised mid-stream (_ServedRows) arrive wrapped
+    # runtime errors of a job fetched by collect() arrive wrapped
     # in Py4J/SparkException text with the real cause in a Caused-by
     # frame — surface the user-raised payload (raise_error(), used by
     # e.g. the enum conversion check) instead of the wrapper noise

@@ -28,17 +28,20 @@ LOWER_DST = "\u0069\u2c2f\ua7c0\ua7c7\ua7c9\ua7d0\ua7d6\ua7d8\ua7f5\U00010570\U0
 
 
 def wrap_case_call(fn: str, arg: str) -> str:
-    """upper/lower call with duck's simple-mapping semantics. Input
-    that itself contains the sandwich's private-use sentinel chars
-    would corrupt through the translate round trip (the r11 documented
-    residue) — such rows route to the exact per-codepoint Python
-    fallback UDF instead (r12; a one-char-class RLIKE probe per row,
-    true essentially never). Known costs (review r12, accepted): the
-    argument text is embedded twice (probe + chosen branch) — free for
-    columns, 2x for expensive subexpressions, and a NONDETERMINISTIC
-    argument could be probed on one value and folded on another;
-    nested upper(lower(…)) grows the emitted SQL ~3x per level, fine
-    for human-written nesting depths."""
+    """upper/lower call with duck's simple-mapping semantics, all in
+    JVM expressions (no Python UDF, so a plan over a resident copy
+    still folds). Input that itself contains the sandwich's
+    private-use sentinel chars would corrupt through the translate
+    round trip (the r11 documented residue) — such rows take a
+    per-codepoint branch instead: each code point goes through the
+    sandwich on its own, sentinels pass unchanged (they are caseless).
+    That is the simple mapping too, since every code point whose
+    Java mapping is not its 1:1 simple one is in the tables. Known
+    costs (review r12, accepted): the argument text is embedded twice
+    (probe + chosen branch) — free for columns, 2x for expensive
+    subexpressions, and a NONDETERMINISTIC argument could be probed on
+    one value and folded on another; nested upper(lower(…)) grows the
+    emitted SQL ~3x per level, fine for human-written nesting depths."""
     if fn == "upper":
         src, sent, dst = UPPER_SRC, UPPER_SENT, UPPER_DST
     else:
@@ -46,21 +49,25 @@ def wrap_case_call(fn: str, arg: str) -> str:
     def q(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"
 
-    sandwich = (
-        f"translate({fn}(translate({arg}, {q(src)}, {q(sent)})),"
-        f" {q(sent)}, {q(dst)})"
-    )
+    def sandwich(x: str) -> str:
+        return f"translate({fn}(translate({x}, {q(src)}, {q(sent)})), {q(sent)}, {q(dst)})"
+
     lo, hi = min(sent), max(sent)
     lm = re.fullmatch(r"'((?:[^']|'')*)'", arg.strip())
     if lm is not None and not any(lo <= c <= hi for c in lm.group(1)):
         # literal argument, sentinel-free — decided at REWRITE time,
         # no per-row RLIKE probe needed (bench guard, r12)
-        return sandwich
+        return sandwich(arg)
+    per_codepoint = (
+        f"array_join(transform(regexp_extract_all({arg}, '(?s)(.)', 1),"
+        f" __cp -> CASE WHEN __cp BETWEEN {q(lo)} AND {q(hi)} THEN __cp"
+        f" ELSE {sandwich('__cp')} END), '')"
+    )
     # rlike() FUNCTION form, not the operator: the schema-aware enum
     # pass resolves enum columns to their label field inside listed
-    # function heads (rlike/__duck_simple_* are in _ENUM_TEXT_FNS),
+    # function heads (rlike/regexp_extract_all are in _ENUM_TEXT_FNS),
     # while `(m) RLIKE '…'` would keep the raw struct and fail analysis
     return (
         f"(CASE WHEN rlike({arg}, {q('[' + lo + '-' + hi + ']')})"
-        f" THEN __duck_simple_{fn}({arg}) ELSE {sandwich} END)"
+        f" THEN {per_codepoint} ELSE {sandwich(arg)} END)"
     )

@@ -3513,7 +3513,7 @@ _ENUM_TEXT_FNS = frozenset(
     translate levenshtein editdist3 hamming mismatches jaccard
     jaro_similarity jaro_winkler_similarity damerau_levenshtein
     string_agg listagg group_concat format printf
-    rlike __duck_simple_upper __duck_simple_lower""".split()
+    rlike""".split()
 )
 
 
@@ -17108,9 +17108,6 @@ def rewrite_columns_star(sql: str, ordered_cols: list[str]) -> str:
     return sql
 
 
-_FROM_TABLE_RE = re.compile(r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w.]*)", re.IGNORECASE)
-
-
 _CREATE_TABLE_DDL_RE = re.compile(
     r"^(\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?TABLE\s+"
     r"(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*)\(",
@@ -17174,14 +17171,51 @@ def strip_table_constraints(
     return new_sql, m.group(2), pks or None
 
 
+# a CTE definition: `WITH [RECURSIVE] name [(cols)] AS [NOT] [MATERIALIZED] (`
+# or `, name … AS (` after an earlier one
+_CTE_NAME_RE = re.compile(
+    r"(?:\bWITH(?:\s+RECURSIVE)?|,)\s*([A-Za-z_]\w*)\s*(?:\([^()]*\))?"
+    r"\s+AS\s+(?:NOT\s+)?(?:MATERIALIZED\s+)?\(",
+    re.IGNORECASE,
+)
+_TABLES_SCAN_RE = re.compile(
+    r"(?P<open>\()|(?P<close>\))|\b(?:FROM|JOIN)\s+(?P<name>[A-Za-z_][\w.]*)",
+    re.IGNORECASE,
+)
+# a word before `(` that opens a relation or a subquery, not a call
+_NOT_CALL_WORDS = frozenset(
+    "from join lateral as in exists using on any all some".split()
+)
+_QUERY_START_RE = re.compile(r"\s*(?:\(|(?:SELECT|WITH|FROM|VALUES|TABLE)\b)", re.IGNORECASE)
+
+
 def statement_tables(sql: str) -> list[str]:
     """Table identifiers after FROM/JOIN in code segments (simple cases;
-    subqueries contribute their own inner FROMs)."""
+    subqueries contribute their own inner FROMs). A FROM inside a
+    function call's parentheses (``substring(x FROM 2)``, ``trim(BOTH
+    'z' FROM x)``, ``extract(year FROM d)``) names no table, and the
+    statement's own CTE names are no catalog tables either."""
     names: list[str] = []
+    ctes: set[str] = set()
+    calls: list[bool] = []  # per open paren: does it open a call's arguments
     for kind, seg in _lex(sql):
-        if kind == "code":
-            names.extend(_FROM_TABLE_RE.findall(seg))
-    return names
+        if kind != "code":
+            continue
+        ctes.update(n.lower() for n in _CTE_NAME_RE.findall(seg))
+        for m in _TABLES_SCAN_RE.finditer(seg):
+            if m.group("open"):
+                word = re.search(r"(\w+)\s*$", seg[max(0, m.start() - 64) : m.start()])
+                calls.append(
+                    word is not None
+                    and word.group(1).lower() not in _NOT_CALL_WORDS
+                    and _QUERY_START_RE.match(seg, m.end()) is None
+                )
+            elif m.group("close"):
+                if calls:
+                    calls.pop()
+            elif not (calls and calls[-1]):
+                names.append(m.group("name"))
+    return [n for n in names if n.lower() not in ctes]
 
 
 def _effectively_empty(stmt: str) -> bool:

@@ -2410,6 +2410,8 @@ def test_wire_folding_errors_keep_their_answer(client, monkeypatch, oracle):
     oracle.execute("DROP TYPE fold_mood")
     assert answers[cases[0][0]] == {"22003"}
     assert answers[cases[1][0]] == {"22023"}
+    # CAST_OVERFLOW, streamed from a job or raised at folding time
+    assert answers[cases[2][0]] == answers[cases[3][0]] == {"22003"}
     assert answers[cases[4][0]] == answers[cases[5][0]] == {"22P02"}
 
 
@@ -6700,3 +6702,210 @@ def test_guarded_statement_sqlstate(client, spark):
     assert r.get("sqlstate") == "42K09", r
     (r,) = client.query("SELECT raise_error('boom')")
     assert r.get("sqlstate") == "P0001", r
+
+
+# ------------------------------------------- Arrow-native result stream
+
+
+def test_wire_casefold_matches_duckdb(client, oracle):
+    """upper()/lower() over column operands answer DuckDB's simple
+    (1:1) case mapping, also for strings holding the private-use
+    characters the translate sandwich borrows (U+E000–U+E12C), which
+    take the per-codepoint branch."""
+    texts = [
+        "straße", "ﬀ ﬁ ﬂ", "ΟΔΟΣ ΣΟΦΟΣ", "οδος", "İstanbul", "ǅungla",
+        "𐐀𐐨 𞤀𞤢", "ŉ ǰ ΐ",
+        "a\ue000ß\ue090z", "\ue100İ\ue12cΣ", "\ue000\ue05f\ue12c", "x\ue0a0ﬁ\ue101y", "",
+    ]
+    values = ", ".join(f"({i}, '{t}')" for i, t in enumerate(texts))
+    sql = (
+        f"SELECT k, upper(s) AS u, lower(s) AS l, upper(lower(s)) AS ul"
+        f" FROM (VALUES {values}) t(k, s) ORDER BY k"
+    )
+    (res,) = client.query(sql)
+    assert "error" not in res, res
+    want = [[str(k), u, lo, ul] for k, u, lo, ul in oracle.execute(sql).fetchall()]
+    assert res["rows"] == want
+
+
+def test_fn_string_basic_has_no_python_udf(client, spark):
+    """The bulk string statement plans no Python UDF, and a column
+    upper() over a resident fixture copy folds without a Spark job."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+    from workloads import BULK
+
+    from duckdb_pgwire_spark.server.app import _hugeint_sums
+
+    sql = _hugeint_sums(spark, rewrite(BULK["fn_string_basic"]))
+    plan = spark.sql(sql)._jdf.queryExecution().analyzed()
+    pattern = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PYTHON_UDF()
+    assert not plan.containsPattern(pattern)
+    jobs = _job_counter(client, spark)
+    lookup = "SELECT p_partkey, upper(p_name) FROM part WHERE p_size = 7 LIMIT 20"
+    jobs(lookup)  # builds part's resident copy
+    assert jobs(lookup) == 0
+
+
+def test_typer_looks_up_only_real_tables(spark, monkeypatch):
+    """The schema-typed pass looks up the statement's catalog tables
+    only: not a FROM inside substring()/trim() and not its CTE names."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+    from workloads import BULK
+
+    from duckdb_pgwire_spark.server import app
+
+    looked: list[str] = []
+    orig = type(spark).table
+
+    def table(self, name):
+        looked.append(name)
+        return orig(self, name)
+
+    monkeypatch.setattr(type(spark), "table", table)
+    for name, want in (("fn_string_basic", {"part"}), ("stream_session_window", {"events"})):
+        app._note_statement_head("CREATE")  # clears the schema and typer memos
+        looked.clear()
+        app._hugeint_sums(spark, rewrite(BULK[name]))
+        assert set(looked) == want, (name, looked)
+
+
+def test_wire_copy_to_stdout_escapes_text(client):
+    """COPY TO STDOUT's text format escapes backslash, tab, newline and
+    carriage return as PostgreSQL does; \\N is NULL."""
+    (res,) = client.query(
+        "COPY (SELECT E'a\\tb' AS a, E'x\\ny' AS b, 'c:\\d' AS c, NULL AS d,"
+        " E'r\\re' AS e) TO STDOUT"
+    )
+    assert res.get("tag") == "COPY 1", res
+    line = res["copy_out"].decode()
+    assert line == "a\\tb\tx\\ny\tc:\\\\d\t\\N\tr\\re\n"
+
+    def decode(field):  # PostgreSQL's COPY text rules
+        if field == "\\N":
+            return None
+        out, i = [], 0
+        while i < len(field):
+            if field[i] == "\\":
+                out.append({"t": "\t", "n": "\n", "r": "\r"}.get(field[i + 1], field[i + 1]))
+                i += 2
+            else:
+                out.append(field[i])
+                i += 1
+        return "".join(out)
+
+    assert [decode(f) for f in line[:-1].split("\t")] == ["a\tb", "x\ny", "c:\\d", None, "r\re"]
+
+
+def test_wire_streamed_copy_to_stdout_matches_query(client):
+    """A streamed (unbounded) result copies the same rows it answers."""
+    sql = "SELECT o_orderkey, o_orderpriority, o_orderdate, o_totalprice FROM orders"
+    (res,) = client.query(f"COPY ({sql}) TO STDOUT")
+    (rows,) = client.query(sql)
+    assert res["tag"] == f"COPY {len(rows['rows'])}" and len(rows["rows"]) > 10_000
+    lines = res["copy_out"].decode().split("\n")[:-1]
+    assert sorted(lines) == sorted("\t".join(r) for r in rows["rows"])
+
+
+def test_wire_portal_pages_across_stream_boundaries(client):
+    """Execute with maxrows=2 and maxrows=1500 over a streamed result
+    that crosses 1024-row bursts and a 10,000-row Arrow batch answers
+    the rows of one Execute."""
+    sql = "SELECT o_orderkey, o_custkey, o_orderdate FROM orders WHERE o_orderkey < 11000"
+    whole = client.extended_fetch(sql, maxrows=0)
+    assert "error" not in whole and 10_000 < len(whole["rows"]) < 12_000, whole.get("tag")
+    for maxrows in (1500, 2):
+        paged = client.extended_fetch(sql, maxrows=maxrows)
+        assert "error" not in paged, paged
+        assert paged["rows"] == whole["rows"], maxrows
+        assert paged["tag"] == whole["tag"]
+        assert set(paged["batches"][:-1]) == {maxrows}
+
+
+def _serving_threads(spark) -> list[str]:
+    threads = spark._jvm.java.lang.Thread.getAllStackTraces().keySet().toArray()
+    return [t.getName() for t in threads if t.getName().startswith("serve-Arrow")]
+
+
+def _open_streams() -> list:
+    import gc
+
+    from duckdb_pgwire_spark.server.app import _ServedRows
+
+    return [
+        o for o in gc.get_objects()
+        if isinstance(o, _ServedRows) and o._sock.fileno() != -1
+    ]
+
+
+def test_wire_cancel_mid_stream(wire_server, spark):
+    """A CancelRequest after the first bursts of a streamed result
+    answers 57014, the connection stays usable, and no served socket or
+    serving thread is left after it."""
+    import socket
+    import time
+
+    from .test_wire_golden import _Raw
+
+    class Keyed(_Raw):
+        def until_ready(self):
+            msgs = super().until_ready()
+            for tag, body in msgs:
+                if tag == "K":
+                    self.key = struct.unpack("!II", body)
+            return msgs
+
+    raw = Keyed(wire_server)
+    try:
+        # partition 0 streams 2048 rows; partition 1 stalls on its first row
+        raw.send(
+            b"Q",
+            b"SELECT id, reflect('java.lang.Thread', 'sleep', CAST(CASE WHEN id = 2048"
+            b" THEN 15000 ELSE 0 END AS BIGINT)) AS z FROM range(0, 4096, 1, 2) t(id)\x00",
+        )
+        assert raw.msg()[0] == "T"
+        rows = 0
+        while rows < 2048:
+            tag, _ = raw.msg()
+            assert tag == "D"
+            rows += 1
+        cancel = socket.create_connection(("127.0.0.1", wire_server))
+        cancel.sendall(struct.pack("!IIII", 16, 80877102, *raw.key))
+        cancel.close()
+        msgs = raw.until_ready()
+        assert [t for t, _ in msgs if t != "D"] == ["E", "Z"], msgs[-2:]
+        fields = dict((p[:1].decode(), p[1:]) for p in msgs[-2][1].split(b"\x00") if p)
+        assert fields["C"] == b"57014", fields
+        assert raw.simple("SELECT 3 AS v")[1] == ("D", b"\x00\x01\x00\x00\x00\x013")
+    finally:
+        raw.close()
+    deadline = time.monotonic() + 10
+    while (_serving_threads(spark) or _open_streams()) and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert _serving_threads(spark) == [] and _open_streams() == []
+
+
+def test_wire_streams_leave_no_served_socket(client, spark):
+    """After a streamed result — read to its end, failed in its job, or
+    suspended and then closed — no served socket or serving thread is
+    left."""
+    import time
+
+    sql = "SELECT o_orderkey, o_orderpriority FROM orders"
+    (res,) = client.query(sql)
+    assert len(res["rows"]) > 10_000
+    (res,) = client.query(
+        "SELECT CAST(o_totalprice * 1000 AS SMALLINT) AS s FROM orders WHERE o_orderkey = 4"
+    )
+    assert res["sqlstate"] == "22003", res
+    out = client.extended_fetch(sql, maxrows=0)
+    assert len(out["rows"]) > 10_000
+    deadline = time.monotonic() + 10
+    while (_serving_threads(spark) or _open_streams()) and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert _serving_threads(spark) == [] and _open_streams() == []
