@@ -9,7 +9,7 @@ handler factory per session (:184-186)           _handle() task per connection
 fresh Connection per query, shared DB (:42)      shared SparkSession per query
 conn.Prepare(q) → names/types (:52,62-64)        df = spark.sql(q); df.schema
    → RowDescription (:75-88)                        → RowDescription
-p->Execute(); chunk iteration (:97,119)          _fetch_iter(df) → 1024-row bursts
+p->Execute(); chunk iteration (:97,119)          _fetch_rows(df) → 1024-row bursts
 per-value text encode / NULL (:120-165)          batchenc: column-at-a-time
                                                  kernels, typemap per cell
 errors → SqlException(DataException) (:65-73)    ErrorResponse, SQLSTATE kept
@@ -34,7 +34,7 @@ tag (so a CancelRequest reaches it); the event loop does only protocol
 I/O and COPY data transfer (fetching, encoding and framing each burst
 of result rows, and the load at the end of COPY FROM STDIN, are
 further tagged pool calls, never overlapping the loop's writes).
-Fetch rule (_fetch_iter): rows built on the driver (DESCRIBE, SHOW,
+Fetch rule (_fetch_rows): rows built on the driver (DESCRIBE, SHOW,
 PRAGMA, pg_catalog) are Arrow-backed local relations and run no Spark
 job. A fold-shaped statement — Project/Filter/Limit over a
 FROM-less SELECT's one row or over a fixture view's driver-resident
@@ -72,7 +72,6 @@ import logging
 import os
 import struct
 import threading
-from collections.abc import Iterator
 from typing import NamedTuple
 
 from py4j.protocol import Py4JError, Py4JJavaError
@@ -140,7 +139,7 @@ def _local_df(session: SparkSession, rows: list, ddl: str) -> DataFrame:
     """A result built on the driver as an Arrow-backed LocalRelation.
     A list handed to createDataFrame is unpickled by a Python worker in
     a Spark job on every execution; an Arrow table becomes a
-    LocalRelation whose maxRows is its row count, so _fetch_iter
+    LocalRelation whose maxRows is its row count, so _fetch_rows
     collects it without any job and SQL over it (the pg_catalog views)
     plans as a local scan."""
     import pyarrow as pa
@@ -153,20 +152,22 @@ def _local_df(session: SparkSession, rows: list, ddl: str) -> DataFrame:
     return session.createDataFrame(table, struct)
 
 
-def _fetch_iter(df: DataFrame) -> Iterator:
-    """The row iterator of a result. A fold-shaped plan (see _folded)
-    is answered from its folded copy with one collect() and no Spark
-    job. Otherwise: one collect() when the optimized plan bounds its
-    rows at ≤ _BATCH_ROWS (a LocalRelation, a global aggregate, a small
-    LIMIT) — no more than one write burst reaches the driver, and a
+def _fetch_rows(df: DataFrame) -> _CollectedRows | _ServedRows:
+    """The rows of a result. A fold-shaped plan (see _folded) is
+    answered from its folded copy with one collect() and no Spark job.
+    Otherwise: one collect() when the optimized plan bounds its rows at
+    ≤ _BATCH_ROWS (a LocalRelation, a global aggregate, a small LIMIT)
+    — no more than one write burst reaches the driver, and a
     driver-built relation runs no Spark job — else the rows stream
-    through one served socket (_ServedRows)."""
+    through one served socket (_ServedRows). Both hand out bursts the
+    same way: ``encode`` frames the next ones, ``rows`` gives them as
+    Python values."""
     folded = _folded(df)
     if folded is not None:
-        return iter(folded.collect())
+        return _CollectedRows(folded.collect())
     bound = df._jdf.queryExecution().optimizedPlan().maxRows()
     if bound.isDefined() and bound.get() <= _BATCH_ROWS:
-        return iter(df.collect())
+        return _CollectedRows(df.collect())
     return _ServedRows(df)
 
 
@@ -277,6 +278,28 @@ def _folded(df: DataFrame) -> DataFrame | None:
     return folded
 
 
+class _CollectedRows:
+    """A result fetched with one collect(), handed out in bursts."""
+
+    def __init__(self, rows: list) -> None:
+        self._rows = rows
+        self._pos = 0
+
+    def rows(self, n: int) -> list:
+        """The next ``n`` rows (fewer only at the end)."""
+        out = self._rows[self._pos : self._pos + n]
+        self._pos += len(out)
+        return out
+
+    def encode(self, n: int, enc: ResultEncoder) -> tuple[bytes, int]:
+        """The next ``n`` rows framed cell by cell, and how many."""
+        rows = self.rows(n)
+        return enc.rows(rows), len(rows)
+
+    def close(self) -> None:
+        self._rows = []
+
+
 class _ServedRows:
     """A result's rows streamed from the JVM as Arrow record batches
     through one served socket. A serving thread (it inherits the
@@ -286,7 +309,8 @@ class _ServedRows:
     memory stays bounded to about one partition, without
     toLocalIterator()'s request/response round trip per partition. The
     socket is connected here, at once. ``take`` hands out slices of the
-    batches, which batchenc frames column at a time. When the stream
+    batches: ``encode`` frames them column at a time (batchenc),
+    ``rows`` converts them to Python values. When the stream
     ends or breaks, the serving thread's result is taken, so a failed
     partition raises (as _StreamError, which keeps the Spark error's
     condition and SQLSTATE) instead of ending the rows early."""
@@ -337,6 +361,11 @@ class _ServedRows:
             n -= piece.num_rows
             out.append(piece)
         return out
+
+    def encode(self, n: int, enc: ResultEncoder) -> tuple[bytes, int]:
+        """The next ``n`` rows framed column at a time, and how many."""
+        pieces = self.take(n)
+        return b"".join(enc.batch(rb) for rb in pieces), sum(rb.num_rows for rb in pieces)
 
     def rows(self, n: int) -> list[tuple]:
         """The next ``n`` rows (fewer only at the end) as Python values."""
@@ -453,18 +482,17 @@ class _Portal:
         # result format codes from Bind (0 text / 1 binary, PG broadcast
         # rules applied against the output column count at Execute time)
         self.result_fmts = result_fmts or []
-        # portal-suspension state (Execute with maxrows > 0): a live row
-        # iterator survives across Execute messages until exhausted
-        self.it: Iterator | None = None
+        # portal-suspension state (Execute with maxrows > 0): a live
+        # result survives across Execute messages until exhausted
+        self.result: _CollectedRows | _ServedRows | None = None
         self.enc: ResultEncoder | None = None  # the kept columns' encoder
         self.sent = 0
 
     def close(self) -> None:
         """Drop a suspended cursor, closing its row stream."""
-        close = getattr(self.it, "close", None)
-        if close is not None:
-            close()
-        self.it = None
+        if self.result is not None:
+            self.result.close()
+        self.result = None
 
 
 class _CopyIn(NamedTuple):
@@ -2595,11 +2623,11 @@ class PgWireServer:
         extended protocol sends RowDescription from Describe, and each
         Execute sends up to ``maxrows`` rows (0: all) in the portal's
         result formats, then PortalSuspended while rows remain, else
-        CommandComplete. The cursor — row iterator, cell encoders, rows
+        CommandComplete. The cursor — fetched result, cell encoders, rows
         sent — lives on the portal across Execute messages, as in PG
         (the JDBC setFetchSize path)."""
         cur = portal or _Portal(stmt)
-        if cur.it is None:
+        if cur.result is None:
             fields = self._fields(df)
             if portal is None:
                 writer.write(self._row_description(df, stmt, []))
@@ -2613,9 +2641,9 @@ class PgWireServer:
             cur.enc = ResultEncoder(
                 [(i, f.dataType) for i, f in fields], cur.result_fmts
             )
-            # "execute": fetch per _fetch_iter, write DataRows in bounded
+            # "execute": fetch per _fetch_rows, write DataRows in bounded
             # bursts — chunk-at-a-time like cpp:119-165.
-            cur.it = await self._exec(session, tag, _fetch_iter, df)
+            cur.result = await self._exec(session, tag, _fetch_rows, df)
             cur.sent = 0
         n = 0
         try:
@@ -2629,14 +2657,14 @@ class PgWireServer:
                 # one pool call encodes and frames the burst; the loop
                 # writes it as one buffer
                 framed, got = await self._exec(
-                    session, tag, _next_batch, cur.it, want, cur.enc
+                    session, tag, _next_batch, cur.result, want, cur.enc
                 )
                 if framed:
                     writer.write(framed)
                 n += got
                 await writer.drain()
-                if got < want:  # iterator exhausted
-                    cur.it = None
+                if got < want:  # result exhausted
+                    cur.result = None
                     writer.write(P.command_complete(_command_tag(stmt, cur.sent + n)))
                     await writer.drain()
                     return
@@ -2652,7 +2680,7 @@ class PgWireServer:
         tag: str,
     ) -> int:
         """COPY ... TO STDOUT: CopyOutResponse + CopyData rows of the
-        query the pool built, fetched per _fetch_iter in _BATCH_ROWS
+        query the pool built, fetched per _fetch_rows in _BATCH_ROWS
         chunks — bounded memory at any result size; a streamed result
         is read from its Arrow batches. The text format escapes
         backslash, tab, newline and carriage return as PostgreSQL does
@@ -2668,16 +2696,13 @@ class PgWireServer:
             buf = io.StringIO()
             csv.writer(buf).writerow([f.name for f in fields])
             writer.write(P.copy_data(buf.getvalue().encode()))
-        it = None
+        result = None
 
         def next_chunk():
-            nonlocal it
-            if it is None:
-                it = _fetch_iter(copy.df)
-            if isinstance(it, _ServedRows):
-                rows = it.rows(_BATCH_ROWS)
-            else:
-                rows = list(itertools.islice(it, _BATCH_ROWS))
+            nonlocal result
+            if result is None:
+                result = _fetch_rows(copy.df)
+            rows = result.rows(_BATCH_ROWS)
             buf = io.StringIO()
             if is_csv:
                 w = csv.writer(buf, lineterminator="\n")
@@ -2706,8 +2731,8 @@ class PgWireServer:
                 nrows += n
                 await writer.drain()
         finally:
-            if (close := getattr(it, "close", None)) is not None:
-                close()
+            if result is not None:
+                result.close()
         writer.write(P.copy_done())
         return nrows
 
@@ -2721,8 +2746,10 @@ class PgWireServer:
     ) -> int:
         """COPY <table> FROM STDIN (psql \\copy): CopyInResponse, spool
         CopyData chunks to a temp file (no full in-memory buffering),
-        then one distributed Spark load + insertInto on CopyDone.
-        Returns the row count for the command tag."""
+        then one distributed Spark load + insertInto on CopyDone. The
+        text format's backslash escapes are decoded in string columns
+        (_copy_unescape), so COPY TO STDOUT's output loads back as it
+        was. Returns the row count for the command tag."""
         import tempfile
 
         from pyspark.sql import types as T
@@ -2765,6 +2792,10 @@ class PgWireServer:
                         "quote", "\u0000"
                     )
                 df = r.csv(tmp.name)
+                if copy.fmt != "csv":
+                    for c in target_cols:
+                        if isinstance(schema[c].dataType, T.StringType):
+                            df = df.withColumn(c, _copy_unescape(F.col(c)))
                 for c in schema.names:
                     if c not in target_cols:
                         df = df.withColumn(c, F.lit(None).cast(schema[c].dataType))
@@ -5152,15 +5183,32 @@ def _copy_escape(text: str) -> str:
     return text.translate(_COPY_ESCAPES)
 
 
-def _next_batch(it: Iterator, n: int, enc: ResultEncoder) -> tuple[bytes, int]:
+# COPY FROM's text format decodes these escapes too, and a backslash
+# before any other character stands for that character; octal (\101)
+# and hex (\x41) escapes are kept as written
+_COPY_UNESCAPES = {"b": "\b", "f": "\f", "n": "\n", "r": "\r", "t": "\t", "v": "\v"}
+
+
+def _copy_unescape(col):
+    """``col`` (a string column read from COPY's text format) with its
+    backslash escapes decoded, one escape or character at a time."""
+    def token(t):
+        out = F.when(F.length(t) == 1, t).when(t.rlike(r"^\\[0-7x]"), t)
+        for ch, ctrl in _COPY_UNESCAPES.items():
+            out = out.when(t == "\\" + ch, F.lit(ctrl))
+        return out.otherwise(F.substring(t, 2, 1))
+
+    tokens = F.regexp_extract_all(col, F.lit(r"(?s)(\\.|.)"), 1)
+    decoded = F.array_join(F.transform(tokens, token), "")
+    return F.when(F.instr(col, "\\") > 0, decoded).otherwise(col)
+
+
+def _next_batch(
+    result: _CollectedRows | _ServedRows, n: int, enc: ResultEncoder
+) -> tuple[bytes, int]:
     """The next burst of a result: up to ``n`` rows framed as DataRow
-    messages, and how many rows they are. A streamed result's Arrow
-    slices are encoded column at a time, collected rows cell by cell."""
-    if isinstance(it, _ServedRows):
-        pieces = it.take(n)
-        return b"".join(enc.batch(rb) for rb in pieces), sum(rb.num_rows for rb in pieces)
-    rows = list(itertools.islice(it, n))
-    return enc.rows(rows), len(rows)
+    messages, and how many rows they are."""
+    return result.encode(n, enc)
 
 
 from .compat import enum_emulation_type as _enum_emulation_type  # noqa: E402

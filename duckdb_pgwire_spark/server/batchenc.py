@@ -5,8 +5,8 @@ turned into the bytes of its DataRow messages in one call, column by
 column:
 
 - Arrow record batches (the streamed results, app._ServedRows): the text
-  of BIGINT/INT/SMALLINT/TINYINT, VARCHAR, DATE, DOUBLE and
-  TIMESTAMP_NTZ columns comes from vectorised pyarrow/numpy kernels;
+  of BIGINT/INT/SMALLINT/TINYINT, VARCHAR and DOUBLE columns comes from
+  vectorised pyarrow/numpy kernels;
   every other column, and every binary-format column, is converted to
   Python values (pyspark's ArrowTableToRowsConversion) and encoded cell
   by cell with typemap's encoders.
@@ -40,12 +40,6 @@ from .typemap import _enc_float, encode_binary, text_cell_encoder
 # kernel-covered Spark types (text format only)
 _INT_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
-# DATE kernel range: Arrow's text equals date.isoformat() for years 1-9999
-_DATE_MIN = -719_162  # 0001-01-01, days since the epoch
-_DATE_MAX = 2_932_896  # 9999-12-31
-# TIMESTAMP_NTZ kernel range: strftime('%Y') pads no year below 1000
-_TS_MIN = -30_610_224_000_000_000  # 1000-01-01, µs since the epoch
-_TS_MAX = 253_402_300_800_000_000  # 10000-01-01
 
 
 class _Part(NamedTuple):
@@ -130,17 +124,6 @@ def _kernel_cast(arr) -> _Cells:
     return _Cells(_null_mask(arr), [_string_part(arr.cast(pa.string(), memory_pool=_POOL))])
 
 
-def _kernel_date(arr) -> _Cells:
-    """DATE: Arrow's text is date.isoformat() for years 1-9999; a column
-    with any other year goes through the per-cell encoder."""
-    null = _null_mask(arr)
-    days = np.frombuffer(arr.buffers()[1], np.int32, count=len(arr), offset=arr.offset * 4)
-    live = days if null is None else days[~null]
-    if len(live) and (live.min() < _DATE_MIN or live.max() > _DATE_MAX):
-        return _per_cell(arr, T.DateType(), 0)
-    return _Cells(null, [_string_part(arr.cast(pa.string(), memory_pool=_POOL))])
-
-
 _DOT_ZERO = np.frombuffer(b".0", np.uint8)
 
 
@@ -175,39 +158,13 @@ def _kernel_double(arr) -> _Cells:
     return _patch(cells, rows, [_enc_float(float(v[r])).encode() for r in rows])
 
 
-def _kernel_timestamp_ntz(arr) -> _Cells:
-    """TIMESTAMP_NTZ: Arrow's text is 'YYYY-MM-DD HH:MM:SS.ffffff'; the
-    fraction's trailing zeros (and an all-zero fraction with its point)
-    are cut by shortening each cell. Years outside 1000-9999 take the
-    per-cell encoder (strftime does not pad them to four digits)."""
-    n = len(arr)
-    null = _null_mask(arr)
-    us = np.frombuffer(arr.buffers()[1], np.int64, count=n, offset=arr.offset * 8)
-    live = us if null is None else us[~null]
-    if len(live) and (live.min() < _TS_MIN or live.max() >= _TS_MAX):
-        return _per_cell(arr, T.TimestampNTZType(), 0)
-    text = _string_part(arr.cast(pa.string(), memory_pool=_POOL))
-    frac = us % 1_000_000
-    zeros = np.zeros(n, np.int64)
-    for k in (10, 100, 1_000, 10_000, 100_000):
-        zeros += frac % k == 0
-    keep = np.where(frac == 0, 19, 26 - zeros)
-    if null is not None:
-        keep[null] = 0
-    return _Cells(null, [_Part(text.data, text.starts, keep)])
-
-
 def _kernel_for(dt: T.DataType) -> Callable | None:
     if isinstance(dt, _INT_TYPES):
         return _kernel_cast
     if isinstance(dt, T.StringType | T.VarcharType | T.CharType):
         return _kernel_string
-    if isinstance(dt, T.DateType):
-        return _kernel_date
     if isinstance(dt, T.DoubleType):
         return _kernel_double
-    if isinstance(dt, T.TimestampNTZType):
-        return _kernel_timestamp_ntz
     return None
 
 

@@ -17171,15 +17171,13 @@ def strip_table_constraints(
     return new_sql, m.group(2), pks or None
 
 
-# a CTE definition: `WITH [RECURSIVE] name [(cols)] AS [NOT] [MATERIALIZED] (`
-# or `, name … AS (` after an earlier one
-_CTE_NAME_RE = re.compile(
-    r"(?:\bWITH(?:\s+RECURSIVE)?|,)\s*([A-Za-z_]\w*)\s*(?:\([^()]*\))?"
-    r"\s+AS\s+(?:NOT\s+)?(?:MATERIALIZED\s+)?\(",
-    re.IGNORECASE,
-)
+# a CTE definition, `WITH [RECURSIVE] name [(cols)] AS [NOT] [MATERIALIZED] (`
+# or `, name … AS (` after an earlier one, up to its body's open paren; an
+# open or close paren; a name after FROM/JOIN
 _TABLES_SCAN_RE = re.compile(
-    r"(?P<open>\()|(?P<close>\))|\b(?:FROM|JOIN)\s+(?P<name>[A-Za-z_][\w.]*)",
+    r"(?P<cte>(?:\b(?P<with>WITH)(?P<rec>\s+RECURSIVE)?|,)\s*(?P<cte_name>[A-Za-z_]\w*)"
+    r"\s*(?:\([^()]*\))?\s+AS\s+(?:NOT\s+)?(?:MATERIALIZED\s+)?\()"
+    r"|(?P<open>\()|(?P<close>\))|\b(?:FROM|JOIN)\s+(?P<name>[A-Za-z_][\w.]*)",
     re.IGNORECASE,
 )
 # a word before `(` that opens a relation or a subquery, not a call
@@ -17193,29 +17191,50 @@ def statement_tables(sql: str) -> list[str]:
     """Table identifiers after FROM/JOIN in code segments (simple cases;
     subqueries contribute their own inner FROMs). A FROM inside a
     function call's parentheses (``substring(x FROM 2)``, ``trim(BOTH
-    'z' FROM x)``, ``extract(year FROM d)``) names no table, and the
-    statement's own CTE names are no catalog tables either."""
+    'z' FROM x)``, ``extract(year FROM d)``) names no table, nor does a
+    name that reads a CTE in scope: one defined earlier in the same
+    WITH (or in an enclosing one), after its own body has closed. In
+    ``WITH orders AS (SELECT … FROM orders)`` the inner ``orders`` is
+    the catalog table; under WITH RECURSIVE a CTE's body reads the CTE
+    itself."""
     names: list[str] = []
-    ctes: set[str] = set()
-    calls: list[bool] = []  # per open paren: does it open a call's arguments
+    # per open paren: does it open a call's arguments; the CTE it is the body of
+    parens: list[tuple[bool, str | None]] = []
+    ctes: list[tuple[str, int]] = []  # CTE names in scope, and their WITH's depth
+    recursive: dict[int, bool] = {}  # per depth: is the WITH there RECURSIVE
     for kind, seg in _lex(sql):
         if kind != "code":
             continue
-        ctes.update(n.lower() for n in _CTE_NAME_RE.findall(seg))
         for m in _TABLES_SCAN_RE.finditer(seg):
-            if m.group("open"):
+            depth = len(parens)
+            if m.group("cte"):
+                cte = m.group("cte_name").lower()
+                if m.group("with"):
+                    recursive[depth] = m.group("rec") is not None
+                if recursive.get(depth):
+                    ctes.append((cte, depth))
+                parens.append((False, cte))
+            elif m.group("open"):
                 word = re.search(r"(\w+)\s*$", seg[max(0, m.start() - 64) : m.start()])
-                calls.append(
+                parens.append((
                     word is not None
                     and word.group(1).lower() not in _NOT_CALL_WORDS
-                    and _QUERY_START_RE.match(seg, m.end()) is None
-                )
+                    and _QUERY_START_RE.match(seg, m.end()) is None,
+                    None,
+                ))
             elif m.group("close"):
-                if calls:
-                    calls.pop()
-            elif not (calls and calls[-1]):
-                names.append(m.group("name"))
-    return [n for n in names if n.lower() not in ctes]
+                if not parens:
+                    continue
+                _, cte = parens.pop()
+                recursive.pop(depth, None)  # the scope that paren held ends
+                ctes = [(n, d) for n, d in ctes if d < depth]
+                if cte is not None and not recursive.get(depth - 1):
+                    ctes.append((cte, depth - 1))
+            elif not (parens and parens[-1][0]):
+                name = m.group("name")
+                if all(name.lower() != n for n, _ in ctes):
+                    names.append(name)
+    return names
 
 
 def _effectively_empty(stmt: str) -> bool:

@@ -1,10 +1,10 @@
 """Column-at-a-time DataRow encoding (server/batchenc.py) against the
 per-cell encoders of typemap.py, byte for byte.
 
-The kernels cover BIGINT/INT/SMALLINT/TINYINT, VARCHAR, DATE, DOUBLE and
-TIMESTAMP_NTZ in text format; the reference is the same Arrow batch
-converted to Python values (pyspark's ArrowTableToRowsConversion) and
-encoded cell by cell (text_cell_encoder / encode_binary), framed by
+The kernels cover BIGINT/INT/SMALLINT/TINYINT, VARCHAR and DOUBLE in
+text format (every other type goes per cell); the reference is the same
+Arrow batch converted to Python values (pyspark's
+ArrowTableToRowsConversion) and encoded cell by cell (text_cell_encoder / encode_binary), framed by
 protocol.data_row. The batches come from the server's own stream
 (app._ServedRows) over a type matrix with NULLs, every registry oracle
 statement that passes over the wire, and the compat battery.

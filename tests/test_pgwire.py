@@ -6775,6 +6775,46 @@ def test_typer_looks_up_only_real_tables(spark, monkeypatch):
         assert set(looked) == want, (name, looked)
 
 
+def test_wire_self_shadowing_cte_sum_matches_duckdb(client, spark, oracle, tmp_path):
+    """A CTE named after the table its body reads: the inner FROM is the
+    catalog table (Spark's reading), so the typed pass still widens SUM
+    over its integer column to DECIMAL(38,0), as DuckDB's HUGEINT.
+    DuckDB refuses the unqualified form as a circular CTE reference;
+    its answer is checked on the form with the inner table qualified
+    (``main.…``), which means what Spark reads."""
+    import duckdb
+
+    from duckdb_pgwire_spark.server.compat import statement_tables
+
+    sql = (
+        "WITH orders AS (SELECT * FROM orders WHERE o_orderkey < 100)"
+        " SELECT sum(o_custkey) AS s FROM orders"
+    )
+    assert statement_tables(sql) == ["orders"]
+    (res,) = client.query(sql)
+    assert "error" not in res, res
+    (plain,) = client.query("SELECT sum(o_custkey) AS s FROM orders WHERE o_orderkey < 100")
+    assert res["oids"] == plain["oids"]
+    duck = sql.replace("FROM orders WHERE", "FROM main.orders WHERE")
+    assert res["rows"] == [[str(v) for v in oracle.execute(duck).fetchone()]]
+    # past LONG: only the widened sum gives the exact answer
+    spark.sql("DROP TABLE IF EXISTS shadow_sum_fx")
+    spark.createDataFrame([(9_000_000_000_000_000_000,)] * 4, "v long").write.option(
+        "path", str(tmp_path / "shadow_sum_fx")
+    ).saveAsTable("shadow_sum_fx")
+    sql = (
+        "WITH shadow_sum_fx AS (SELECT * FROM shadow_sum_fx WHERE v > 0)"
+        " SELECT SUM(v) AS s FROM shadow_sum_fx"
+    )
+    (res,) = client.query(sql)
+    assert "error" not in res, res
+    con = duckdb.connect()
+    con.execute("CREATE TABLE shadow_sum_fx AS SELECT 9000000000000000000 AS v FROM range(4)")
+    duck = sql.replace("FROM shadow_sum_fx WHERE", "FROM main.shadow_sum_fx WHERE")
+    assert res["rows"] == [[str(con.execute(duck).fetchone()[0])]]
+    spark.sql("DROP TABLE IF EXISTS shadow_sum_fx")
+
+
 def test_wire_copy_to_stdout_escapes_text(client):
     """COPY TO STDOUT's text format escapes backslash, tab, newline and
     carriage return as PostgreSQL does; \\N is NULL."""
@@ -6800,6 +6840,34 @@ def test_wire_copy_to_stdout_escapes_text(client):
         return "".join(out)
 
     assert [decode(f) for f in line[:-1].split("\t")] == ["a\tb", "x\ny", "c:\\d", None, "r\re"]
+
+
+def test_wire_copy_text_round_trip(client, spark, tmp_path):
+    """COPY TO STDOUT's text format loads back through COPY FROM STDIN
+    unchanged: backslash, tab, newline and carriage return survive, and
+    a backslash before another character stands for that character."""
+    spark.sql("DROP TABLE IF EXISTS copy_rt_txt")
+    (res,) = client.query(
+        f"CREATE TABLE copy_rt_txt(k int, s string) "
+        f"USING parquet LOCATION '{tmp_path}/copy_rt_txt'"
+    )
+    assert "error" not in res, res
+    values = ["a\tb", "x\ny", "c:\\d", "\\\\srv\\x", "r\re", "plain", "é\\𝔘"]
+    rows = ", ".join(f"({i}, '{v}')" for i, v in enumerate(values))
+    (res,) = client.query(f"INSERT INTO copy_rt_txt VALUES {rows}, (99, NULL)")
+    assert "error" not in res, res
+    (out,) = client.query("COPY (SELECT * FROM copy_rt_txt ORDER BY k) TO STDOUT")
+    (res,) = client.query("DELETE FROM copy_rt_txt")
+    assert "error" not in res, res
+    res = client.copy_in("COPY copy_rt_txt FROM STDIN", out["copy_out"])
+    assert res[-1].get("tag") == "COPY 8", res
+    (back,) = client.query("SELECT k, s FROM copy_rt_txt ORDER BY k")
+    assert back["rows"] == [[str(i), v] for i, v in enumerate(values)] + [["99", None]]
+    res = client.copy_in("COPY copy_rt_txt FROM STDIN", b"100\t\\q\\\\\\b\n")
+    assert res[-1].get("tag") == "COPY 1", res
+    (back,) = client.query("SELECT s FROM copy_rt_txt WHERE k = 100")
+    assert back["rows"] == [["q\\\b"]]
+    spark.sql("DROP TABLE IF EXISTS copy_rt_txt")
 
 
 def test_wire_streamed_copy_to_stdout_matches_query(client):
